@@ -30,6 +30,7 @@ final class AnnServe(spark: SparkSession, seed: Long, workDir: String) extends W
   private val K = 10
   /** An operation fails when its batch finds fewer of the exact top 10. */
   private val MinRecall = 0.9
+  val warmupOps = 6
 
   private val schema = StructType(Seq(StructField("vec_id", LongType, nullable = false),
     StructField("vec", ArrayType(FloatType, containsNull = false))))
@@ -37,12 +38,13 @@ final class AnnServe(spark: SparkSession, seed: Long, workDir: String) extends W
   private var corpus: DataFrame = _
   private var index: Similarity.IvfIndex = _
   private var queries: DataFrame = _
-  private var batches: IndexedSeq[(DataFrame, Seq[(Long, Array[Float])])] = _
+  private var batches: IndexedSeq[DataFrame] = _
   private var setups = 0
   private var batch = 0
   private val results = mutable.ArrayBuffer.empty[(Int, Array[Row])]
-  private val exact = mutable.Map.empty[Int, Map[Long, Set[Long]]]
+  private var exact: Map[Long, Set[Long]] = Map.empty
   private val recalls = mutable.ArrayBuffer.empty[Double]
+  private var scanned, scannedQueries = 0L
 
   private def queryId(batch: Int, q: Int): Long = 10000000L + batch * BatchSize + q
 
@@ -55,12 +57,22 @@ final class AnnServe(spark: SparkSession, seed: Long, workDir: String) extends W
     val centers = Array.fill(NClusters, Dim)(rng.nextGaussian().toFloat)
     def around(cl: Int): Array[Float] =
       Array.tabulate(Dim)(d => centers(cl)(d) + 0.35f * rng.nextGaussian().toFloat)
-    val ids = (0L until NVectors.toLong).toArray
-    (ids.length - 1 to 1 by -1).foreach { i =>
-      val j = rng.nextInt(i + 1); val t = ids(i); ids(i) = ids(j); ids(j) = t
+    // vector id i lies around cluster i mod NClusters: the clusters are
+    // equal in size, and the index's untrained centroids (the NList lowest
+    // ids) are one vector per cluster, so the lists each query probes hold
+    // the same number of vectors whatever the seed
+    val vecs = (0L until NVectors.toLong).map(id => (id, around((id % NClusters).toInt)))
+    // a query lies between two clusters, at least half-way towards the
+    // first, so its true neighbours can sit in two lists: a search that
+    // probes fewer lists loses recall
+    def between(): Array[Float] = {
+      val a = rng.nextInt(NClusters)
+      val b = (a + 1 + rng.nextInt(NClusters - 1)) % NClusters
+      val w = 0.5f + 0.5f * rng.nextDouble().toFloat
+      Array.tabulate(Dim)(d => w * centers(a)(d) + (1 - w) * centers(b)(d) +
+        0.35f * rng.nextGaussian().toFloat)
     }
-    val vecs = ids.toSeq.map(id => (id, around(rng.nextInt(NClusters))))
-    val qs = (0 until NBatches).map(_ => (0 until BatchSize).map(_ => around(rng.nextInt(NClusters))))
+    val qs = (0 until NBatches).map(_ => (0 until BatchSize).map(_ => between()))
     if (queries != null) queries.unpersist(true)
     queries = spark.createDataFrame(spark.sparkContext.parallelize(
       qs.zipWithIndex.flatMap { case (b, i) => b.zipWithIndex.map { case (v, q) =>
@@ -68,10 +80,7 @@ final class AnnServe(spark: SparkSession, seed: Long, workDir: String) extends W
       StructType(schema.fields :+ StructField("batch", IntegerType)))
       .persist(StorageLevel.MEMORY_ONLY)
     queries.count()
-    batches = qs.zipWithIndex.map { case (b, i) =>
-      (queries.filter(col("batch") === i).select("vec_id", "vec"),
-        b.zipWithIndex.map { case (v, q) => (queryId(i, q), v) })
-    }
+    batches = qs.indices.map(i => queries.filter(col("batch") === i).select("vec_id", "vec"))
     if (corpus != null) corpus.unpersist(true)
     corpus = frame(vecs).persist(StorageLevel.MEMORY_ONLY)
     if (setups > 0) Common.deleteRecursively(new File(s"$workDir/ivf-$setups"))
@@ -79,14 +88,14 @@ final class AnnServe(spark: SparkSession, seed: Long, workDir: String) extends W
     val path = s"$workDir/ivf-$setups"
     Similarity.saveIvf(corpus, "vec_id", "vec", path, nlist = NList, trainIters = TrainIters)
     index = Similarity.loadIvf(spark, path)
-    exact.clear()
+    exact = Map.empty
   }
 
   def reset(): Unit = results.clear()
 
   override def prepare(i: Int): Unit = batch = i % NBatches
 
-  def input: DataFrame = batches(batch)._1
+  def input: DataFrame = batches(batch)
 
   def steps: Seq[(String, DataFrame => DataFrame)] = Seq(
     "Similarity.ivfTopKIndexed" -> (q => Similarity.ivfTopKIndexed(index, q, K, "vec_id", "vec")))
@@ -94,13 +103,22 @@ final class AnnServe(spark: SparkSession, seed: Long, workDir: String) extends W
   def op(i: Int, tr: Tracer): Long = {
     val top = Chain.run(this, tr)
     results += ((batch, tr.span("collect")(top.collect())))
+    if (tr.on) {
+      scanned += PlanMetrics.joinOutputRows(top.queryExecution.executedPlan, "cent_id")
+      scannedQueries += BatchSize
+    }
     BatchSize.toLong
   }
 
-  private def exactTop(b: Int): Map[Long, Set[Long]] = exact.getOrElseUpdate(b,
-    Similarity.bruteForceTopK(corpus, batches(b)._1, K, "vec_id", "vec").collect()
-      .groupBy(_.getAs[Long]("query_id"))
-      .map { case (q, rs) => q -> rs.map(_.getAs[Long]("vec_id")).toSet })
+  /** The exact top k of batch `b`; brute force runs once, over every
+    * query of every batch. */
+  private def exactTop(b: Int): Map[Long, Set[Long]] = {
+    if (exact.isEmpty)
+      exact = Similarity.bruteForceTopK(corpus, queries.select("vec_id", "vec"), K, "vec_id", "vec")
+        .collect().groupBy(_.getAs[Long]("query_id"))
+        .map { case (q, rs) => q -> rs.map(_.getAs[Long]("vec_id")).toSet }
+    (0 until BatchSize).map(q => queryId(b, q) -> exact.getOrElse(queryId(b, q), Set.empty[Long])).toMap
+  }
 
   /** Each query must return k rows, and each batch must reach `MinRecall`
     * against brute force. */
@@ -115,29 +133,12 @@ final class AnnServe(spark: SparkSession, seed: Long, workDir: String) extends W
     !complete || recall < MinRecall
   }
 
-  /** Share of corpus vectors scored per query: the lists each query probes
-    * (its `nprobe` nearest centroids by cosine), summed over the batch and
-    * divided by batch size times corpus size. */
-  override def layerRatios(): Map[String, Double] = {
-    val cents = index.centroids.collect().map(r =>
-      (r.getAs[Any]("cent_id").toString.toLong,
-        r.getSeq[Any](r.fieldIndex("cent_vec")).map(_.toString.toDouble).toArray))
-    val sizes = index.assignments.groupBy("cent_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nprobe = Similarity.nprobeForRecall(cents.length)
-    def cos(a: Array[Double], b: Array[Float]): Double = {
-      var dot, na, nb = 0.0
-      a.indices.foreach { d => dot += a(d) * b(d); na += a(d) * a(d); nb += b(d).toDouble * b(d) }
-      dot / math.sqrt(na * nb)
-    }
-    val used = results.map(_._1).distinct
-    val scored = used.flatMap(b => batches(b)._2).map { case (_, q) =>
-      cents.map { case (id, v) => (-cos(v, q), id) }.sorted.take(nprobe)
-        .map { case (_, id) => sizes.getOrElse(id, 0L) }.sum
-    }
+  /** Share of corpus vectors scored per query in the traced operations:
+    * the rows the search's `cent_id` join emitted (one per query and
+    * candidate vector), divided by queries times corpus size. */
+  override def layerRatios(): Map[String, Double] =
     Map("Similarity.scan_share" ->
-      (if (scored.isEmpty) 0.0 else scored.sum.toDouble / (scored.size.toDouble * NVectors)))
-  }
+      (if (scannedQueries == 0) 0.0 else scanned.toDouble / (scannedQueries.toDouble * NVectors)))
 
   override def qualityRatios(): Map[String, Double] =
     Map("Similarity.recall_at_10" -> (if (recalls.isEmpty) 0.0 else recalls.sum / recalls.size))

@@ -3,6 +3,9 @@ package perfbench
 import java.io.File
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -16,7 +19,10 @@ trait Workload {
   /** Returns mutable state (tables written by operations) to how `setup`
     * left it, and forgets the outputs recorded for `check`. */
   def reset(): Unit
-  /** Untimed preparation of operation `i` (e.g. generating its delta). */
+  /** Operations run untimed in set-up before the timed phase: enough
+    * that operation times have stopped falling. */
+  def warmupOps: Int
+  /** Untimed preparation of operation `i` (e.g. choosing its query batch). */
   def prepare(i: Int): Unit = ()
   /** The frame the operation's chain starts from. */
   def input: DataFrame
@@ -25,7 +31,7 @@ trait Workload {
   /** Unpersists whatever the steps persisted. */
   def release(): Unit = ()
   /** One operation; spans go through `tr`. Returns the input units it
-    * completed (leaf rows, documents, delta rows or queries). */
+    * completed (leaf rows, documents or queries). */
   def op(i: Int, tr: Tracer): Long
   /** Checks every operation since the last `reset`; returns the number of
     * operations whose output was wrong. */
@@ -87,4 +93,15 @@ object Common {
   def dirBytes(f: File): Long =
     if (f.isFile) f.length()
     else Option(f.listFiles()).toSeq.flatten.map(dirBytes).sum
+}
+
+/** SQL metrics read from an executed physical plan. */
+object PlanMetrics extends AdaptiveSparkPlanHelper {
+  /** Rows emitted by the equi-joins on `key`, summed over the final plan
+    * (through adaptive query stages). */
+  def joinOutputRows(plan: SparkPlan, key: String): Long =
+    collect(plan) {
+      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == key)) =>
+        j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
+    }.sum
 }

@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 import graft._
 import perfbench.Common.c
 
-/** The customer → order → lineitem hierarchy both Packer workloads use.
+/** The customer → order → lineitem hierarchy hier_reshape packs.
   * Lines are ordered by `l_id` inside their order, so a packed table has one
   * canonical form however its flat rows were ordered. */
 object Orders {
@@ -61,6 +61,7 @@ final class HierReshape(spark: SparkSession, seed: Long) extends Workload {
   private val NOrders = 40000L
   private val NCustomers = 8000L
   private val packer = new Packer(Orders.spec)
+  val warmupOps = 5
   private var flat: DataFrame = _
   private var leafRows = 0L
   private var expected: (Long, Long, Long) = _

@@ -28,8 +28,6 @@ object Main {
   private val SetupReps = 3
   private val TracedOps = 2
   private val FloorProbes = 2
-  private val WarmupMaxS = 12.0
-  private val Converged = 0.9
 
   private def now(): Long = System.nanoTime()
   private def secs(ns: Long): Double = ns / 1e9
@@ -116,7 +114,6 @@ object Main {
     val w: Workload = name match {
       case "hier_reshape" => new HierReshape(spark, seed)
       case "corpus_curate" => new CorpusCurate(spark, seed, dataDir)
-      case "packed_upsert" => new PackedUpsert(spark, seed, dataDir)
       case "ann_serve" => new AnnServe(spark, seed, dataDir)
       case other => throw new IllegalArgumentException(s"unknown workload '$other'")
     }
@@ -124,18 +121,14 @@ object Main {
     val code =
       try {
         // set-up = session start, the median of several input builds, and
-        // warm-up operations that pay JIT and codegen warm-up. Operation
-        // times keep falling for several operations after the first, so
-        // warm-up goes on until one is no faster than Converged times the
-        // one before it, or WarmupMaxS has passed.
+        // the workload's fixed number of warm-up operations, which pay JIT
+        // and codegen warm-up (the first operation runs 2-5x slower)
         val setupReps = (1 to SetupReps).map(_ => timed(w.setup()))
         val warm = mutable.ArrayBuffer.empty[Double]
-        def converged: Boolean = warm.size >= 2 && warm.last >= Converged * warm(warm.size - 2)
         val warmS = timed {
-          val start = now()
-          while (warm.isEmpty || (!converged && secs(now() - start) < WarmupMaxS)) {
-            w.prepare(warm.size)
-            warm += timed(w.op(warm.size, off))
+          (0 until w.warmupOps).foreach { i =>
+            w.prepare(i)
+            warm += timed(w.op(i, off))
           }
           w.reset()
         }

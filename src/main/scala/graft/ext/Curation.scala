@@ -32,25 +32,6 @@ object Curation {
 
   // ------------------------------------------------ repetition filters
 
-  /** Fraction of duplicated whitespace tokens: `1 - distinct/total`
-    * (0 for empty docs). The Gopher-style "repetition" pre-filter
-    * (Rae et al. 2021, arXiv:2112.11446 Table A1) reduced to its
-    * deterministic, SQL-expressible core. */
-  def dupTokenFraction(text: Column): Column = {
-    val toks = TextAnalysis.tokens(TextAnalysis.normalized(text))
-    when(text.isNull || size(toks) === 0, 0.0).otherwise(
-      lit(1.0) - size(array_distinct(toks)).cast("double") / size(toks))
-  }
-
-  /** Fraction of duplicated word n-grams: `1 - distinct/total` over ALL
-    * n-grams (order-preserving, duplicates counted). High values flag
-    * boilerplate / machine-generated repetition. */
-  def dupNgramFraction(text: Column, n: Int): Column = {
-    val grams = TextAnalysis.ngramsAll(text, n)
-    when(text.isNull || size(grams) === 0, 0.0).otherwise(
-      lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams))
-  }
-
   /** `1 - distinct/total` over a precomputed gram/token array (0 for
     * null/empty) — the shared kernel behind the fraction columns.
     * Let-bound ([[graft.ColExprs.once]]): the n-gram build passed in is a

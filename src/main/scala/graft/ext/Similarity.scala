@@ -1,8 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /**
  * Similarity search over an embedding column (Array[Float]).
@@ -370,44 +370,96 @@ object Similarity {
               idCol: String, vecCol: String,
               nlist: Int = 16, nprobe: Int = 0, trainIters: Int = 0,
               trainSampleMult: Int = 0): DataFrame = {
-    require(nprobe >= 0, s"ivfTopK: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe else nprobeForRecall(nlist)
+    val np = probeWidth("ivfTopK", nprobe, nlist)
     val sp = corpus.sparkSession
-    val cents = trainCentroids(corpus, idCol, vecCol, nlist, trainIters,
-      trainSampleMult)
+    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
+      trainIters, trainSampleMult))
     // one-pass assignment: nearest centroid per corpus vector (max_by agg)
-    val assigned = nearestCentroid(sp, corpus, idCol, vecCol, cents)
+    val assigned = nearestCentroid(sp, corpus, idCol, vecCol, cents.table(sp))
       .select(col(idCol).alias("vec_id"), col(vecCol).alias("__cv"),
         fastL2(sp, col(vecCol)).alias("__cn"), col("cent_id"))
     probeRank(sp, cents, assigned, queries, k, idCol, vecCol, np)
   }
 
-  /** Probe-and-rank core shared by [[ivfTopK]] and [[ivfTopKIndexed]]:
-    * `assigned` is the inverted file as (vec_id, __cv, __cn, cent_id). */
-  private def probeRank(sp: org.apache.spark.sql.SparkSession, cents: DataFrame,
-                        assigned: DataFrame, queries: DataFrame, k: Int,
-                        idCol: String, vecCol: String, nprobe: Int): DataFrame = {
-    // queries probe their nprobe nearest centroids. A window is fine HERE:
-    // each group is exactly nlist rows (bounded small), so no task ever
-    // sorts more than nlist candidates — unlike the final ranking below.
-    val probes = queries.crossJoin(broadcast(cents))
-      .select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"),
-        col("cent_id"), fastCosine(sp, col(vecCol), col("cent_vec")).alias("__sim"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col("cent_id").asc)))
-      .filter(col("__rk") <= nprobe)
-      .select(col("query_id"), col("__qv"), fastL2(sp, col("__qv")).alias("__qn"), col("cent_id"))
-    // exact ranking inside the probed lists only; the probe side is
+  /** The centroid table of an IVF search: its nlist (cent_id, cent_vec)
+    * rows, collected once to the driver — the same driver bound as a
+    * [[PqCodebook]]. cent_id is a long; cent_vec keeps its own element
+    * type (float for seed centroids, double once trained), so probes
+    * score exactly what the distributed table would. */
+  final case class IvfCentroids(rows: IndexedSeq[Row], schema: StructType) {
+    def nlist: Int = rows.length
+    /** The rows as a local relation, for the build-side assignment. */
+    private[ext] def table(sp: org.apache.spark.sql.SparkSession): DataFrame =
+      sp.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  private def collectCentroids(cents: DataFrame): IvfCentroids = {
+    val table = cents.select(col("cent_id").cast("long"), col("cent_vec"))
+    IvfCentroids(table.collect().toIndexedSeq, table.schema)
+  }
+
+  /** The probe width of every IVF entry point: `nprobe`, or
+    * [[nprobeForRecall]] over `nlist` when it is 0 (derive). */
+  private def probeWidth(op: String, nprobe: Int, nlist: Int): Int = {
+    require(nprobe >= 0, s"$op: nprobe must be >= 0 (0 = derive), got $nprobe")
+    if (nprobe > 0) nprobe else nprobeForRecall(math.max(1, nlist))
+  }
+
+  /** Candidate generation of every IVF search: (query_id, __qv, __probes)
+    * per query, `__probes` the distinct cent_ids of its `nprobe` nearest
+    * lists — cosine DESC with nulls last, then cent_id ASC (a zero-norm
+    * query probes the lowest ids). Distinct, so a corpus whose repeated id
+    * seeds two centroids under one cent_id still probes each list once.
+    * A narrow projection, no shuffle: the centroid list ships to the
+    * executors once per query as a one-row broadcast relation. */
+  private def probeLists(sp: org.apache.spark.sql.SparkSession, cents: IvfCentroids,
+                         queries: DataFrame, idCol: String, vecCol: String,
+                         nprobe: Int): DataFrame = {
+    val list = sp.createDataFrame(java.util.Arrays.asList(Row(cents.rows)),
+      StructType(Seq(StructField("__cents", ArrayType(cents.schema)))))
+    // descending (sim, -cent_id): null sims last, ties to the lower id
+    val nearest = sort_array(transform(col("__cents"), c => struct(
+      fastCosine(sp, col("__qv"), c.getField("cent_vec")).alias("sim"),
+      (-c.getField("cent_id")).alias("neg_id"))), asc = false)
+    queries.select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"))
+      .crossJoin(broadcast(list))
+      .select(col("query_id"), col("__qv"), array_distinct(transform(
+        slice(nearest, 1, nprobe), p => -p.getField("neg_id"))).alias("__probes"))
+  }
+
+  /** Probe-and-rank core of every IVF search. `inverted` is the inverted
+    * file (vec_id, __cv, __cn, cent_id), or with a `codebook` the coded
+    * one (vec_id, __codes, __cn, cent_id), scored by ADC against each
+    * query's [[pqLuts]] so the probed scan reads codes only. */
+  private def probeRank(sp: org.apache.spark.sql.SparkSession, cents: IvfCentroids,
+                        inverted: DataFrame, queries: DataFrame, k: Int,
+                        idCol: String, vecCol: String, nprobe: Int,
+                        codebook: Option[PqCodebook] = None): DataFrame = {
+    // what a probe row carries for its query; the candidate dot against it
+    val (payload, dot): (Column => Column, Column => Column) = codebook match {
+      case Some(cb) => (pqLuts(cb, _), pqAdcDot(col("__codes"), _))
+      case None => (identity, fastDot(sp, _, col("__cv")))
+    }
+    // payload and norm once per query (this projection sits below the
+    // explode), then one row per probed list. The probe side is
     // |Q| x nprobe rows (queries are the small side by contract, as in
-    // bruteForceTopK) — broadcast it so the corpus side never shuffles,
-    // and a cent_id-partitioned on-disk index scan prunes to the probed
-    // lists via dynamic partition pruning
-    val scored = assigned.join(broadcast(probes), Seq("cent_id"))
+    // bruteForceTopK): broadcast, so the inverted file never shuffles
+    val probes = probeLists(sp, cents, queries, idCol, vecCol, nprobe)
+      .select(col("query_id"), payload(col("__qv")).alias("__q"),
+        fastL2(sp, col("__qv")).alias("__qn"), col("__probes"))
+      // explode_outer: a plain explode gets an inferred size(__probes) > 0
+      // filter that is pushed into the crossJoin, ranking every query twice
+      .select(col("query_id"), col("__q"), col("__qn"),
+        explode_outer(col("__probes")).alias("cent_id"))
+    // a cent_id-partitioned index scan reads every list unless Spark
+    // plans dynamic partition pruning from this broadcast (see saveIvf).
+    // A vec_id sits in one list and a (query, list) pair is single, so no
+    // pair repeats and the partial top-k runs straight on the join output
+    val scored = inverted.join(broadcast(probes), Seq("cent_id"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        round(try_divide(fastDot(sp, col("__qv"), col("__cv")), col("__qn") * col("__cn")), 6)
+        round(try_divide(dot(col("__q")), col("__qn") * col("__cn")), 6)
           .alias("cosine"))
-      .groupBy(col("query_id"), col("vec_id")).agg(max(col("cosine")).alias("cosine"))
     topKRank(scored, k)
   }
 
@@ -438,17 +490,15 @@ object Similarity {
                       idCol: String, vecCol: String, predicate: Column,
                       nlist: Int = 16, nprobe: Int = 0, trainIters: Int = 0,
                       trainSampleMult: Int = 0): DataFrame = {
-    require(nprobe >= 0,
-      s"ivfTopKFiltered: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe else nprobeForRecall(nlist)
+    val np = probeWidth("ivfTopKFiltered", nprobe, nlist)
     val sp = corpus.sparkSession
-    val cents = trainCentroids(corpus, idCol, vecCol, nlist, trainIters,
-      trainSampleMult)
+    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
+      trainIters, trainSampleMult))
     // per-row assignment commutes with the row filter — assigning only
     // eligible rows is identical to assigning all and filtering, minus
     // the wasted work
     val assigned = nearestCentroid(sp, corpus.filter(predicate), idCol,
-        vecCol, cents)
+        vecCol, cents.table(sp))
       .select(col(idCol).alias("vec_id"), col(vecCol).alias("__cv"),
         fastL2(sp, col(vecCol)).alias("__cn"), col("cent_id"))
     probeRank(sp, cents, assigned, queries, k, idCol, vecCol, np)
@@ -470,38 +520,53 @@ object Similarity {
     require(dups.isEmpty, s"metaCols repeated: ${dups.mkString(", ")}")
   }
 
-  /** A persisted IVF-flat index: `centroids` = (cent_id, cent_vec);
-    * `assignments` = the inverted file (vec_id, vec, norm, cent_id,
-    * plus any `metaCols` passed to [[saveIvf]]), cent_id-partitioned on
-    * disk so probing prunes to nprobe lists. */
-  final case class IvfIndex(centroids: DataFrame, assignments: DataFrame)
+  /** A persisted IVF-flat index: `centroids` = the (cent_id, cent_vec)
+    * table, held on the driver since load; `assignments` = the inverted
+    * file (vec_id, vec, norm, cent_id, plus any `metaCols` passed to
+    * [[saveIvf]]), cent_id-partitioned on disk. */
+  final case class IvfIndex(centroids: IvfCentroids, assignments: DataFrame)
 
   /**
    * Build an IVF index once and persist it to `path` as two parquet
    * datasets — `$path/centroids` and `$path/assignments` (the latter
    * written `partitionBy("cent_id")`). A production retrieval loop
    * trains/assigns once here, then serves queries via [[loadIvf]] +
-   * [[ivfTopKIndexed]] without re-reading the corpus: each query's
-   * probed lists map to cent_id partition directories, so the serving
-   * scan reads ~nprobe/nlist of the index, not all of it. The stored
+   * [[ivfTopKIndexed]] without re-reading the corpus. Each list is a
+   * cent_id partition directory, but serving reads them all unless
+   * Spark plans dynamic partition pruning on cent_id, which it does
+   * only when the query frame carries a selective filter; the scan then
+   * reads the union of the batch's probed lists. Either way the probe
+   * join scores only the probed lists' rows. The stored
    * `norm` is the same double [[fastL2]] the in-memory path computes
    * (parquet round-trips doubles exactly), so indexed results are
-   * bit-identical to [[ivfTopK]] with the same centroids.
+   * bit-identical to [[ivfTopK]] with the same centroids. `metaCols`
+   * rejoin on the id, so a corpus id that repeats keeps one inverted-file
+   * row per corpus row, and a search can then return that id twice.
    */
   def saveIvf(corpus: DataFrame, idCol: String, vecCol: String, path: String,
               nlist: Int = 16, trainIters: Int = 0,
               metaCols: Seq[String] = Nil): Unit = {
-    requireMetaCols(metaCols, idCol, Seq("vec_id", "vec", "norm", "cent_id"))
     val sp = corpus.sparkSession
+    writeIvf(corpus, idCol, vecCol, path, nlist, trainIters, metaCols,
+      Seq("vec" -> col(vecCol), "norm" -> fastL2(sp, col(vecCol))))
+  }
+
+  /** The build of every saved IVF index: train, write `$path/centroids`,
+    * assign, and write the cent_id-partitioned inverted file
+    * `$path/assignments` = (vec_id, `payload`, cent_id, `metaCols`).
+    * metaCols ride along so serving-time predicates
+    * ([[ivfTopKIndexedFiltered]]) push down to the index scan; the
+    * aggregate in nearestCentroid drops non-key columns, so they rejoin
+    * on the id spine (one equi-join at BUILD time, never at serve time). */
+  private def writeIvf(corpus: DataFrame, idCol: String, vecCol: String,
+                       path: String, nlist: Int, trainIters: Int,
+                       metaCols: Seq[String], payload: Seq[(String, Column)]): Unit = {
+    requireMetaCols(metaCols, idCol, ("vec_id" +: payload.map(_._1)) :+ "cent_id")
     val cents = trainCentroids(corpus, idCol, vecCol, nlist, trainIters)
     cents.write.mode("overwrite").parquet(s"$path/centroids")
-    val assigned = nearestCentroid(sp, corpus, idCol, vecCol, cents)
-      .select(col(idCol).alias("vec_id"), col(vecCol).alias("vec"),
-        fastL2(sp, col(vecCol)).alias("norm"), col("cent_id").cast("long"))
-    // metaCols ride along in the inverted file so serving-time predicates
-    // ([[ivfTopKIndexedFiltered]]) push down to the index scan; the
-    // aggregate in nearestCentroid drops non-key columns, so they rejoin
-    // on the id spine (one equi-join at BUILD time, never at serve time)
+    val assigned = nearestCentroid(corpus.sparkSession, corpus, idCol, vecCol, cents)
+      .select((col(idCol).alias("vec_id") +: payload.map { case (n, c) => c.alias(n) }) :+
+        col("cent_id").cast("long"): _*)
     val withMeta =
       if (metaCols.isEmpty) assigned
       else assigned.join(
@@ -511,23 +576,21 @@ object Similarity {
       .parquet(s"$path/assignments")
   }
 
-  /** Load an index written by [[saveIvf]]. cent_id is re-cast to long:
-    * partition-column type inference narrows small values to int. */
-  def loadIvf(sp: org.apache.spark.sql.SparkSession, path: String): IvfIndex = IvfIndex(
-    sp.read.parquet(s"$path/centroids"),
-    sp.read.parquet(s"$path/assignments")
-      .withColumn("cent_id", col("cent_id").cast("long")))
+  /** Load an index written by [[saveIvf]]: one job collects the centroid
+    * table, so serving runs none before its action. cent_id is re-cast to
+    * long: partition-column type inference narrows small values to int. */
+  def loadIvf(sp: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
+    IvfIndex(collectCentroids(sp.read.parquet(s"$path/centroids")),
+      sp.read.parquet(s"$path/assignments")
+        .withColumn("cent_id", col("cent_id").cast("long")))
 
   /** [[ivfTopK]] served from a persisted index — no corpus scan, no
     * training; same null-candidate and tiebreak contract. `nprobe = 0`
-    * derives from [[nprobeForRecall]] over the index's own centroid count
-    * (a bounded driver-side count of the tiny centroid table). */
+    * derives from [[nprobeForRecall]] over the index's nlist, the length
+    * of its held centroid table: building the plan runs no Spark job. */
   def ivfTopKIndexed(index: IvfIndex, queries: DataFrame, k: Int,
                      idCol: String, vecCol: String, nprobe: Int = 0): DataFrame = {
-    require(nprobe >= 0,
-      s"ivfTopKIndexed: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe
-             else nprobeForRecall(math.max(1, index.centroids.count().toInt))
+    val np = probeWidth("ivfTopKIndexed", nprobe, index.centroids.nlist)
     val sp = queries.sparkSession
     val assigned = index.assignments.select(col("vec_id"),
       col("vec").alias("__cv"), col("norm").alias("__cn"), col("cent_id"))
@@ -540,16 +603,12 @@ object Similarity {
     * join, i.e. on the parquet scan itself — Catalyst pushes it into the
     * reader (`PushedFilters` on the index scan, locked by spec), so a
     * selective serving filter reads row groups, not the whole inverted
-    * file, and the cent_id partition pruning from probing composes with
-    * it. Post-filtering a top-k would be wrong AND slow; this is
+    * file. Post-filtering a top-k would be wrong AND slow; this is
     * filter-during-search. */
   def ivfTopKIndexedFiltered(index: IvfIndex, queries: DataFrame, k: Int,
                              idCol: String, vecCol: String,
                              predicate: Column, nprobe: Int = 0): DataFrame = {
-    require(nprobe >= 0,
-      s"ivfTopKIndexedFiltered: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe
-             else nprobeForRecall(math.max(1, index.centroids.count().toInt))
+    val np = probeWidth("ivfTopKIndexedFiltered", nprobe, index.centroids.nlist)
     val sp = queries.sparkSession
     val assigned = index.assignments.filter(predicate).select(col("vec_id"),
       col("vec").alias("__cv"), col("norm").alias("__cn"), col("cent_id"))
@@ -563,8 +622,8 @@ object Similarity {
    * `IVF<n>,SQ8` tier, and the storage shape a 100 TB serving index
    * actually wants: each probed list holds 16 + dim BYTES per vector
    * (~4× less to read/cache/shuffle than float32) and probing still
-   * prunes the scan to ~nprobe/nlist of the corpus, so the two
-   * compressions multiply. Training and centroid assignment run on the
+   * cuts scoring to ~nprobe/nlist of the corpus, so the two savings
+   * multiply. Training and centroid assignment run on the
    * FULL-PRECISION vectors (assignment fidelity costs nothing extra —
    * the corpus is being scanned to encode anyway); scoring is the same
    * asymmetric search as [[sq8TopK]]: full-precision queries against
@@ -582,12 +641,11 @@ object Similarity {
                  idCol: String, vecCol: String,
                  nlist: Int = 16, nprobe: Int = 0, trainIters: Int = 0,
                  trainSampleMult: Int = 0): DataFrame = {
-    require(nprobe >= 0, s"ivfTopKSq8: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe else nprobeForRecall(nlist)
+    val np = probeWidth("ivfTopKSq8", nprobe, nlist)
     val sp = corpus.sparkSession
-    val cents = trainCentroids(corpus, idCol, vecCol, nlist, trainIters,
-      trainSampleMult)
-    val inverted = nearestCentroid(sp, corpus, idCol, vecCol, cents)
+    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
+      trainIters, trainSampleMult))
+    val inverted = nearestCentroid(sp, corpus, idCol, vecCol, cents.table(sp))
       .select(col(idCol).alias("vec_id"),
         graft.functions.Sq8.encode(sp, graft.ColName.topCol(vecCol)).alias("sq8"),
         col("cent_id"))
@@ -608,40 +666,23 @@ object Similarity {
 
   /** Persist an IVF-SQ8 index: `$path/centroids` plus the COMPRESSED
     * inverted file `$path/assignments` = (vec_id, sq8 binary, cent_id),
-    * cent_id-partitioned — the serving scan reads ~nprobe/nlist of a
-    * ~4×-smaller index (parquet round-trips the blob bytes exactly, so
+    * cent_id-partitioned like [[saveIvf]]'s — a ~4×-smaller index to
+    * scan (parquet round-trips the blob bytes exactly, so
     * served rankings are bit-identical to [[ivfTopKSq8]] with the same
     * centroids). */
   def saveIvfSq8(corpus: DataFrame, idCol: String, vecCol: String, path: String,
                  nlist: Int = 16, trainIters: Int = 0,
                  metaCols: Seq[String] = Nil): Unit = {
-    requireMetaCols(metaCols, idCol, Seq("vec_id", "sq8", "cent_id"))
     val sp = corpus.sparkSession
-    val cents = trainCentroids(corpus, idCol, vecCol, nlist, trainIters)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    val assigned = nearestCentroid(sp, corpus, idCol, vecCol, cents)
-      .select(col(idCol).alias("vec_id"),
-        graft.functions.Sq8.encode(sp, graft.ColName.topCol(vecCol)).alias("sq8"),
-        col("cent_id").cast("long"))
-    // serving-time predicate columns ride in the compressed inverted file
-    // (same build-time rejoin as [[saveIvf]])
-    val withMeta =
-      if (metaCols.isEmpty) assigned
-      else assigned.join(
-        corpus.select((col(idCol).alias("vec_id") +: metaCols.map(c =>
-          graft.ColName.topCol(c))): _*), Seq("vec_id"))
-    withMeta.write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$path/assignments")
+    writeIvf(corpus, idCol, vecCol, path, nlist, trainIters, metaCols,
+      Seq("sq8" -> graft.functions.Sq8.encode(sp, graft.ColName.topCol(vecCol))))
   }
 
-  /** Load an index written by [[saveIvfSq8]] (same int-narrowing re-cast
-    * as [[loadIvf]]). The assignments frame is the compressed inverted
-    * file; [[ivfTopKSq8Indexed]] decodes at probe time. */
+  /** Load an index written by [[saveIvfSq8]] (the [[loadIvf]] layout).
+    * The assignments frame is the compressed inverted file;
+    * [[ivfTopKSq8Indexed]] decodes at probe time. */
   def loadIvfSq8(sp: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
-    IvfIndex(
-      sp.read.parquet(s"$path/centroids"),
-      sp.read.parquet(s"$path/assignments")
-        .withColumn("cent_id", col("cent_id").cast("long")))
+    loadIvf(sp, path)
 
   /** [[ivfTopKSq8]] served from a persisted compressed index — no corpus
     * scan, no training, no re-encode; `nprobe = 0` derives like
@@ -649,10 +690,7 @@ object Similarity {
   def ivfTopKSq8Indexed(index: IvfIndex, queries: DataFrame, k: Int,
                         idCol: String, vecCol: String,
                         nprobe: Int = 0): DataFrame = {
-    require(nprobe >= 0,
-      s"ivfTopKSq8Indexed: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe
-             else nprobeForRecall(math.max(1, index.centroids.count().toInt))
+    val np = probeWidth("ivfTopKSq8Indexed", nprobe, index.centroids.nlist)
     val sp = queries.sparkSession
     probeRank(sp, index.centroids, decodedAssignments(sp, index.assignments),
       queries, k, idCol, vecCol, np)
@@ -669,10 +707,8 @@ object Similarity {
   def ivfTopKSq8IndexedFiltered(index: IvfIndex, queries: DataFrame, k: Int,
                                 idCol: String, vecCol: String,
                                 predicate: Column, nprobe: Int = 0): DataFrame = {
-    require(nprobe >= 0,
-      s"ivfTopKSq8IndexedFiltered: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe
-             else nprobeForRecall(math.max(1, index.centroids.count().toInt))
+    val np = probeWidth("ivfTopKSq8IndexedFiltered", nprobe,
+      index.centroids.nlist)
     val sp = queries.sparkSession
     probeRank(sp, index.centroids,
       decodedAssignments(sp, index.assignments.filter(predicate)),
@@ -830,7 +866,7 @@ object Similarity {
     * [[ivfTopKPq]] construct scores IDENTICALLY (same per-subspace
     * association order, bit-equal doubles) — the q_knn_ivf_pq exactness
     * gate pins their equality. */
-  private def pqLuts(cb: PqCodebook, vec: Column): Column =
+  private[ext] def pqLuts(cb: PqCodebook, vec: Column): Column =
     array((0 until cb.m).map { s =>
       val qsub = slice(vec, s * cb.dsub + 1, cb.dsub)
       val cents = array(cb.book(s).toIndexedSeq.map(c =>
@@ -842,7 +878,7 @@ object Similarity {
 
   /** The ADC dot product `Σ_s lut[s][codes[s]]` — m lookups + m adds in
     * subspace order (matches the DuckDB oracle's per-subspace sum). */
-  private def pqAdcDot(codes: Column, lut: Column): Column =
+  private[ext] def pqAdcDot(codes: Column, lut: Column): Column =
     aggregate(
       zip_with(codes, lut, (c, l) => element_at(l, c + 1)),
       lit(0.0), (x, y) => x + y)
@@ -888,11 +924,10 @@ object Similarity {
    * `by_residual = false`), the densest index shape of the family: each
    * probed list row is m small codes + one norm double (m=16 over
    * dim=64 floats ≈ 10× less to read/cache than float32), and probing
-   * still prunes the scan to ~nprobe/nlist of the corpus — at 100 TB of
-   * raw vectors the serving scan touches tens of GB. Coarse centroids
+   * still cuts scoring to ~nprobe/nlist of the corpus. Coarse centroids
    * AND code assignment both run on the full-precision vectors in the
    * same build pass; queries score candidates with the per-subspace
-   * LUTs of [[pqTopK]] (built once per probe row, broadcast), so the
+   * LUTs of [[pqTopK]] (built once per query, broadcast), so the
    * probed scan does m array lookups + m adds per candidate and never
    * touches a float vector.
    *
@@ -909,50 +944,23 @@ object Similarity {
                 m: Int = 8, ksub: Int = 16, nlist: Int = 16,
                 nprobe: Int = 0, trainIters: Int = 0, pqIters: Int = 0,
                 trainSampleMult: Int = 0): DataFrame = {
-    require(nprobe >= 0, s"ivfTopKPq: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe else nprobeForRecall(nlist)
+    val np = probeWidth("ivfTopKPq", nprobe, nlist)
     val sp = corpus.sparkSession
-    val cents = trainCentroids(corpus, idCol, vecCol, nlist, trainIters,
-      trainSampleMult)
+    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
+      trainIters, trainSampleMult))
     val cb = pqTrain(corpus, idCol, vecCol, dim, m, ksub, pqIters)
-    val inverted = nearestCentroid(sp, corpus, idCol, vecCol, cents)
+    val inverted = nearestCentroid(sp, corpus, idCol, vecCol, cents.table(sp))
       .select(col(idCol).alias("vec_id"),
         pqCodes(sp, col(vecCol), cb).alias("__codes"),
         fastL2(sp, col(vecCol)).alias("__cn"), col("cent_id"))
-    pqProbeRank(sp, cents, inverted, queries, k, idCol, vecCol, np, cb)
+    probeRank(sp, cents, inverted, queries, k, idCol, vecCol, np, Some(cb))
   }
 
-  /** [[probeRank]]'s shape with ADC scoring: `inverted` is the coded
-    * inverted file (vec_id, __codes, __cn, cent_id); the probe side
-    * carries each query's LUTs instead of its vector, so the probed
-    * scan reads codes only. Probe-side size is |Q| × nprobe × (m × ksub
-    * doubles) — queries are the small side by contract, like
-    * [[bruteForceTopK]]'s broadcast. */
-  private def pqProbeRank(sp: org.apache.spark.sql.SparkSession, cents: DataFrame,
-                          inverted: DataFrame, queries: DataFrame, k: Int,
-                          idCol: String, vecCol: String, nprobe: Int,
-                          cb: PqCodebook): DataFrame = {
-    val probes = queries.crossJoin(broadcast(cents))
-      .select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"),
-        col("cent_id"), fastCosine(sp, col(vecCol), col("cent_vec")).alias("__sim"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col("cent_id").asc)))
-      .filter(col("__rk") <= nprobe)
-      .select(col("query_id"), pqLuts(cb, col("__qv")).alias("__lut"),
-        fastL2(sp, col("__qv")).alias("__qn"), col("cent_id"))
-    val scored = inverted.join(broadcast(probes), Seq("cent_id"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(try_divide(pqAdcDot(col("__codes"), col("__lut")),
-          col("__qn") * col("__cn")), 6).alias("cosine"))
-      .groupBy(col("query_id"), col("vec_id")).agg(max(col("cosine")).alias("cosine"))
-    topKRank(scored, k)
-  }
-
-  /** A persisted IVF-PQ index: coarse `centroids`, the PQ `codebook`
-    * (driver-bounded, ksub × dim doubles), and the coded inverted file
-    * `assignments` = (vec_id, codes, norm, cent_id). */
-  final case class PqIvfIndex(centroids: DataFrame, codebook: PqCodebook,
+  /** A persisted IVF-PQ index: coarse `centroids` and the PQ `codebook`
+    * (both held on the driver since load; the codebook is ksub × dim
+    * doubles), and the coded inverted file `assignments` = (vec_id,
+    * codes, norm, cent_id). */
+  final case class PqIvfIndex(centroids: IvfCentroids, codebook: PqCodebook,
                               assignments: DataFrame)
 
   /** Persist an IVF-PQ index to `path` as three parquet datasets —
@@ -965,24 +973,19 @@ object Similarity {
                 dim: Int, m: Int = 8, ksub: Int = 16, nlist: Int = 16,
                 trainIters: Int = 0, pqIters: Int = 0): Unit = {
     val sp = corpus.sparkSession
-    val cents = trainCentroids(corpus, idCol, vecCol, nlist, trainIters)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
     val cb = pqTrain(corpus, idCol, vecCol, dim, m, ksub, pqIters)
     import sp.implicits._
     (for (s <- 0 until cb.m; j <- 0 until cb.ksub)
       yield (s, j, cb.dim, cb.book(s)(j).toSeq))
       .toDF("s", "j", "dim", "cent")
       .write.mode("overwrite").parquet(s"$path/codebook")
-    nearestCentroid(sp, corpus, idCol, vecCol, cents)
-      .select(col(idCol).alias("vec_id"),
-        pqCodes(sp, col(vecCol), cb).alias("codes"),
-        fastL2(sp, col(vecCol)).alias("norm"), col("cent_id").cast("long"))
-      .write.mode("overwrite").partitionBy("cent_id").parquet(s"$path/assignments")
+    writeIvf(corpus, idCol, vecCol, path, nlist, trainIters, Nil,
+      Seq("codes" -> pqCodes(sp, col(vecCol), cb), "norm" -> fastL2(sp, col(vecCol))))
   }
 
   /** Load an index written by [[saveIvfPq]]. The codebook collect is
     * bounded (m × ksub rows) like [[pqTrain]]'s cell aggregation; the
-    * same int-narrowing cent_id re-cast as [[loadIvf]]. */
+    * centroids and the inverted file load as in [[loadIvf]]. */
   def loadIvfPq(sp: org.apache.spark.sql.SparkSession, path: String): PqIvfIndex = {
     val cbRows = sp.read.parquet(s"$path/codebook")
       .select(col("s"), col("j"), col("dim"), col("cent").cast("array<double>"))
@@ -993,11 +996,8 @@ object Similarity {
     val ksub = cbRows.map(_.getInt(1)).max + 1
     val book = Array.ofDim[Array[Double]](m, ksub)
     cbRows.foreach(r => book(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](3).toArray)
-    PqIvfIndex(
-      sp.read.parquet(s"$path/centroids"),
-      PqCodebook(dim, book),
-      sp.read.parquet(s"$path/assignments")
-        .withColumn("cent_id", col("cent_id").cast("long")))
+    val ivf = loadIvf(sp, path)
+    PqIvfIndex(ivf.centroids, PqCodebook(dim, book), ivf.assignments)
   }
 
   /** [[ivfTopKPq]] served from a persisted coded index — no corpus scan,
@@ -1006,14 +1006,11 @@ object Similarity {
   def ivfTopKPqIndexed(index: PqIvfIndex, queries: DataFrame, k: Int,
                        idCol: String, vecCol: String,
                        nprobe: Int = 0): DataFrame = {
-    require(nprobe >= 0,
-      s"ivfTopKPqIndexed: nprobe must be >= 0 (0 = derive), got $nprobe")
-    val np = if (nprobe > 0) nprobe
-             else nprobeForRecall(math.max(1, index.centroids.count().toInt))
+    val np = probeWidth("ivfTopKPqIndexed", nprobe, index.centroids.nlist)
     val sp = queries.sparkSession
     val inverted = index.assignments.select(col("vec_id"),
       col("codes").alias("__codes"), col("norm").alias("__cn"), col("cent_id"))
-    pqProbeRank(sp, index.centroids, inverted, queries, k, idCol, vecCol,
-      np, index.codebook)
+    probeRank(sp, index.centroids, inverted, queries, k, idCol, vecCol,
+      np, Some(index.codebook))
   }
 }

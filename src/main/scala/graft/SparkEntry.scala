@@ -1127,9 +1127,9 @@ object SparkEntry {
     // proves the predicate lands inside candidate generation
     "q_knn_filtered" -> ((s, dir) => {
       val e = table(s, dir, "embeddings")
-      Similarity.ivfTopKFiltered(e, e.filter(col("vec_id") < 10), 10,
-        "vec_id", "embedding", pmod(col("label"), lit(2)) === 0,
-        nlist = 16, nprobe = 16)
+      Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), 10,
+        "vec_id", "embedding", nlist = 16, nprobe = 16,
+        predicate = Some(pmod(col("label"), lit(2)) === 0))
     }),
     // the persisted serving shape: the inverted file carries the label
     // column (saveIvf metaCols), the predicate pushes down to the index
@@ -1140,9 +1140,9 @@ object SparkEntry {
       val idx = stagingDir("ivf_index_meta", dir)
       Similarity.saveIvf(e, "vec_id", "embedding", idx, nlist = 16,
         trainIters = 1, metaCols = Seq("label"))
-      Similarity.ivfTopKIndexedFiltered(Similarity.loadIvf(s, idx),
-        e.filter(col("vec_id") < 10), 10, "vec_id", "embedding",
-        pmod(col("label"), lit(2)) === 0, nprobe = 16)
+      Similarity.ivfTopKIndexed(Similarity.loadIvf(s, idx),
+        e.filter(col("vec_id") < 10), 10, "vec_id", "embedding", nprobe = 16,
+        predicate = Some(pmod(col("label"), lit(2)) === 0))
     }),
     // filtered COMPRESSED serving (round 13): the sq8 inverted file
     // carries the label column; the predicate filters BEFORE decode (and
@@ -1152,11 +1152,11 @@ object SparkEntry {
     "q_knn_sq8_filtered" -> ((s, dir) => {
       val e = table(s, dir, "embeddings")
       val idx = stagingDir("ivf_sq8_index_meta", dir)
-      Similarity.saveIvfSq8(e, "vec_id", "embedding", idx, nlist = 16,
-        trainIters = 1, metaCols = Seq("label"))
-      Similarity.ivfTopKSq8IndexedFiltered(Similarity.loadIvfSq8(s, idx),
-        e.filter(col("vec_id") < 10), 10, "vec_id", "embedding",
-        pmod(col("label"), lit(2)) === 0, nprobe = 16)
+      Similarity.saveIvf(e, "vec_id", "embedding", idx, nlist = 16,
+        trainIters = 1, metaCols = Seq("label"), quantizer = Similarity.Sq8)
+      Similarity.ivfTopKIndexed(Similarity.loadIvf(s, idx),
+        e.filter(col("vec_id") < 10), 10, "vec_id", "embedding", nprobe = 16,
+        predicate = Some(pmod(col("label"), lit(2)) === 0))
     }),
     // IVF over the SQ8-COMPRESSED inverted file (the FAISS IVF,SQ8 tier),
     // exact mode: nprobe = nlist makes the probed union total, so the
@@ -1165,8 +1165,8 @@ object SparkEntry {
     // the q_knn_ivf idiom composed with q_sq8_topk's
     "q_knn_ivf_sq8" -> ((s, dir) => {
       val e = table(s, dir, "embeddings")
-      Similarity.ivfTopKSq8(e, e.filter(col("vec_id") < 10), 10,
-        "vec_id", "embedding", nlist = 16, nprobe = 16)
+      Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), 10,
+        "vec_id", "embedding", nlist = 16, nprobe = 16, quantizer = Similarity.Sq8)
     }),
     // persisted compressed serving: save (centroids + cent_id-partitioned
     // sq8 blobs), reload, serve at nprobe = nlist — proves the blob
@@ -1175,8 +1175,9 @@ object SparkEntry {
     "q_knn_ivf_sq8_persisted" -> ((s, dir) => {
       val e = table(s, dir, "embeddings")
       val idx = stagingDir("ivf_sq8_index", dir)
-      Similarity.saveIvfSq8(e, "vec_id", "embedding", idx, nlist = 16, trainIters = 1)
-      Similarity.ivfTopKSq8Indexed(Similarity.loadIvfSq8(s, idx),
+      Similarity.saveIvf(e, "vec_id", "embedding", idx, nlist = 16, trainIters = 1,
+        quantizer = Similarity.Sq8)
+      Similarity.ivfTopKIndexed(Similarity.loadIvf(s, idx),
         e.filter(col("vec_id") < 10), 10, "vec_id", "embedding", nprobe = 16)
     }),
     // the APPROXIMATE path's quality gate: IVF probing 4/16 lists
@@ -1275,8 +1276,9 @@ object SparkEntry {
     // q_knn_ivf and q_knn_ivf_sq8, for the densest index tier)
     "q_knn_ivf_pq" -> ((s, dir) => {
       val e = table(s, dir, "embeddings").filter(col("vec_id") < 200)
-      Similarity.ivfTopKPq(e, e.filter(col("vec_id") < 10), 10, "vec_id",
-        "embedding", dim = 64, m = 16, ksub = 32, nlist = 16, nprobe = 16)
+      Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), 10, "vec_id",
+        "embedding", nlist = 16, nprobe = 16,
+        quantizer = Similarity.Pq(dim = 64, m = 16, ksub = 32))
     }),
     // persisted coded serving: save (centroids + codebook + cent_id-
     // partitioned codes), reload, serve at nprobe = nlist — proves codes,
@@ -1285,9 +1287,9 @@ object SparkEntry {
     "q_knn_ivf_pq_persisted" -> ((s, dir) => {
       val e = table(s, dir, "embeddings").filter(col("vec_id") < 200)
       val idx = stagingDir("ivf_pq_index", dir)
-      Similarity.saveIvfPq(e, "vec_id", "embedding", idx,
-        dim = 64, m = 16, ksub = 32, nlist = 16)
-      Similarity.ivfTopKPqIndexed(Similarity.loadIvfPq(s, idx),
+      Similarity.saveIvf(e, "vec_id", "embedding", idx, nlist = 16,
+        quantizer = Similarity.Pq(dim = 64, m = 16, ksub = 32))
+      Similarity.ivfTopKIndexed(Similarity.loadIvf(s, idx),
         e.filter(col("vec_id") < 10), 10, "vec_id", "embedding", nprobe = 16)
     }),
     // exact embedding near-dup pairs over a bounded id range

@@ -23,6 +23,9 @@ import graft.functions.SimHash
  */
 object Dedup {
 
+  /** Per-round progress of the distributed connected-components loop. */
+  private lazy val ccLog = org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
+
   // ------------------------------------------------------------- exact
 
   /** Exact dedup: keep one row (minimal `idCol`) per normalized-text
@@ -538,9 +541,7 @@ object Dedup {
       // truncates on the wrapper's first action.)
       (org.apache.spark.sql.graftshim.StatsResetShim.resetStats(out), fresh)
     }
-    def release(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
-      rdds.foreach(r => try r.unpersist(blocking = false)
-      catch { case _: Throwable => () })
+    import Checkpoints.release
     if (contract) {
       // ---- STAR CONTRACTION (round 13) ----------------------------------
       // Earlier rounds ran min-label propagation + pointer halving over a
@@ -685,9 +686,11 @@ object Dedup {
         empty = counts(1) == 0L
         // one line per outer round (≤ maxIter total): lets an operator
         // watch convergence on a long-running 100 TB graph without
-        // spelunking the Spark UI
-        System.err.println(s"[graft.cc] round $i: merge map compressed in " +
-          s"$steps step(s); edges ${if (empty) "exhausted" else "remain"}")
+        // spelunking the Spark UI. The edge count is the contract side's
+        // materializeCount (0 = converged; 1 stands for "some" when the
+        // checkpoint spans several blocks) — no extra job
+        ccLog.info(s"op=connectedComponents round=$i steps=$steps " +
+          s"edges=${counts(1)} converged=$empty")
       }
       release(eBlocks)
       if (!empty) throw new IllegalStateException(

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import Checkpoints.release
 
 /**
  * Graph analytics over relational co-occurrence graphs — the
@@ -147,10 +148,6 @@ object Graph {
       .collect { case (k, r) if !before.contains(k) => r }.toSeq
     (out, fresh)
   }
-
-  private def release(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
-    rdds.foreach(r => try r.unpersist(blocking = false)
-    catch { case _: Throwable => () })
 
   private def statsRow(edges: DataFrame, nTri: Long): DataFrame = {
     val nNodes = edges.select(col("a").alias("n"))

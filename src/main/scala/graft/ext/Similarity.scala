@@ -7,18 +7,28 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 /**
  * Similarity search over an embedding column (Array[Float]).
  *
- * Two paths:
- *  - [[bruteForceTopK]] — exact cosine top-k; the correctness baseline.
- *    Queries are broadcast (small side), corpus streams once; the top-k
- *    is a per-query window over |Q|×|corpus| scored pairs.
- *  - [[ivfTopK]] — IVF-flat: corpus assigned to the nearest of `nlist`
- *    deterministic seed centroids (one pass), queries probe the `nprobe`
- *    nearest lists. Scan cost drops by ~nlist/nprobe; at 100 TB the
- *    centroid assignment is one narrow pass + a co-partitioned join on
- *    the centroid id.
+ * Flat searches score every corpus row against every query and are the
+ * correctness baselines of each storage tier:
+ *  - [[bruteForceTopK]] — exact cosine top-k over float vectors.
+ *  - [[sq8TopK]] — the same scan over SQ8 blobs ([[sq8Compress]]).
+ *  - [[pqTopK]] / [[pqTopKRefined]] — ADC over PQ codes, the latter
+ *    re-ranking a shortlist exactly.
  *
- * All arithmetic is double-precision HOFs (zip_with + aggregate) so
- * results are deterministic and oracle-checkable after 6-dp rounding.
+ * IVF searches score only the inverted lists each query probes. One
+ * build and one search serve every tier ([[Quantizer]]: [[Flat]],
+ * [[Sq8]], [[Pq]]), filtered or not: the build trains `nlist`
+ * centroids ([[trainCentroids]]), collects them to the driver once,
+ * assigns every row to its nearest centroid and encodes it for its
+ * tier. [[ivfTopK]] builds and searches in memory; [[saveIvf]] writes
+ * the same index as parquet, [[loadIvf]] reads it back and
+ * [[ivfTopKIndexed]] serves it. At 100 TB the assignment is one narrow
+ * pass and probing cuts scoring to ~nprobe/nlist of the corpus.
+ *
+ * Scoring runs in the fused codegen kernel [[graft.functions.DotProduct]]
+ * — bit-identical to the HOF [[dot]]: left-to-right double accumulation
+ * — and ranking in the bounded-heap [[topKRank]]. Scores are rounded to
+ * 6 dp with a vec_id tiebreak, so results are deterministic and
+ * oracle-checkable.
  */
 object Similarity {
 
@@ -350,36 +360,36 @@ object Similarity {
       get(array_sort(scored), lit(0)).getField("cid").alias("cluster"))
   }
 
-  /**
-   * IVF-flat ANN. Seed centroids = the nlist lowest-id corpus vectors
-   * (deterministic); `trainIters` > 0 refines them with Lloyd iterations
-   * ([[trainCentroids]]). Each corpus vector is assigned to its nearest
-   * centroid; each query probes the nprobe nearest centroid lists and
-   * ranks exactly within.
-   *
-   * Same null-candidate contract as [[bruteForceTopK]]: null-cosine
-   * (zero-norm) candidates are dropped, and a query with fewer than k
-   * non-null candidates in its probed lists emits fewer than k rows.
-   *
-   * `nprobe = 0` (the default) derives the probe width from the sizing
-   * rule [[nprobeForRecall]](nlist) — so a caller who sizes nlist with
-   * [[nlistForCorpus]] gets a matched recall/latency operating point
-   * without hand-picking the knob. Explicit values pass through.
-   */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              idCol: String, vecCol: String,
-              nlist: Int = 16, nprobe: Int = 0, trainIters: Int = 0,
-              trainSampleMult: Int = 0): DataFrame = {
-    val np = probeWidth("ivfTopK", nprobe, nlist)
-    val sp = corpus.sparkSession
-    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
-      trainIters, trainSampleMult))
-    // one-pass assignment: nearest centroid per corpus vector (max_by agg)
-    val assigned = nearestCentroid(sp, corpus, idCol, vecCol, cents.table(sp))
-      .select(col(idCol).alias("vec_id"), col(vecCol).alias("__cv"),
-        fastL2(sp, col(vecCol)).alias("__cn"), col("cent_id"))
-    probeRank(sp, cents, assigned, queries, k, idCol, vecCol, np)
-  }
+  // ---------------------------------------------------------- IVF indexes
+
+  /** How an IVF index stores each vector in its inverted file — the FAISS
+    * `IVF<n>,Flat` / `IVF<n>,SQ8` / `IVF<n>,PQ<m>` tiers. Training and
+    * centroid assignment always run on the full-precision vectors; only
+    * what a probed list row holds, and so how it is scored, differs:
+    *  - [[Flat]]: the float vector and its norm, scored exactly.
+    *  - [[Sq8]]: one 16 + dim byte [[graft.functions.Sq8Encode]] blob (~4×
+    *    less to read/cache than float32). Scoring is [[sq8TopK]]'s
+    *    asymmetric search: full-precision queries against the decoded
+    *    vector, decoded once per probed row, normed after decode.
+    *  - [[Pq]]: m codes against a global codebook ([[pqTrain]] with
+    *    `iters` Lloyd rounds; flat encoding, FAISS `by_residual = false`)
+    *    plus the true norm — m=16 over dim=64 floats is ≈ 10× less to
+    *    read. Queries score candidates with [[pqTopK]]'s per-subspace
+    *    LUTs, so the probed scan does m lookups + m adds per candidate and
+    *    never touches a float vector.
+    *
+    * Either compression multiplies with the probe's ~nprobe/nlist scan
+    * cut. At nprobe = nlist the probed union is total, so a search must
+    * EQUAL the tier's flat scan ([[bruteForceTopK]], [[sq8TopK]],
+    * [[pqTopK]] with the same codebook) — the q_knn_ivf, q_knn_ivf_sq8
+    * and q_knn_ivf_pq oracle gates. Recall at approximate nprobe is
+    * bounded by IVF recall (q_knn_ivf_recall) plus the quantization step
+    * (q_sq8_recall, q_knn_pq_recall), each gated separately. */
+  sealed trait Quantizer
+  case object Flat extends Quantizer
+  case object Sq8 extends Quantizer
+  final case class Pq(dim: Int, m: Int = 8, ksub: Int = 16, iters: Int = 0)
+    extends Quantizer
 
   /** The centroid table of an IVF search: its nlist (cent_id, cent_vec)
     * rows, collected once to the driver — the same driver bound as a
@@ -388,7 +398,8 @@ object Similarity {
     * score exactly what the distributed table would. */
   final case class IvfCentroids(rows: IndexedSeq[Row], schema: StructType) {
     def nlist: Int = rows.length
-    /** The rows as a local relation, for the build-side assignment. */
+    /** The rows as a local relation, for the build-side assignment and
+      * the saved centroid table. */
     private[ext] def table(sp: org.apache.spark.sql.SparkSession): DataFrame =
       sp.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
@@ -398,7 +409,20 @@ object Similarity {
     IvfCentroids(table.collect().toIndexedSeq, table.schema)
   }
 
-  /** The probe width of every IVF entry point: `nprobe`, or
+  /** An IVF index: `centroids` held on the driver; `assignments` = the
+    * inverted file (vec_id, the tier's stored columns, cent_id, plus any
+    * `metaCols` passed to [[saveIvf]]) — `vec` and `norm` for [[Flat]],
+    * `sq8` for [[Sq8]], `codes` and `norm` for [[Pq]], whose `codebook`
+    * (ksub × dim doubles) the index also holds. */
+  final case class IvfIndex(centroids: IvfCentroids, assignments: DataFrame,
+                            codebook: Option[PqCodebook] = None)
+
+  /** The inverted file's own column names, whatever the tier: a metaCol
+    * may take none of them, or a flat index carrying a meta column `sq8`
+    * would load as an SQ8 index. */
+  private val storedCols = Seq("vec_id", "vec", "norm", "sq8", "codes", "cent_id")
+
+  /** The probe width of every IVF search: `nprobe`, or
     * [[nprobeForRecall]] over `nlist` when it is 0 (derive). */
   private def probeWidth(op: String, nprobe: Int, nlist: Int): Int = {
     require(nprobe >= 0, s"$op: nprobe must be >= 0 (0 = derive), got $nprobe")
@@ -434,7 +458,7 @@ object Similarity {
   private def probeRank(sp: org.apache.spark.sql.SparkSession, cents: IvfCentroids,
                         inverted: DataFrame, queries: DataFrame, k: Int,
                         idCol: String, vecCol: String, nprobe: Int,
-                        codebook: Option[PqCodebook] = None): DataFrame = {
+                        codebook: Option[PqCodebook]): DataFrame = {
     // what a probe row carries for its query; the candidate dot against it
     val (payload, dot): (Column => Column, Column => Column) = codebook match {
       case Some(cb) => (pqLuts(cb, _), pqAdcDot(col("__codes"), _))
@@ -463,73 +487,102 @@ object Similarity {
     topKRank(scored, k)
   }
 
-  /**
-   * Metadata-filtered IVF search (the FAISS `IDSelector` / filtered-ANN
-   * serving shape): rank only corpus rows satisfying `predicate` — a
-   * language/domain/shard filter — while probing exactly as [[ivfTopK]]
-   * does. Real pipelines search within shards constantly ("nearest
-   * English docs", "same-domain near-dups"); post-filtering a top-k is
-   * WRONG (k survivors of an unfiltered top-k can all be ineligible),
-   * so the predicate must land INSIDE the candidate generation, below
-   * the top-k aggregate.
-   *
-   * Centroids are trained on the FULL corpus — the index geometry is
-   * shared by every predicate, matching the persisted-index serving
-   * path where one inverted file answers all filters. The predicate
-   * prunes the inverted-file side BEFORE the probe join (on a parquet
-   * index scan it pushes down to the reader — see
-   * [[ivfTopKIndexedFiltered]]), so ineligible vectors are never
-   * scored. At `nprobe = nlist` the probed union is total and the
-   * result must EQUAL [[bruteForceTopK]] over the filtered corpus —
-   * the oracle gate.
-   *
-   * A query with fewer than k eligible candidates in its probed lists
-   * emits fewer than k rows (same contract as the unfiltered family).
-   */
-  def ivfTopKFiltered(corpus: DataFrame, queries: DataFrame, k: Int,
-                      idCol: String, vecCol: String, predicate: Column,
-                      nlist: Int = 16, nprobe: Int = 0, trainIters: Int = 0,
-                      trainSampleMult: Int = 0): DataFrame = {
-    val np = probeWidth("ivfTopKFiltered", nprobe, nlist)
-    val sp = corpus.sparkSession
-    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
-      trainIters, trainSampleMult))
-    // per-row assignment commutes with the row filter — assigning only
-    // eligible rows is identical to assigning all and filtering, minus
-    // the wasted work
-    val assigned = nearestCentroid(sp, corpus.filter(predicate), idCol,
-        vecCol, cents.table(sp))
-      .select(col(idCol).alias("vec_id"), col(vecCol).alias("__cv"),
-        fastL2(sp, col(vecCol)).alias("__cn"), col("cent_id"))
-    probeRank(sp, cents, assigned, queries, k, idCol, vecCol, np)
-  }
-
-  /** metaCols ride-along validation for [[saveIvf]]/[[saveIvfSq8]]: a
-    * metadata column colliding with the inverted file's own schema (or
-    * duplicating the id spine) would write an ambiguous column into the
+  /** metaCols ride-along validation for [[saveIvf]]: a metadata column
+    * colliding with the inverted file's own schema (of ANY tier) or
+    * duplicating the id spine would write an ambiguous column into the
     * index parquet and fail only obscurely at load or serve time — fail
     * at BUILD time with the collision named instead. */
-  private def requireMetaCols(metaCols: Seq[String], idCol: String,
-                              reserved: Seq[String]): Unit = {
-    val bad = metaCols.filter(c => reserved.contains(c) || c == idCol)
+  private def requireMetaCols(metaCols: Seq[String], idCol: String): Unit = {
+    val bad = metaCols.filter(c => storedCols.contains(c) || c == idCol)
     require(bad.isEmpty,
       s"metaCols ${bad.mkString(", ")} collide with the inverted-file " +
-        s"schema (reserved: ${reserved.mkString(", ")}) or the id column " +
+        s"schema (reserved: ${storedCols.mkString(", ")}) or the id column " +
         s"'$idCol' — rename them in the corpus before indexing")
     val dups = metaCols.diff(metaCols.distinct).distinct
     require(dups.isEmpty, s"metaCols repeated: ${dups.mkString(", ")}")
   }
 
-  /** A persisted IVF-flat index: `centroids` = the (cent_id, cent_vec)
-    * table, held on the driver since load; `assignments` = the inverted
-    * file (vec_id, vec, norm, cent_id, plus any `metaCols` passed to
-    * [[saveIvf]]), cent_id-partitioned on disk. */
-  final case class IvfIndex(centroids: IvfCentroids, assignments: DataFrame)
+  /** The build of every IVF index: train the centroids and collect them
+    * once, assign each row (those passing `predicate`) to its nearest
+    * centroid, and encode it for the `quantizer` tier — (vec_id, stored
+    * columns, cent_id, `metaCols`). Per-row assignment commutes with the
+    * row filter, so assigning only eligible rows equals assigning all and
+    * filtering, minus the wasted work; centroids (and a PQ codebook)
+    * still train on the FULL corpus. metaCols ride along so serving-time
+    * predicates push down to the index scan; the aggregate in
+    * nearestCentroid drops non-key columns, so they rejoin on the id
+    * spine (one equi-join at BUILD time, never at serve time). */
+  private def buildIvf(corpus: DataFrame, idCol: String, vecCol: String,
+                       nlist: Int, trainIters: Int, trainSampleMult: Int,
+                       quantizer: Quantizer, metaCols: Seq[String] = Nil,
+                       predicate: Option[Column] = None): IvfIndex = {
+    requireMetaCols(metaCols, idCol)
+    val sp = corpus.sparkSession
+    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
+      trainIters, trainSampleMult))
+    val v = graft.ColName.topCol(vecCol)
+    val (stored, codebook) = quantizer match {
+      case Flat => (Seq(v.alias("vec"), fastL2(sp, v).alias("norm")), None)
+      case Sq8 => (Seq(graft.functions.Sq8.encode(sp, v).alias("sq8")), None)
+      case Pq(dim, m, ksub, iters) =>
+        val cb = pqTrain(corpus, idCol, vecCol, dim, m, ksub, iters)
+        (Seq(pqCodes(sp, v, cb).alias("codes"), fastL2(sp, v).alias("norm")), Some(cb))
+    }
+    val assigned = nearestCentroid(sp, predicate.fold(corpus)(corpus.filter),
+        idCol, vecCol, cents.table(sp))
+      .select((col(idCol).alias("vec_id") +: stored) :+ col("cent_id"): _*)
+    val inverted =
+      if (metaCols.isEmpty) assigned
+      else assigned.join(
+        corpus.select((col(idCol).alias("vec_id") +: metaCols.map(c =>
+          graft.ColName.topCol(c))): _*), Seq("vec_id"))
+    IvfIndex(cents, inverted, codebook)
+  }
 
   /**
-   * Build an IVF index once and persist it to `path` as two parquet
-   * datasets — `$path/centroids` and `$path/assignments` (the latter
-   * written `partitionBy("cent_id")`). A production retrieval loop
+   * IVF ANN, built in memory and searched once. Seed centroids = the
+   * nlist lowest-id corpus vectors (deterministic); `trainIters` > 0
+   * refines them with Lloyd iterations ([[trainCentroids]]). Each corpus
+   * vector is assigned to its nearest centroid and stored as its
+   * `quantizer` tier; each query probes the nprobe nearest centroid lists
+   * and ranks within.
+   *
+   * Same null-candidate contract as [[bruteForceTopK]]: null-cosine
+   * (zero-norm) candidates are dropped, and a query with fewer than k
+   * non-null candidates in its probed lists emits fewer than k rows.
+   *
+   * `nprobe = 0` (the default) derives the probe width from the sizing
+   * rule [[nprobeForRecall]](nlist) — so a caller who sizes nlist with
+   * [[nlistForCorpus]] gets a matched recall/latency operating point
+   * without hand-picking the knob. Explicit values pass through.
+   *
+   * `predicate` (metadata-filtered search, the FAISS `IDSelector`
+   * shape): rank only corpus rows satisfying it — a language/domain/shard
+   * filter. Post-filtering a top-k is WRONG (k survivors of an unfiltered
+   * top-k can all be ineligible), so the predicate lands INSIDE candidate
+   * generation: ineligible rows are never assigned or scored. Centroids
+   * train on the FULL corpus — the index geometry is shared by every
+   * predicate, as one persisted index answers all filters
+   * ([[ivfTopKIndexed]]). At `nprobe = nlist` the result must EQUAL the
+   * tier's flat scan over the filtered corpus — the oracle gate.
+   */
+  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+              idCol: String, vecCol: String,
+              nlist: Int = 16, nprobe: Int = 0, trainIters: Int = 0,
+              trainSampleMult: Int = 0, quantizer: Quantizer = Flat,
+              predicate: Option[Column] = None): DataFrame = {
+    // the width follows the nlist asked for, not the centroids collected:
+    // a corpus of fewer rows than nlist seeds fewer lists
+    val np = probeWidth("ivfTopK", nprobe, nlist)
+    ivfTopKIndexed(buildIvf(corpus, idCol, vecCol, nlist, trainIters,
+      trainSampleMult, quantizer, predicate = predicate), queries, k, idCol, vecCol, np)
+  }
+
+  /**
+   * Build an IVF index once and persist it to `path` as parquet datasets
+   * — `$path/centroids`, `$path/assignments` (written
+   * `partitionBy("cent_id")`), and for [[Pq]] `$path/codebook` (one row
+   * per (s, j) centroid). A production retrieval loop
    * trains/assigns once here, then serves queries via [[loadIvf]] +
    * [[ivfTopKIndexed]] without re-reading the corpus. Each list is a
    * cent_id partition directory, but serving reads them all unless
@@ -537,182 +590,111 @@ object Similarity {
    * only when the query frame carries a selective filter; the scan then
    * reads the union of the batch's probed lists. Either way the probe
    * join scores only the probed lists' rows. The stored
-   * `norm` is the same double [[fastL2]] the in-memory path computes
-   * (parquet round-trips doubles exactly), so indexed results are
-   * bit-identical to [[ivfTopK]] with the same centroids. `metaCols`
-   * rejoin on the id, so a corpus id that repeats keeps one inverted-file
-   * row per corpus row, and a search can then return that id twice.
+   * `norm` is the same double [[fastL2]] the in-memory path computes, and
+   * parquet round-trips doubles, sq8 blob bytes and codes exactly, so
+   * indexed results are bit-identical to [[ivfTopK]] with the same
+   * centroids. `metaCols` (any tier) carry the columns a serving-time
+   * predicate filters on; they rejoin on the id, so a corpus id that
+   * repeats keeps one inverted-file row per corpus row, and a search can
+   * then return that id twice.
    */
   def saveIvf(corpus: DataFrame, idCol: String, vecCol: String, path: String,
               nlist: Int = 16, trainIters: Int = 0,
-              metaCols: Seq[String] = Nil): Unit = {
+              metaCols: Seq[String] = Nil, quantizer: Quantizer = Flat): Unit = {
     val sp = corpus.sparkSession
-    writeIvf(corpus, idCol, vecCol, path, nlist, trainIters, metaCols,
-      Seq("vec" -> col(vecCol), "norm" -> fastL2(sp, col(vecCol))))
-  }
-
-  /** The build of every saved IVF index: train, write `$path/centroids`,
-    * assign, and write the cent_id-partitioned inverted file
-    * `$path/assignments` = (vec_id, `payload`, cent_id, `metaCols`).
-    * metaCols ride along so serving-time predicates
-    * ([[ivfTopKIndexedFiltered]]) push down to the index scan; the
-    * aggregate in nearestCentroid drops non-key columns, so they rejoin
-    * on the id spine (one equi-join at BUILD time, never at serve time). */
-  private def writeIvf(corpus: DataFrame, idCol: String, vecCol: String,
-                       path: String, nlist: Int, trainIters: Int,
-                       metaCols: Seq[String], payload: Seq[(String, Column)]): Unit = {
-    requireMetaCols(metaCols, idCol, ("vec_id" +: payload.map(_._1)) :+ "cent_id")
-    val cents = trainCentroids(corpus, idCol, vecCol, nlist, trainIters)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    val assigned = nearestCentroid(corpus.sparkSession, corpus, idCol, vecCol, cents)
-      .select((col(idCol).alias("vec_id") +: payload.map { case (n, c) => c.alias(n) }) :+
-        col("cent_id").cast("long"): _*)
-    val withMeta =
-      if (metaCols.isEmpty) assigned
-      else assigned.join(
-        corpus.select((col(idCol).alias("vec_id") +: metaCols.map(c =>
-          graft.ColName.topCol(c))): _*), Seq("vec_id"))
-    withMeta.write.mode("overwrite").partitionBy("cent_id")
+    val index = buildIvf(corpus, idCol, vecCol, nlist, trainIters, 0, quantizer, metaCols)
+    index.centroids.table(sp).write.mode("overwrite").parquet(s"$path/centroids")
+    index.codebook.foreach { cb =>
+      import sp.implicits._
+      (for (s <- 0 until cb.m; j <- 0 until cb.ksub)
+        yield (s, j, cb.dim, cb.book(s)(j).toSeq))
+        .toDF("s", "j", "dim", "cent")
+        .write.mode("overwrite").parquet(s"$path/codebook")
+    }
+    index.assignments.write.mode("overwrite").partitionBy("cent_id")
       .parquet(s"$path/assignments")
   }
 
   /** Load an index written by [[saveIvf]]: one job collects the centroid
-    * table, so serving runs none before its action. cent_id is re-cast to
-    * long: partition-column type inference narrows small values to int. */
-  def loadIvf(sp: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
-    IvfIndex(collectCentroids(sp.read.parquet(s"$path/centroids")),
-      sp.read.parquet(s"$path/assignments")
-        .withColumn("cent_id", col("cent_id").cast("long")))
+    * table and, for a coded index, one the codebook, so serving runs none
+    * before its action. The tier is the stored column the inverted file
+    * has — `vec`, `sq8` or `codes`. cent_id is re-cast to long:
+    * partition-column type inference narrows small values to int. */
+  def loadIvf(sp: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
+    val assignments = sp.read.parquet(s"$path/assignments")
+      .withColumn("cent_id", col("cent_id").cast("long"))
+    val tiers = Seq("vec", "sq8", "codes").filter(assignments.columns.contains)
+    require(tiers.length == 1, s"loadIvf: $path/assignments must hold exactly " +
+      s"one of vec, sq8, codes; found ${tiers.mkString("[", ", ", "]")}")
+    val codebook =
+      if (tiers.head == "codes") Some(readCodebook(sp, s"$path/codebook")) else None
+    IvfIndex(collectCentroids(sp.read.parquet(s"$path/centroids")), assignments,
+      codebook)
+  }
 
-  /** [[ivfTopK]] served from a persisted index — no corpus scan, no
-    * training; same null-candidate and tiebreak contract. `nprobe = 0`
-    * derives from [[nprobeForRecall]] over the index's nlist, the length
-    * of its held centroid table: building the plan runs no Spark job. */
+  /** The codebook [[saveIvf]] wrote for a [[Pq]] index. The collect is
+    * bounded (m × ksub rows) like [[pqTrain]]'s cell aggregation. Every
+    * (s, j) cell of the m × ksub grid must appear exactly once, with one
+    * `dim` and dim/m doubles: a missing cell would otherwise surface as a
+    * NullPointerException deep inside encode or the LUT build. */
+  private def readCodebook(sp: org.apache.spark.sql.SparkSession,
+                           path: String): PqCodebook = {
+    val rows = sp.read.parquet(path)
+      .select(col("s"), col("j"), col("dim"), col("cent").cast("array<double>"))
+      .collect()
+    require(rows.nonEmpty, s"loadIvf: empty codebook at $path")
+    val dims = rows.map(_.getInt(2)).distinct.sorted
+    require(dims.length == 1,
+      s"loadIvf: codebook at $path mixes dims ${dims.mkString(", ")}")
+    val (dim, m, ksub) = (dims.head, rows.map(_.getInt(0)).max + 1,
+      rows.map(_.getInt(1)).max + 1)
+    val cells = rows.map(r => (r.getInt(0), r.getInt(1)))
+    val grid = for (s <- 0 until m; j <- 0 until ksub) yield (s, j)
+    require(cells.length == grid.length && cells.toSet == grid.toSet,
+      s"loadIvf: codebook at $path must hold each of its m x ksub = $m x $ksub " +
+        s"cells once; found ${cells.length} rows over ${cells.distinct.length} cells")
+    require(dim % m == 0 &&
+      rows.forall(r => !r.isNullAt(3) && r.getSeq[Double](3).length == dim / m),
+      s"loadIvf: codebook at $path needs dim/m = $dim/$m doubles in every cell")
+    val book = Array.ofDim[Array[Double]](m, ksub)
+    rows.foreach(r => book(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](3).toArray)
+    PqCodebook(dim, book)
+  }
+
+  /** [[ivfTopK]] served from an index — persisted ([[loadIvf]]) or
+    * not — with no corpus scan, no training and no re-encode; same
+    * null-candidate and tiebreak contract. `nprobe = 0` derives from
+    * [[nprobeForRecall]] over the index's nlist, the length of its held
+    * centroid table: building the plan runs no Spark job.
+    *
+    * `predicate` filters the inverted file BEFORE the decode and the
+    * probe join, so the index must carry its columns ([[saveIvf]]
+    * `metaCols`). On a parquet index Catalyst pushes it into the reader
+    * (`PushedFilters` on the index scan, locked by spec): a selective
+    * serving filter reads row groups, not the whole inverted file, and
+    * skips their decode work. Post-filtering a top-k would be wrong AND
+    * slow; this is filter-during-search. */
   def ivfTopKIndexed(index: IvfIndex, queries: DataFrame, k: Int,
-                     idCol: String, vecCol: String, nprobe: Int = 0): DataFrame = {
+                     idCol: String, vecCol: String, nprobe: Int = 0,
+                     predicate: Option[Column] = None): DataFrame = {
     val np = probeWidth("ivfTopKIndexed", nprobe, index.centroids.nlist)
     val sp = queries.sparkSession
-    val assigned = index.assignments.select(col("vec_id"),
-      col("vec").alias("__cv"), col("norm").alias("__cn"), col("cent_id"))
-    probeRank(sp, index.centroids, assigned, queries, k, idCol, vecCol, np)
-  }
-
-  /** [[ivfTopKFiltered]] served from a persisted index whose inverted
-    * file carries the predicate's metadata columns ([[saveIvf]] with
-    * `metaCols`). The predicate filters the assignments BEFORE the probe
-    * join, i.e. on the parquet scan itself — Catalyst pushes it into the
-    * reader (`PushedFilters` on the index scan, locked by spec), so a
-    * selective serving filter reads row groups, not the whole inverted
-    * file. Post-filtering a top-k would be wrong AND slow; this is
-    * filter-during-search. */
-  def ivfTopKIndexedFiltered(index: IvfIndex, queries: DataFrame, k: Int,
-                             idCol: String, vecCol: String,
-                             predicate: Column, nprobe: Int = 0): DataFrame = {
-    val np = probeWidth("ivfTopKIndexedFiltered", nprobe, index.centroids.nlist)
-    val sp = queries.sparkSession
-    val assigned = index.assignments.filter(predicate).select(col("vec_id"),
-      col("vec").alias("__cv"), col("norm").alias("__cn"), col("cent_id"))
-    probeRank(sp, index.centroids, assigned, queries, k, idCol, vecCol, np)
-  }
-
-  // -------------------------------------- IVF over an SQ8 inverted file
-
-  /**
-   * IVF-SQ8: IVF probing over an SQ8-QUANTIZED inverted file — the FAISS
-   * `IVF<n>,SQ8` tier, and the storage shape a 100 TB serving index
-   * actually wants: each probed list holds 16 + dim BYTES per vector
-   * (~4× less to read/cache/shuffle than float32) and probing still
-   * cuts scoring to ~nprobe/nlist of the corpus, so the two savings
-   * multiply. Training and centroid assignment run on the
-   * FULL-PRECISION vectors (assignment fidelity costs nothing extra —
-   * the corpus is being scanned to encode anyway); scoring is the same
-   * asymmetric search as [[sq8TopK]]: full-precision queries against
-   * decoded (zero + code·scale) corpus vectors, decode projected once
-   * per probed row.
-   *
-   * Provable gate (the nprobe = nlist idiom): probing every list makes
-   * the candidate set total, so the result must EQUAL [[sq8TopK]] over
-   * the same compressed corpus — q_knn_ivf_sq8 pins exactly that against
-   * the oracle's independently recomputed quantized ranking; recall at
-   * approximate nprobe is bounded by IVF recall (q_knn_ivf_recall) plus
-   * the quantization step (q_sq8_recall), each gated separately.
-   */
-  def ivfTopKSq8(corpus: DataFrame, queries: DataFrame, k: Int,
-                 idCol: String, vecCol: String,
-                 nlist: Int = 16, nprobe: Int = 0, trainIters: Int = 0,
-                 trainSampleMult: Int = 0): DataFrame = {
-    val np = probeWidth("ivfTopKSq8", nprobe, nlist)
-    val sp = corpus.sparkSession
-    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
-      trainIters, trainSampleMult))
-    val inverted = nearestCentroid(sp, corpus, idCol, vecCol, cents.table(sp))
-      .select(col(idCol).alias("vec_id"),
-        graft.functions.Sq8.encode(sp, graft.ColName.topCol(vecCol)).alias("sq8"),
-        col("cent_id"))
-    probeRank(sp, cents, decodedAssignments(sp, inverted), queries, k,
-      idCol, vecCol, np)
-  }
-
-  /** (vec_id, sq8, cent_id) → the probeRank-shaped (vec_id, __cv, __cn,
-    * cent_id): ONE decode projection per inverted-file row, norm over the
-    * decoded vector (the quantized ranking's norm, matching [[sq8TopK]]). */
-  private def decodedAssignments(sp: org.apache.spark.sql.SparkSession,
-                                 inverted: DataFrame): DataFrame =
-    inverted
-      .select(col("vec_id"),
-        graft.functions.Sq8.decode(sp, col("sq8")).alias("__cv"), col("cent_id"))
-      .select(col("vec_id"), col("__cv"), fastL2(sp, col("__cv")).alias("__cn"),
-        col("cent_id"))
-
-  /** Persist an IVF-SQ8 index: `$path/centroids` plus the COMPRESSED
-    * inverted file `$path/assignments` = (vec_id, sq8 binary, cent_id),
-    * cent_id-partitioned like [[saveIvf]]'s — a ~4×-smaller index to
-    * scan (parquet round-trips the blob bytes exactly, so
-    * served rankings are bit-identical to [[ivfTopKSq8]] with the same
-    * centroids). */
-  def saveIvfSq8(corpus: DataFrame, idCol: String, vecCol: String, path: String,
-                 nlist: Int = 16, trainIters: Int = 0,
-                 metaCols: Seq[String] = Nil): Unit = {
-    val sp = corpus.sparkSession
-    writeIvf(corpus, idCol, vecCol, path, nlist, trainIters, metaCols,
-      Seq("sq8" -> graft.functions.Sq8.encode(sp, graft.ColName.topCol(vecCol))))
-  }
-
-  /** Load an index written by [[saveIvfSq8]] (the [[loadIvf]] layout).
-    * The assignments frame is the compressed inverted file;
-    * [[ivfTopKSq8Indexed]] decodes at probe time. */
-  def loadIvfSq8(sp: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
-    loadIvf(sp, path)
-
-  /** [[ivfTopKSq8]] served from a persisted compressed index — no corpus
-    * scan, no training, no re-encode; `nprobe = 0` derives like
-    * [[ivfTopKIndexed]]. */
-  def ivfTopKSq8Indexed(index: IvfIndex, queries: DataFrame, k: Int,
-                        idCol: String, vecCol: String,
-                        nprobe: Int = 0): DataFrame = {
-    val np = probeWidth("ivfTopKSq8Indexed", nprobe, index.centroids.nlist)
-    val sp = queries.sparkSession
-    probeRank(sp, index.centroids, decodedAssignments(sp, index.assignments),
-      queries, k, idCol, vecCol, np)
-  }
-
-  /** [[ivfTopKIndexedFiltered]] for the COMPRESSED serving tier: the
-    * predicate filters the sq8 inverted file BEFORE decode — pushed into
-    * the index parquet scan, so a selective filter skips row groups AND
-    * skips their decode work (the filter lands below the decode
-    * projection by construction: rows are filtered, then decoded). The
-    * index must carry the predicate's columns ([[saveIvfSq8]]
-    * `metaCols`). Exact mode (nprobe = nlist) ≡ [[sq8TopK]] over the
-    * filtered compressed corpus. */
-  def ivfTopKSq8IndexedFiltered(index: IvfIndex, queries: DataFrame, k: Int,
-                                idCol: String, vecCol: String,
-                                predicate: Column, nprobe: Int = 0): DataFrame = {
-    val np = probeWidth("ivfTopKSq8IndexedFiltered", nprobe,
-      index.centroids.nlist)
-    val sp = queries.sparkSession
-    probeRank(sp, index.centroids,
-      decodedAssignments(sp, index.assignments.filter(predicate)),
-      queries, k, idCol, vecCol, np)
+    val rows = predicate.fold(index.assignments)(index.assignments.filter)
+    val inverted = index.codebook match {
+      case Some(_) => rows.select(col("vec_id"), col("codes").alias("__codes"),
+        col("norm").alias("__cn"), col("cent_id"))
+      // ONE decode projection per inverted-file row, norm over the decoded
+      // vector (the quantized ranking's norm, matching sq8TopK)
+      case None if index.assignments.columns.contains("sq8") => rows
+        .select(col("vec_id"), graft.functions.Sq8.decode(sp, col("sq8")).alias("__cv"),
+          col("cent_id"))
+        .select(col("vec_id"), col("__cv"), fastL2(sp, col("__cv")).alias("__cn"),
+          col("cent_id"))
+      case None => rows.select(col("vec_id"), col("vec").alias("__cv"),
+        col("norm").alias("__cn"), col("cent_id"))
+    }
+    probeRank(sp, index.centroids, inverted, queries, k, idCol, vecCol, np,
+      index.codebook)
   }
 
   // ------------------------------------------------ product quantization
@@ -862,8 +844,8 @@ object Similarity {
   /** Per-subspace ADC lookup tables for one query vector:
     * `lut[s][j] = dot(q_sub_s, centroid_j)` — the m × ksub doubles a
     * query needs to score ANY coded candidate with m array lookups.
-    * Factored so the flat scan [[pqTopK]] and the inverted-file
-    * [[ivfTopKPq]] construct scores IDENTICALLY (same per-subspace
+    * Factored so the flat scan [[pqTopK]] and the [[Pq]] tier of
+    * [[ivfTopK]] construct scores IDENTICALLY (same per-subspace
     * association order, bit-equal doubles) — the q_knn_ivf_pq exactness
     * gate pins their equality. */
   private[ext] def pqLuts(cb: PqCodebook, vec: Column): Column =
@@ -916,101 +898,4 @@ object Similarity {
     topKRank(scored, k)
   }
 
-  // -------------------------------------- IVF over a PQ inverted file
-
-  /**
-   * IVF-PQ: IVF probing over a PQ-CODED inverted file — the FAISS
-   * `IVF<n>,PQ<m>` tier (flat encoding against a global codebook, i.e.
-   * `by_residual = false`), the densest index shape of the family: each
-   * probed list row is m small codes + one norm double (m=16 over
-   * dim=64 floats ≈ 10× less to read/cache than float32), and probing
-   * still cuts scoring to ~nprobe/nlist of the corpus. Coarse centroids
-   * AND code assignment both run on the full-precision vectors in the
-   * same build pass; queries score candidates with the per-subspace
-   * LUTs of [[pqTopK]] (built once per query, broadcast), so the
-   * probed scan does m array lookups + m adds per candidate and never
-   * touches a float vector.
-   *
-   * Provable gate (the nprobe = nlist idiom): probing every list makes
-   * the candidate set total, so the result must EQUAL [[pqTopK]] over
-   * the same corpus/codebook — q_knn_ivf_pq pins exactly that against
-   * the q_knn_pq_adc oracle's independently recomputed quantized
-   * ranking. Recall at approximate nprobe is bounded by IVF recall
-   * (q_knn_ivf_recall) plus the ADC step (q_knn_pq_recall), each gated
-   * separately.
-   */
-  def ivfTopKPq(corpus: DataFrame, queries: DataFrame, k: Int,
-                idCol: String, vecCol: String, dim: Int,
-                m: Int = 8, ksub: Int = 16, nlist: Int = 16,
-                nprobe: Int = 0, trainIters: Int = 0, pqIters: Int = 0,
-                trainSampleMult: Int = 0): DataFrame = {
-    val np = probeWidth("ivfTopKPq", nprobe, nlist)
-    val sp = corpus.sparkSession
-    val cents = collectCentroids(trainCentroids(corpus, idCol, vecCol, nlist,
-      trainIters, trainSampleMult))
-    val cb = pqTrain(corpus, idCol, vecCol, dim, m, ksub, pqIters)
-    val inverted = nearestCentroid(sp, corpus, idCol, vecCol, cents.table(sp))
-      .select(col(idCol).alias("vec_id"),
-        pqCodes(sp, col(vecCol), cb).alias("__codes"),
-        fastL2(sp, col(vecCol)).alias("__cn"), col("cent_id"))
-    probeRank(sp, cents, inverted, queries, k, idCol, vecCol, np, Some(cb))
-  }
-
-  /** A persisted IVF-PQ index: coarse `centroids` and the PQ `codebook`
-    * (both held on the driver since load; the codebook is ksub × dim
-    * doubles), and the coded inverted file `assignments` = (vec_id,
-    * codes, norm, cent_id). */
-  final case class PqIvfIndex(centroids: IvfCentroids, codebook: PqCodebook,
-                              assignments: DataFrame)
-
-  /** Persist an IVF-PQ index to `path` as three parquet datasets —
-    * `centroids`, `codebook` (one row per (s, j) centroid), and the
-    * cent_id-partitioned coded `assignments`. Codes are exact ints and
-    * the norm is the same double [[fastL2]] the in-memory path computes
-    * (parquet round-trips both exactly), so served rankings are
-    * bit-identical to [[ivfTopKPq]] with the same centroids/codebook. */
-  def saveIvfPq(corpus: DataFrame, idCol: String, vecCol: String, path: String,
-                dim: Int, m: Int = 8, ksub: Int = 16, nlist: Int = 16,
-                trainIters: Int = 0, pqIters: Int = 0): Unit = {
-    val sp = corpus.sparkSession
-    val cb = pqTrain(corpus, idCol, vecCol, dim, m, ksub, pqIters)
-    import sp.implicits._
-    (for (s <- 0 until cb.m; j <- 0 until cb.ksub)
-      yield (s, j, cb.dim, cb.book(s)(j).toSeq))
-      .toDF("s", "j", "dim", "cent")
-      .write.mode("overwrite").parquet(s"$path/codebook")
-    writeIvf(corpus, idCol, vecCol, path, nlist, trainIters, Nil,
-      Seq("codes" -> pqCodes(sp, col(vecCol), cb), "norm" -> fastL2(sp, col(vecCol))))
-  }
-
-  /** Load an index written by [[saveIvfPq]]. The codebook collect is
-    * bounded (m × ksub rows) like [[pqTrain]]'s cell aggregation; the
-    * centroids and the inverted file load as in [[loadIvf]]. */
-  def loadIvfPq(sp: org.apache.spark.sql.SparkSession, path: String): PqIvfIndex = {
-    val cbRows = sp.read.parquet(s"$path/codebook")
-      .select(col("s"), col("j"), col("dim"), col("cent").cast("array<double>"))
-      .collect()
-    require(cbRows.nonEmpty, s"loadIvfPq: empty codebook at $path/codebook")
-    val dim = cbRows.head.getInt(2)
-    val m = cbRows.map(_.getInt(0)).max + 1
-    val ksub = cbRows.map(_.getInt(1)).max + 1
-    val book = Array.ofDim[Array[Double]](m, ksub)
-    cbRows.foreach(r => book(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](3).toArray)
-    val ivf = loadIvf(sp, path)
-    PqIvfIndex(ivf.centroids, PqCodebook(dim, book), ivf.assignments)
-  }
-
-  /** [[ivfTopKPq]] served from a persisted coded index — no corpus scan,
-    * no training, no re-encode; `nprobe = 0` derives like
-    * [[ivfTopKIndexed]]. */
-  def ivfTopKPqIndexed(index: PqIvfIndex, queries: DataFrame, k: Int,
-                       idCol: String, vecCol: String,
-                       nprobe: Int = 0): DataFrame = {
-    val np = probeWidth("ivfTopKPqIndexed", nprobe, index.centroids.nlist)
-    val sp = queries.sparkSession
-    val inverted = index.assignments.select(col("vec_id"),
-      col("codes").alias("__codes"), col("norm").alias("__cn"), col("cent_id"))
-    probeRank(sp, index.centroids, inverted, queries, k, idCol, vecCol,
-      np, Some(index.codebook))
-  }
 }

@@ -96,68 +96,88 @@ class IvfProbeSpec extends SparkSpec {
       assert(served.filter(col("query_id") === 1000L).count() == 0)
     }
     withDir("graft_ivf_probe_sq8") { dir =>
-      Similarity.saveIvfSq8(c, "vec_id", "embedding", dir, nlist = 6)
+      Similarity.saveIvf(c, "vec_id", "embedding", dir, nlist = 6,
+        quantizer = Similarity.Sq8)
       val decoded = assignmentsAt(dir)
         .select(col("vec_id"),
           graft.functions.Sq8.decode(spark, col("sq8")).alias("__cv"), col("cent_id"))
         .select(col("vec_id"), col("__cv"),
           Similarity.fastL2(spark, col("__cv")).alias("__cn"), col("cent_id"))
-      val served = Similarity.ivfTopKSq8Indexed(Similarity.loadIvfSq8(spark, dir), q, k,
+      val served = Similarity.ivfTopKIndexed(Similarity.loadIvf(spark, dir), q, k,
         "vec_id", "embedding", nprobe = np)
       assertSameRows(windowProbeRank(centroidsAt(dir), decoded, q, k, np, identity,
         Similarity.fastDot(spark, _, col("__cv"))), served)
     }
     withDir("graft_ivf_probe_pq") { dir =>
-      Similarity.saveIvfPq(c, "vec_id", "embedding", dir, dim = 4, m = 2, ksub = 4,
-        nlist = 6)
-      val index = Similarity.loadIvfPq(spark, dir)
+      Similarity.saveIvf(c, "vec_id", "embedding", dir, nlist = 6,
+        quantizer = Similarity.Pq(dim = 4, m = 2, ksub = 4))
+      val index = Similarity.loadIvf(spark, dir)
       val coded = assignmentsAt(dir)
         .select(col("vec_id"), col("codes").alias("__codes"), col("norm").alias("__cn"),
           col("cent_id"))
-      val served = Similarity.ivfTopKPqIndexed(index, q, k, "vec_id", "embedding",
+      val served = Similarity.ivfTopKIndexed(index, q, k, "vec_id", "embedding",
         nprobe = np)
       assertSameRows(windowProbeRank(centroidsAt(dir), coded, q, k, np,
-        Similarity.pqLuts(index.codebook, _), Similarity.pqAdcDot(col("__codes"), _)),
+        Similarity.pqLuts(index.codebook.get, _), Similarity.pqAdcDot(col("__codes"), _)),
         served)
     }
   }
 
+  test("in-memory ivfTopK derives nprobe from the nlist asked for, not from " +
+    "the fewer centroids a small corpus seeds") {
+    // 61 rows seed 61 of the 128 lists: the rule gives 8 probes for 128
+    // lists but 4 for 61, and with one vector per list 4 probes leave a
+    // query fewer than k candidates
+    val (c, q) = (corpus, queries)
+    assert(Similarity.nprobeForRecall(128) == 8 && Similarity.nprobeForRecall(61) == 4)
+    def top(nprobe: Int) =
+      Similarity.ivfTopK(c, q, 5, "vec_id", "embedding", nlist = 128, nprobe = nprobe)
+    assertSameRows(top(8), top(0))
+    assert(canonicalRows(top(4)) != canonicalRows(top(8)))
+  }
+
   test("ivfTopKIndexed runs no job to build its plan and at most 4 to collect") {
-    withDir("graft_ivf_jobs") { dir =>
-      Similarity.saveIvf(corpus, "vec_id", "embedding", dir, nlist = 6)
-      val index = Similarity.loadIvf(spark, dir)
-      val q = queries
-      q.schema
-      // the listener bus is asynchronous: a marker job flushes it, so every
-      // job started before the marker has been counted once it is seen
-      val jobs = new AtomicInteger(0)
-      @volatile var sawMarker = false
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          if (Option(js.properties)
-            .exists(_.getProperty("spark.job.description", "") == "ivf-jobs-marker"))
-            sawMarker = true
-          else jobs.incrementAndGet()
-      }
-      def jobsSoFar(): Int = {
-        sawMarker = false
-        spark.sparkContext.setJobDescription("ivf-jobs-marker")
-        try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(20)
-        assert(sawMarker, "listener bus did not deliver the marker job in 10s")
-        jobs.getAndSet(0)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        jobsSoFar() // drop jobs of the build still queued on the bus
-        // nprobe = 0: the width derives from the index's nlist
-        val top = Similarity.ivfTopKIndexed(index, q, 5, "vec_id", "embedding")
-        assert(jobsSoFar() == 0, "building the search plan must run no Spark job")
-        assert(top.collect().nonEmpty)
-        val collectJobs = jobsSoFar()
-        assert(collectJobs <= 4, s"collect ran $collectJobs jobs; expected at most 4")
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val q = queries
+    q.schema
+    // the listener bus is asynchronous: a marker job flushes it, so every
+    // job started before the marker has been counted once it is seen
+    val jobs = new AtomicInteger(0)
+    @volatile var sawMarker = false
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties)
+          .exists(_.getProperty("spark.job.description", "") == "ivf-jobs-marker"))
+          sawMarker = true
+        else jobs.incrementAndGet()
     }
+    def jobsSoFar(): Int = {
+      sawMarker = false
+      spark.sparkContext.setJobDescription("ivf-jobs-marker")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sawMarker, "listener bus did not deliver the marker job in 10s")
+      jobs.getAndSet(0)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Seq(Similarity.Flat, Similarity.Sq8, Similarity.Pq(dim = 4, m = 2, ksub = 4))
+      .foreach { quantizer =>
+        withDir("graft_ivf_jobs") { dir =>
+          Similarity.saveIvf(corpus, "vec_id", "embedding", dir, nlist = 6,
+            quantizer = quantizer)
+          val index = Similarity.loadIvf(spark, dir)
+          jobsSoFar() // drop jobs of the build and load still queued on the bus
+          // nprobe = 0: the width derives from the index's nlist; a PQ
+          // index's codebook was collected by loadIvf
+          val top = Similarity.ivfTopKIndexed(index, q, 5, "vec_id", "embedding")
+          assert(jobsSoFar() == 0,
+            s"$quantizer: building the search plan must run no Spark job")
+          assert(top.collect().nonEmpty)
+          val collectJobs = jobsSoFar()
+          if (quantizer == Similarity.Flat)
+            assert(collectJobs <= 4, s"collect ran $collectJobs jobs; expected at most 4")
+        }
+      }
+    finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -104,18 +104,19 @@ class PqSpec extends SparkSpec {
     val q = c.filter(col("vec_id") < 4)
     val flat = Similarity.pqTopK(c, q, 5, "vec_id", "embedding", dim,
       m = 4, ksub = 8, trainIters = 1)
-    val ivf = Similarity.ivfTopKPq(c, q, 5, "vec_id", "embedding", dim,
-      m = 4, ksub = 8, nlist = 6, nprobe = 6, trainIters = 1, pqIters = 1)
+    val pq = Similarity.Pq(dim, m = 4, ksub = 8, iters = 1)
+    val ivf = Similarity.ivfTopK(c, q, 5, "vec_id", "embedding",
+      nlist = 6, nprobe = 6, trainIters = 1, quantizer = pq)
     assertSameRows(ivf, flat)
     val idx = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    Similarity.saveIvfPq(c, "vec_id", "embedding", idx, dim,
-      m = 4, ksub = 8, nlist = 6, trainIters = 1, pqIters = 1)
-    val served = Similarity.ivfTopKPqIndexed(Similarity.loadIvfPq(spark, idx),
+    Similarity.saveIvf(c, "vec_id", "embedding", idx,
+      nlist = 6, trainIters = 1, quantizer = pq)
+    val served = Similarity.ivfTopKIndexed(Similarity.loadIvf(spark, idx),
       q, 5, "vec_id", "embedding", nprobe = 6)
     assertSameRows(served, flat)
     // approximate serving (default nprobe from nprobeForRecall) stays a
     // subset of the corpus ranking contract: right row count, no dupes
-    val approx = Similarity.ivfTopKPqIndexed(Similarity.loadIvfPq(spark, idx),
+    val approx = Similarity.ivfTopKIndexed(Similarity.loadIvf(spark, idx),
       q, 5, "vec_id", "embedding")
     val rows = approx.select("query_id", "vec_id").collect()
     assert(rows.length == rows.distinct.length)

@@ -109,15 +109,15 @@ class Sq8Spec extends SparkSpec {
     // exact mode: every list probed — the compressed inverted file must
     // reproduce the flat quantized ranking (trained centroids change the
     // partition of the corpus, never the probed union)
-    val ivf = Similarity.ivfTopKSq8(corpus, queries, 8, "vec_id", "embedding",
-      nlist = 8, nprobe = 8, trainIters = 1)
+    val ivf = Similarity.ivfTopK(corpus, queries, 8, "vec_id", "embedding",
+      nlist = 8, nprobe = 8, trainIters = 1, quantizer = Similarity.Sq8)
     assertSameRows(ivf, flat)
     // save → load → serve round-trips the blob bytes exactly
     val path = java.nio.file.Files.createTempDirectory("ivf_sq8").toString
-    Similarity.saveIvfSq8(corpus, "vec_id", "embedding", path,
-      nlist = 8, trainIters = 1)
-    val served = Similarity.ivfTopKSq8Indexed(
-      Similarity.loadIvfSq8(spark, path), queries, 8, "vec_id", "embedding",
+    Similarity.saveIvf(corpus, "vec_id", "embedding", path,
+      nlist = 8, trainIters = 1, quantizer = Similarity.Sq8)
+    val served = Similarity.ivfTopKIndexed(
+      Similarity.loadIvf(spark, path), queries, 8, "vec_id", "embedding",
       nprobe = 8)
     assertSameRows(served, flat)
     // the stored inverted file IS compressed: binary blob column, 16+dim
@@ -129,8 +129,8 @@ class Sq8Spec extends SparkSpec {
     assert(maxLen == 16 + 16, s"blob should be 16 header + dim bytes, got $maxLen")
     // derived nprobe (0) comes from the rule over the index's centroid
     // count — mechanically serveable, top-1 well-separated queries agree
-    val derived = Similarity.ivfTopKSq8Indexed(
-      Similarity.loadIvfSq8(spark, path), queries, 8, "vec_id", "embedding")
+    val derived = Similarity.ivfTopKIndexed(
+      Similarity.loadIvf(spark, path), queries, 8, "vec_id", "embedding")
     assert(derived.count() > 0)
   }
 }

@@ -732,7 +732,7 @@ object Bench {
         edges.count()
         Prepared(() =>
           if (n == NmScaleTriOrdered) graft.ext.Graph.triangleStats(edges)
-          else graft.ext.Graph.triangleStatsIdOriented(edges),
+          else CounterExamples.triangleStatsIdOriented(edges),
           () => { edges.unpersist(); () })
       // the chain pair (round 13): connectedComponents' STAR CONTRACTION
       // (merge into min neighbor + rewrite the edge set) is what makes
@@ -743,8 +743,8 @@ object Bench {
       // graph diameter and the plain arm's round count is the chain's).
       // The contraction arm converges in ~log₂ rounds over a
       // geometrically SHRINKING edge frame; the propagation-only
-      // counter-example ([[graft.ext.Dedup.connectedComponentsCounted]]
-      // contract=false) pays ~diameter rounds of full-edge-set work.
+      // counter-example ([[CounterExamples.propagationComponents]]) pays
+      // ~diameter rounds of full-edge-set work.
       // (A label-only pointer-halving middle ground measured 75 rounds =
       // O(diameter) on a random-id topology — it helps only when ids
       // align with the graph, which is why it's gone.) Round counts are
@@ -761,9 +761,10 @@ object Bench {
           .persist(StorageLevel.MEMORY_AND_DISK)
         edges.count()
         Prepared(() => {
-          val contract = n == NmScaleCcChain
-          val (labels, rounds) = graft.ext.Dedup.connectedComponentsCounted(
-            edges, "a", "b", maxIter = if (contract) 25 else 40, contract)
+          val (labels, rounds) =
+            if (n == NmScaleCcChain)
+              graft.ext.Dedup.connectedComponentsCounted(edges, "a", "b", maxIter = 25)
+            else CounterExamples.propagationComponents(edges, "a", "b", maxIter = 40)
           System.err.println(s"[bench] $n rounds=$rounds diameter=$diameter")
           labels.agg(count(lit(1)).alias("n_nodes"),
               countDistinct(col("comp")).alias("n_components"))
@@ -788,12 +789,11 @@ object Bench {
       // hard K-ceiling is the documented finding. Both arms re-plan per
       // repeat, so the folded arm's planning cost — the scale-killer
       // axis — is inside the timed window.
-      case n @ (NmScaleBpeRankmap | NmScaleBpeFolded) => Prepared(() => {
-        val rankmap = n == NmScaleBpeRankmap
-        graft.ext.Bpe.encodeCounts(docs, "doc_id", "text",
-          syntheticBpeMerges(if (rankmap) 512 else 64),
-          if (rankmap) "rankmap" else "fold")
-      }, () => ())
+      case n @ (NmScaleBpeRankmap | NmScaleBpeFolded) => Prepared(() =>
+        if (n == NmScaleBpeRankmap)
+          graft.ext.Bpe.encodeCounts(docs, "doc_id", "text", syntheticBpeMerges(512))
+        else CounterExamples.foldedEncodeCounts(docs, "doc_id", "text",
+          syntheticBpeMerges(64)), () => ())
       case NmScaleKmeans => Prepared(() =>
         graft.ext.Similarity.kmeansAssign(
           spark.read.parquet(s"$sfDir/embeddings.parquet"), "vec_id",

@@ -72,6 +72,7 @@ private[graft] object Overlap {
   final class ProbeGroup(sc: org.apache.spark.SparkContext, desc: String) {
     private val tag = s"graft-probe-${java.util.UUID.randomUUID}"
     private val pool: ExecutorService = Executors.newCachedThreadPool()
+    private val running = new java.util.concurrent.atomic.AtomicInteger(0)
 
     def submit[T](what: String)(body: => T): JFuture[T] =
       pool.submit(new Callable[T] {
@@ -79,7 +80,8 @@ private[graft] object Overlap {
           // thread-local: scopes this probe's jobs under the shared
           // cancellable group without touching the caller's properties
           sc.setJobGroup(tag, s"$desc: $what", interruptOnCancel = true)
-          try body finally sc.clearJobGroup()
+          running.incrementAndGet()
+          try body finally { running.decrementAndGet(); sc.clearJobGroup() }
         }
       })
 
@@ -87,8 +89,10 @@ private[graft] object Overlap {
     def get[T](f: JFuture[T]): T =
       try f.get() catch { case e: Throwable => throw unwrap(e) }
 
-    /** Abort every probe job still running under the group. */
-    def cancel(): Unit = sc.cancelJobGroup(tag)
+    /** Abort every probe job still running under the group. A no-op
+      * once every probe has returned: there is no job left to cancel,
+      * and Spark logs a WARN for each cancel of an idle group. */
+    def cancel(): Unit = if (running.get > 0) sc.cancelJobGroup(tag)
 
     def close(): Unit = {
       pool.shutdownNow()

@@ -34,7 +34,7 @@ object Bpe {
     * one symbol — a single `aggregate` fold, no UDF. `get` (0-based,
     * null-safe) reads the fold's last symbol; the size guard keeps the
     * first element append-only. */
-  private[ext] def applyMerge(symbols: Column, left: String, right: String): Column =
+  private[graft] def applyMerge(symbols: Column, left: String, right: String): Column =
     aggregate(symbols,
       array().cast("array<string>"),
       (acc, s) =>
@@ -134,7 +134,8 @@ object Bpe {
     * folded expression tree is 30k nested `aggregate` HOFs and Catalyst
     * analysis blows up long before data volume matters).
     *
-    * Equivalence with sequential rank-order application (the fold arm):
+    * Equivalence with sequential rank-order application (the fold
+    * counter-example):
     * identical whenever every symbol string in the table is produced by
     * a unique rank — which [[trainMerges]] tables satisfy in practice.
     * (The pathological counter-case needs two different ranks to build
@@ -180,57 +181,46 @@ object Bpe {
    * of its exploded tokens against that word → subword-count map, then
    * one per-doc partial-agg count. Docs with no tokens are absent.
    *
-   * `strategy` picks how the word table is tokenized (VERDICT r14 #1):
-   *  - `"rankmap"` (the `"auto"` default): ONE narrow `mapPartitions`
-   *    pass with the broadcast rank map and [[rankMergeWord]]'s
-   *    priority-merge loop — per-word cost independent of K, so a
-   *    realistic 30k-merge table costs the same plan as an 8-merge one.
-   *    The non-expression path is justified exactly like the Multimodal
-   *    byte codecs: the per-word loop is data-dependent iteration no
-   *    fixed-depth Catalyst expression can express at unbounded K.
-   *  - `"fold"`: the original K-chained Catalyst `aggregate` folds —
-   *    whole-stage-codegen'd and zero-JVM-closure at small K, kept as
-   *    the spec's reference arm and the bench counter-example arm
-   *    (scale_bpe_folded_64). It has a HARD K-ceiling: each chained HOF
-   *    costs the analyzer an iteration, so at K=128 Spark 4.1 fails
-   *    analysis outright (`Max iterations (100) reached for batch
-   *    Resolution`, spec-pinned in BpeSpec) — which is why it is NOT
-   *    the default.
+   * The word table is tokenized by ONE narrow `mapPartitions` pass with
+   * the broadcast rank map and [[rankMergeWord]]'s priority-merge loop —
+   * per-word cost independent of K, so a realistic 30k-merge table costs
+   * the same plan as an 8-merge one. The non-expression path is
+   * justified exactly like the Multimodal byte codecs: the per-word loop
+   * is data-dependent iteration no fixed-depth Catalyst expression can
+   * express at unbounded K. (The K-chained Catalyst fold it replaced
+   * fails analysis at K=128; it survives only as the bench
+   * counter-example [[graft.CounterExamples.foldedEncodeCounts]].)
    */
   def encodeCounts(df: DataFrame, idCol: String, textCol: String,
-                   merges: Seq[(String, String)],
-                   strategy: String = "auto"): DataFrame = {
+                   merges: Seq[(String, String)]): DataFrame =
+    encodeWith(df, idCol, textCol) { words =>
+      val spark = df.sparkSession
+      val bcRanks = spark.sparkContext.broadcast(
+        merges.zipWithIndex.toMap: scala.collection.Map[(String, String), Int])
+      import spark.implicits._
+      words.as[String].mapPartitions { it =>
+        val rm = bcRanks.value
+        it.map { w =>
+          (w, rankMergeWord(w.split("").filter(_.nonEmpty), rm).length)
+        }
+      }.toDF("__w", "__k")
+    }
+
+  /** The encode plan around a word tokenizer: `subwords` maps the
+    * distinct-word table (`__w`) to (`__w`, `__k` subword count). */
+  private[graft] def encodeWith(df: DataFrame, idCol: String, textCol: String)(
+      subwords: DataFrame => DataFrame): DataFrame = {
     val toks = df.select(col(idCol),
       explode(TextAnalysis.tokens(
         TextAnalysis.normalized(col(textCol)))).alias("__w"))
-    val words = toks.select("__w").distinct()
-    val wordSub = strategy match {
-      case "fold" =>
-        val chars = filter(split(col("__w"), ""), s => length(s) > 0)
-        val folded = merges.foldLeft(chars) { case (c, (l, r)) => applyMerge(c, l, r) }
-        words.select(col("__w"), size(folded).alias("__k"))
-      case "rankmap" | "auto" =>
-        val spark = df.sparkSession
-        val bcRanks = spark.sparkContext.broadcast(
-          merges.zipWithIndex.toMap: scala.collection.Map[(String, String), Int])
-        import spark.implicits._
-        words.select(col("__w")).as[String].mapPartitions { it =>
-          val rm = bcRanks.value
-          it.map { w =>
-            (w, rankMergeWord(w.split("").filter(_.nonEmpty), rm).length)
-          }
-        }.toDF("__w", "__k")
-      case other => throw new IllegalArgumentException(
-        s"unknown encodeCounts strategy '$other' (fold | rankmap | auto)")
-    }
-    toks.join(broadcast(wordSub), "__w")
+    toks.join(broadcast(subwords(toks.select("__w").distinct())), "__w")
       .groupBy(col(idCol))
       .agg(count(lit(1)).alias("n_words"),
         sum(col("__k")).alias("n_subwords"))
   }
 
   /** Independent sequential reference implementation (driver-side, plain
-    * Scala) — used by the spec's strategy-equivalence gate, NOT by the
+    * Scala) — used by the training-equivalence specs, NOT by the
     * distributed path. */
   private[graft] def referenceMerges(wordFreqs: Map[String, Long],
                                    numMerges: Int): Seq[(Int, String, String, Long)] = {

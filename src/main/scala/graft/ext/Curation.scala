@@ -951,14 +951,17 @@ object Curation {
     val allCols = states.zipWithIndex.flatMap { case (st, i) =>
       st.map { case (n, e) => e.alias(s"__kg_${i}_$n") } }
     val staged = df.select(allCols: _*)
-    val fine = staged.groupBy(staged.columns.map(graft.ColName.topCol): _*)
-      .agg(count(lit(1)).alias("__kg_n"))
-      .localCheckpoint(true) // the ladder walk probes this tiny table
-    val chosen = states.indices.find { i =>
-      val keys = states(i).map { case (n, _) => col(s"__kg_${i}_$n") }
-      val m = fine.groupBy(keys: _*).agg(sum(col("__kg_n")).alias("__n"))
-        .agg(min(col("__n"))).collect()(0)
-      m.isNullAt(0) || m.getLong(0) >= k // empty corpus: finest state wins
+    // the ladder walk probes this tiny pinned table; the output never
+    // reads it, so the pin is released when the walk ends
+    val chosen = Checkpoints.scoped(df.sparkSession) { cp =>
+      val fine = cp.pin(staged.groupBy(staged.columns.map(graft.ColName.topCol): _*)
+        .agg(count(lit(1)).alias("__kg_n"))).df
+      states.indices.find { i =>
+        val keys = states(i).map { case (n, _) => col(s"__kg_${i}_$n") }
+        val m = fine.groupBy(keys: _*).agg(sum(col("__kg_n")).alias("__n"))
+          .agg(min(col("__n"))).collect()(0)
+        m.isNullAt(0) || m.getLong(0) >= k // empty corpus: finest state wins
+      }
     }
     def release(i: Int, level: Int): DataFrame = df.select(
       keep.map(c => graft.ColName.topCol(c)) ++

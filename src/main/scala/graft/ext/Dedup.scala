@@ -433,8 +433,8 @@ object Dedup {
     * Every node's label converges to the MINIMUM id in its component —
     * the merge map is min-monotone, so the surviving root is exactly the
     * component min. Each round is map-side-combinable shuffles with
-    * `localCheckpoint` lineage cuts + stats resets
-    * ([[org.apache.spark.sql.graftshim.StatsResetShim]]). Throws if
+    * pinned lineage cuts ([[Checkpoints]]; only the returned labels'
+    * blocks outlive the call, on every path). Throws if
     * `maxIter` rounds don't converge — a silently partial clustering
     * would under-merge and leak duplicates.
     *
@@ -484,261 +484,136 @@ object Dedup {
       } else None
     val edgeSrc = probedEdges.getOrElse(
       pairs.select(col(aCol).alias("src"), col(bCol).alias("dst")))
-    val (labels, _) = distributedComponents(edgeSrc, probedEdges, maxIter,
-      contract = true)
-    labels
+    // the loop drops the probe cache once its seeds are pinned; this
+    // covers a failure before that point
+    try distributedComponents(edgeSrc, probedEdges, maxIter)._1
+    finally probedEdges.foreach(_.unpersist(false))
   }
 
-  /** The distributed min-label loop behind [[connectedComponents]],
-    * exposed with its ROUND COUNT and an optional no-contraction mode.
-    * `contract = false` leaves pure one-hop neighbor-min propagation over
-    * the FIXED edge set — convergence degrades from O(log n) to
-    * O(diameter) rounds. Kept ONLY as the bench counter-example
-    * quantifying what graph contraction buys (scale_cc_chain pair;
-    * spec-locked round counts in ExtSpec) — production callers always go
-    * through [[connectedComponents]]. */
+  /** The distributed contraction loop behind [[connectedComponents]],
+    * exposed with its ROUND COUNT (spec-locked in ExtSpec, printed by the
+    * scale_cc_chain bench entry). The propagation-only counter-example it
+    * is measured against lives in [[graft.CounterExamples]]. */
   private[graft] def connectedComponentsCounted(pairs: DataFrame,
-      aCol: String, bCol: String, maxIter: Int,
-      contract: Boolean): (DataFrame, Int) =
+      aCol: String, bCol: String, maxIter: Int): (DataFrame, Int) =
     distributedComponents(
       pairs.select(col(aCol).alias("src"), col(bCol).alias("dst")),
-      None, maxIter, contract)
+      None, maxIter)
 
-  private def distributedComponents(edgeSrc: DataFrame,
-      probedEdges: Option[DataFrame], maxIter: Int,
-      contract: Boolean): (DataFrame, Int) = {
-    val sc = edgeSrc.sparkSession.sparkContext
-    // Each localCheckpoint registers block-manager storage; without eager
-    // release, superseded label frames pile up until driver GC /
-    // ContextCleaner runs — real pressure on large pair graphs near the
-    // round cap. Track the fresh RDDs each checkpoint persists (registry
-    // diff) and unpersist the superseded ones INSIDE the loop, keeping
-    // only sym + the latest labels alive.
-    // `eager = false` MARKS the RDD for local checkpointing but defers
-    // materialization to the caller's own next action — used wherever an
-    // aggregation over the new frame immediately follows, so checkpoint
-    // materialization and the aggregation share ONE job instead of two
-    // (the round-15 job-count cut: on tiny/contracted frames the loop is
-    // scheduling-bound, and each saved job is a saved scheduling floor).
-    // Lazy frames MUST be fully materialized (a full-scan action, not a
-    // limit probe) before any predecessor's blocks are released — a
-    // truncated-lineage predecessor cannot be recomputed.
-    def cpTracked(df: DataFrame, eager: Boolean = true)
-        : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint(eager)
-      val fresh = sc.getPersistentRDDs
-        .collect { case (k, r) if !before.contains(k) => r }.toSeq
-      // localCheckpoint CARRIES the original plan's statistics, and the
-      // size-only visitor multiplies them through every join — in this
-      // iterative loop the per-round products would COMPOUND across
-      // checkpoints until stats estimation itself hangs the driver in
-      // geometric-digit BigInteger multiplication (observed at ~round 10
-      // on a 200k-edge graph; full story in StatsResetShim's scaladoc).
-      // Re-wrap the checkpointed RDD with a stats-free leaf: zero data
-      // movement, bounded stats work per round. (The wrapper scans the
-      // SAME marked RDD, so a lazy checkpoint still materializes-and-
-      // truncates on the wrapper's first action.)
-      (org.apache.spark.sql.graftshim.StatsResetShim.resetStats(out), fresh)
-    }
-    import Checkpoints.release
-    if (contract) {
-      // ---- STAR CONTRACTION (round 13) ----------------------------------
-      // Earlier rounds ran min-label propagation + pointer halving over a
-      // FIXED edge set and claimed O(log diameter). The claim was only
-      // true when ids align with topology (the ordered-chain spec): a
-      // label pointer that lands on a LOCAL min jumps to itself, and on
-      // random-id topologies convergence degrades to O(diameter) —
-      // measured 75 rounds on a 200k-edge critical random graph whose
-      // halving "should" have needed ~8. The fix is to contract the
-      // GRAPH, not just the labels: each round every comp-node merges
-      // into min(self, neighbors) (plus one pointer-halving pass on the
-      // merge map), and the EDGE SET is rewritten through the merge map
-      // (self-loops dropped, dedup). Every non-isolated comp-node merges
-      // with at least one neighbor, so each component's node count at
-      // least halves per round — O(log n) rounds REGARDLESS of id
-      // placement (the Kiveris et al. star-contraction idea), and the
-      // edge frame SHRINKS geometrically, so total work across all
-      // rounds is O(|E|), not O(rounds × |E|). The merge map is
-      // min-monotone (m(a) ≤ a, m(min) = min), so the surviving root of
-      // a component is exactly its minimum id — the same fixed point as
-      // before. Late-round skew (billions of label rows pointing at few
-      // roots) resolves via AQE: the merge map is tiny by then and
-      // broadcasts.
-      // ids BEFORE dropping self-loops: a pure self-loop id still labels
-      // itself (compat with the propagation loop's sym-derived id set)
-      // A lazy checkpoint's materializing RDD.count() RETURNS the frame's
-      // row count — the eager form runs the identical count internally and
-      // throws the value away. Capturing it folds the loop's per-round
-      // edges-exhausted probe (previously a separate limit-1 isEmpty job)
-      // into the materialization action: one fewer job per round and for
-      // the seed (round 16, guide §1.2 — don't compute things twice).
-      // Falls back to a full-scan foreach + isEmpty if the registry diff
-      // ever attributes ≠ 1 fresh RDD to the checkpoint (defensive; the
-      // materialize-before-release invariant holds on both paths).
-      def materializeCount(df: DataFrame,
-                           blocks: Seq[org.apache.spark.rdd.RDD[_]]): Long =
-        blocks match {
-          case Seq(only) => only.count()
-          case many => many.foreach(_.count()); if (df.isEmpty) 0L else 1L
-        }
-      var (labels, labelBlocks) = cpTracked(
-        edgeSrc.select(col("src").alias("id"))
-          .union(edgeSrc.select(col("dst").alias("id"))).distinct()
-          .select(col("id"), col("id").alias("comp")))
-      var (e, eBlocks) = cpTracked(
-        edgeSrc.filter(col("src") =!= col("dst")).distinct(), eager = false)
-      val eRows = materializeCount(e, eBlocks)
-      probedEdges.foreach(_.unpersist(false)) // both seeds checkpointed
-      var i = 0
-      var empty = eRows == 0L
-      while (!empty && i < maxIter) {
-        val symE = e.union(e.select(col("dst").alias("src"), col("src").alias("dst")))
-        val m0 = symE.groupBy(col("src").alias("a"))
-          .agg(min(col("dst")).alias("__mn"))
-          .select(col("a"), least(col("a"), col("__mn")).alias("m"))
-        // FULL path compression of the merge map (m ← m[m] until fixed
-        // point): min(self, neighbors) on an id-ordered path produces one
-        // long pointer CHAIN (m(k) = k-1), and a single halving pass only
-        // shifts it — measured 16 outer rounds on a 33-node chain. Each
-        // compression step is a self-join over the (shrinking) merge map
-        // only, and the step count is log₂ of the longest pointer chain;
-        // afterwards every surviving comp-node is a LOCAL MIN of the
-        // contracted graph, so outer rounds stay logarithmic on every
-        // topology. m is min-monotone (m(m(a)) ≤ m(a)), so the fixed
-        // point is exactly "no row's m changed this step" — counted by a
-        // `__chg` flag that rides the checkpointed frame, summed by the
-        // SAME action that materializes the lazy checkpoint.
-        //
-        // INNER-LOOP JOB PROFILE (a 100 TB operator reading the Spark UI
-        // should expect exactly this): each compression step is ONE job —
-        // a lazy localCheckpoint of the merge map materialized by the
-        // changed-count aggregation over it (round 15; previously an
-        // eager checkpoint plus a separate decimal-sum collect = 2-3
-        // jobs/step, and a baseline sum collect per round on top). The
-        // fixed per-step scheduling cost is dwarfed by edge work at scale
-        // (the map is |V_contracted| rows and shrinks geometrically) but
-        // dominates wall time on tiny graphs, which is precisely why
-        // [[connectedComponents]] sends graphs under `smallGraphEdges` to
-        // the driver union-find fast path instead of here. Step count per
-        // round is log₂ of the longest pointer chain (≤ ~4 in practice);
-        // outer rounds are O(log n). Convergence is observable live: each
-        // outer round logs its compression step count below.
-        var (cl, clBlocks) = cpTracked(m0)
-        var compressed = false
-        var steps = 0
-        while (!compressed) {
-          steps += 1
-          val (nxt, nxtBlocks) = cpTracked(cl.alias("x")
-            .join(cl.select(col("a").alias("a2"), col("m").alias("m2")).alias("y"),
-              col("x.m") === col("y.a2"), "left")
-            .select(col("x.a").alias("a"), coalesce(col("m2"), col("x.m")).alias("m"),
-              (col("m2").isNotNull && col("m2") =!= col("x.m"))
-                .cast("long").alias("__chg")),
-            eager = false)
-          // one action: materializes the checkpoint AND counts changes
-          val changed = Option(nxt.agg(sum(col("__chg"))).collect()(0).get(0))
-            .map(_.asInstanceOf[Long]).getOrElse(0L)
-          compressed = changed == 0L
-          release(clBlocks) // nxt fully materialized by the agg above
-          cl = nxt.select(col("a"), col("m")); clBlocks = nxtBlocks
-        }
-        // relabel the original-id labels through the merge map (isolated
-        // = already-final roots pass through the coalesce)
-        val (newLabels, newLabelBlocks) = cpTracked(labels.alias("l")
-          .join(cl.alias("c"), col("l.comp") === col("c.a"), "left")
-          .select(col("l.id").alias("id"),
-            coalesce(col("c.m"), col("l.comp")).alias("comp")),
-          eager = false)
-        // contract the comp graph through the same map
-        val (newE, newEBlocks) = cpTracked(e.alias("ed")
-          .join(cl.select(col("a").alias("sa"), col("m").alias("sm")),
-            col("ed.src") === col("sa"), "left")
-          .join(cl.select(col("a").alias("da"), col("m").alias("dm")),
-            col("ed.dst") === col("da"), "left")
-          .select(coalesce(col("sm"), col("ed.src")).alias("src"),
-            coalesce(col("dm"), col("ed.dst")).alias("dst"))
-          .filter(col("src") =!= col("dst")).distinct(),
-          eager = false)
-        // The two end-of-round materializations are INDEPENDENT (relabel
-        // reads labels+cl, contract reads e+cl; neither reads the other),
-        // so run them OVERLAPPED (guide §2.6, round 16): both frames are
-        // MARKED lazily above (registration is sequential — the
-        // registry-diff attribution in cpTracked is not safe under
-        // concurrent checkpoint calls), then materialized by one
-        // RDD.count() each from a two-thread pool — the identical action
-        // an eager localCheckpoint runs internally, so lineage truncation
-        // and block persistence are unchanged; wall ≈ max of the two jobs
-        // instead of their sum. Both counts complete before ANY
-        // predecessor block releases below (Overlap.inParallel awaits all
-        // thunks), preserving the materialize-before-release invariant.
-        // The contract side's count doubles as the edges-exhausted probe
-        // (materializeCount above) — no separate isEmpty job per round.
-        val counts = graft.Overlap.inParallel(Seq(
-          () => { newLabelBlocks.foreach(_.count()); -1L },
-          () => materializeCount(newE, newEBlocks)))
-        release(clBlocks)
-        release(labelBlocks)
-        release(eBlocks)
-        labels = newLabels; labelBlocks = newLabelBlocks
-        e = newE; eBlocks = newEBlocks
-        i += 1
-        empty = counts(1) == 0L
-        // one line per outer round (≤ maxIter total): lets an operator
-        // watch convergence on a long-running 100 TB graph without
-        // spelunking the Spark UI. The edge count is the contract side's
-        // materializeCount (0 = converged; 1 stands for "some" when the
-        // checkpoint spans several blocks) — no extra job
-        ccLog.info(s"op=connectedComponents round=$i steps=$steps " +
-          s"edges=${counts(1)} converged=$empty")
-      }
-      release(eBlocks)
-      if (!empty) throw new IllegalStateException(
-        s"connectedComponents did not converge after $maxIter rounds")
-      (labels, i)
-    } else {
-      // ---- PROPAGATION-ONLY COUNTER-EXAMPLE -----------------------------
-      // one-hop neighbor-min propagation over the fixed edge set:
-      // O(diameter) rounds of O(|E|) work each — kept to measure what the
-      // contraction above buys (scale_cc_chain_plain)
-      val (sym, symBlocks) = cpTracked(
-        edgeSrc.union(edgeSrc.select(col("dst").alias("src"), col("src").alias("dst"))))
-      probedEdges.foreach(_.unpersist(false)) // sym is checkpointed
-      var (labels, labelBlocks) = cpTracked(
-        sym.select(col("src").alias("id")).distinct()
-          .select(col("id"), col("id").alias("comp")))
-      // convergence via changed-count: comp values only ever DECREASE, so
-      // the fixed point is "no row's comp changed this round". The flag
-      // rides the lazily-checkpointed frame and its sum is the SAME
-      // action that materializes the checkpoint — one job per round where
-      // the eager-checkpoint + separate sum-collect shape paid two
-      // (round 15; the arm still measures what it exists to measure:
-      // O(diameter) rounds of full-edge-set join work).
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-          .groupBy(sym("src").alias("id")).agg(min(col("comp")).alias("__nbr"))
-        val (propagated, propBlocks) = cpTracked(labels.alias("l")
-          .join(nbrMin.alias("n"), col("l.id") === col("n.id"), "left")
-          .select(col("l.id").alias("id"),
-            least(col("l.comp"), coalesce(col("__nbr"), col("l.comp"))).alias("comp"),
-            (col("__nbr").isNotNull && col("__nbr") < col("l.comp"))
+  private def distributedComponents(edgeSrc: DataFrame, probedEdges: Option[DataFrame],
+      maxIter: Int): (DataFrame, Int) = Checkpoints.scoped(edgeSrc.sparkSession) { cp =>
+    // Every generation is a pin; a superseded one is released INSIDE the
+    // loop once its successor has materialized, so only the latest
+    // labels, edges and merge map are alive — not every generation until
+    // GC. `eager = false` defers materialization to the next action over
+    // the frame, so materialization and an aggregation share ONE job
+    // (round 15: on tiny/contracted frames the loop is scheduling-bound).
+    // Star contraction (round 13) rewrites the EDGE SET through the merge
+    // map each round, not just the labels: label-only pointer halving
+    // degraded to O(diameter) on random-id topologies (75 rounds on a
+    // 200k-edge graph). Late-round skew (many labels on few roots)
+    // resolves via AQE: the merge map is tiny by then and broadcasts.
+    // ids BEFORE dropping self-loops: a pure self-loop id still labels
+    // itself (compat with the propagation loop's sym-derived id set)
+    var labels = cp.pin(
+      edgeSrc.select(col("src").alias("id"))
+        .union(edgeSrc.select(col("dst").alias("id"))).distinct()
+        .select(col("id"), col("id").alias("comp")))
+    // the edge seed's materializing count doubles as the edges-exhausted
+    // probe (Pin.materialize; round 16, guide §1.2 — don't compute
+    // things twice)
+    var e = cp.pin(edgeSrc.filter(col("src") =!= col("dst")).distinct(),
+      eager = false)
+    val eRows = e.materialize()
+    probedEdges.foreach(_.unpersist(false)) // both seeds pinned
+    var i = 0
+    var empty = eRows == 0L
+    while (!empty && i < maxIter) {
+      val symE = e.df.union(e.df.select(col("dst").alias("src"), col("src").alias("dst")))
+      val m0 = symE.groupBy(col("src").alias("a"))
+        .agg(min(col("dst")).alias("__mn"))
+        .select(col("a"), least(col("a"), col("__mn")).alias("m"))
+      // FULL path compression of the merge map (m ← m[m] until fixed
+      // point): min(self, neighbors) on an id-ordered path produces one
+      // long pointer CHAIN (m(k) = k-1), and a single halving pass only
+      // shifts it — measured 16 outer rounds on a 33-node chain. Each
+      // compression step is a self-join over the (shrinking) merge map
+      // only, and the step count is log₂ of the longest pointer chain;
+      // afterwards every surviving comp-node is a LOCAL MIN of the
+      // contracted graph, so outer rounds stay logarithmic on every
+      // topology. m is min-monotone (m(m(a)) ≤ m(a)), so the fixed
+      // point is exactly "no row's m changed this step" — counted by a
+      // `__chg` flag that rides the pinned frame, summed by the SAME
+      // action that materializes the lazy pin.
+      //
+      // INNER-LOOP JOB PROFILE (what the Spark UI shows): each
+      // compression step is ONE job — a lazy pin of the merge map
+      // materialized by the changed-count aggregation over it. The
+      // per-step scheduling floor is dwarfed by edge work at scale but
+      // dominates tiny graphs, which is why graphs under
+      // `smallGraphEdges` take the driver union-find instead. Each outer
+      // round logs its step count below.
+      var cl = cp.pin(m0)
+      var compressed = false
+      var steps = 0
+      while (!compressed) {
+        steps += 1
+        val nxt = cp.pin(cl.df.alias("x")
+          .join(cl.df.select(col("a").alias("a2"), col("m").alias("m2")).alias("y"),
+            col("x.m") === col("y.a2"), "left")
+          .select(col("x.a").alias("a"), coalesce(col("m2"), col("x.m")).alias("m"),
+            (col("m2").isNotNull && col("m2") =!= col("x.m"))
               .cast("long").alias("__chg")),
           eager = false)
-        val changed = Option(propagated.agg(sum(col("__chg"))).collect()(0).get(0))
+        // one action: materializes the pin AND counts changes
+        val changed = Option(nxt.df.agg(sum(col("__chg"))).collect()(0).get(0))
           .map(_.asInstanceOf[Long]).getOrElse(0L)
-        converged = changed == 0L
-        release(labelBlocks) // propagated fully materialized by the agg
-        labels = propagated.select(col("id"), col("comp"))
-        labelBlocks = propBlocks
-        i += 1
+        compressed = changed == 0L
+        cp.release(cl) // nxt fully materialized by the agg above
+        cl = nxt.map(_.select(col("a"), col("m")))
       }
-      release(symBlocks)
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents did not converge after $maxIter rounds")
-      (labels, i)
+      // relabel the original-id labels through the merge map (isolated
+      // = already-final roots pass through the coalesce)
+      val newLabels = cp.pin(labels.df.alias("l")
+        .join(cl.df.alias("c"), col("l.comp") === col("c.a"), "left")
+        .select(col("l.id").alias("id"),
+          coalesce(col("c.m"), col("l.comp")).alias("comp")),
+        eager = false)
+      // contract the comp graph through the same map
+      val newE = cp.pin(e.df.alias("ed")
+        .join(cl.df.select(col("a").alias("sa"), col("m").alias("sm")),
+          col("ed.src") === col("sa"), "left")
+        .join(cl.df.select(col("a").alias("da"), col("m").alias("dm")),
+          col("ed.dst") === col("da"), "left")
+        .select(coalesce(col("sm"), col("ed.src")).alias("src"),
+          coalesce(col("dm"), col("ed.dst")).alias("dst"))
+        .filter(col("src") =!= col("dst")).distinct(),
+        eager = false)
+      // The two end-of-round materializations are INDEPENDENT (relabel
+      // reads labels+cl, contract reads e+cl), so they run OVERLAPPED
+      // (round 16): pinned lazily on this thread above, materialized from
+      // a two-thread pool — wall ≈ max of the two jobs, not their sum.
+      // Overlap.inParallel awaits both before the releases below
+      // (materialize-before-release). The contract side's count doubles
+      // as the edges-exhausted probe.
+      val counts = graft.Overlap.inParallel(Seq(
+        () => newLabels.materialize(), () => newE.materialize()))
+      cp.release(cl)
+      cp.release(labels)
+      cp.release(e)
+      labels = newLabels
+      e = newE
+      i += 1
+      empty = counts(1) == 0L
+      // one line per outer round: convergence is watchable on a
+      // long-running graph at no extra job (edges: 0 = converged; 1
+      // stands for "some" when the pin spans several RDDs)
+      ccLog.info(s"op=connectedComponents round=$i steps=$steps " +
+        s"edges=${counts(1)} converged=$empty")
     }
+    if (!empty) throw new IllegalStateException(
+      s"connectedComponents did not converge after $maxIter rounds")
+    (cp.keep(labels), i)
   }
 
   /** Driver-side union-find with path compression + union by minimum:

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
-import Checkpoints.release
 
 /**
  * Graph analytics over relational co-occurrence graphs — the
@@ -21,8 +20,11 @@ import Checkpoints.release
  * O(m^1.5) — the standard degree-ordering trick. A plain id-canonical
  * `a < b` orientation does NOT have this property: a hub with a small
  * id keeps ~its full degree as out-neighbors and fans out deg(hub)²
- * (kept here only as the bench counter-example,
- * [[triangleStatsIdOriented]]).
+ * (measured as the bench counter-example
+ * [[graft.CounterExamples.triangleStatsIdOriented]]).
+ *
+ * The operators that pin go through [[Checkpoints]] and follow its one
+ * block-lifetime rule.
  */
 object Graph {
 
@@ -81,75 +83,33 @@ object Graph {
     * (between the two wedge tips x ≺ z, the oriented edge — if present —
     * is x→z by construction). Two degree equi-joins + one wedge join +
     * one probe join, all partial-aggregation-free equi-joins. */
-  def triangleStats(edges: DataFrame): DataFrame = {
-    // pin the CANONICAL EDGE LIST once (round 15): it feeds the degree
-    // aggregation + orientation joins AND both statsRow counts — without
-    // the cut, nNodes and nEdges each re-ran the whole upstream edge
-    // derivation (for q_triangle_count: lineitem scan → co-occurrence
-    // self-join → distinct, three full times per call).
-    // Releases sit in try/finally (round 16, ADVICE r15): a task failure
-    // surfacing from any count would otherwise leak the pinned blocks for
-    // the session — the exact cross-repeat accumulation the eager release
-    // exists to prevent, just on the failure path. Every output of
-    // statsRow is a collected driver long, so nothing the caller receives
-    // depends on the pinned blocks.
-    val (e, eBlocks) = cpTracked(edges)
-    try {
+  def triangleStats(edges: DataFrame): DataFrame =
+    Checkpoints.scoped(edges.sparkSession) { cp =>
+      // pin the CANONICAL EDGE LIST once (round 15): it feeds the degree
+      // aggregation + orientation joins AND both statsRow counts — without
+      // the cut, nNodes and nEdges each re-ran the whole upstream edge
+      // derivation (for q_triangle_count: lineitem scan → co-occurrence
+      // self-join → distinct, three full times per call). Every output of
+      // statsRow is a collected driver long, so no pin outlives the call.
+      // Both pins carry their statistics: nothing here iterates, and the
+      // degree, wedge and closing joins broadcast from them.
+      val e = cp.pin(edges, carryStats = true).df
       // the oriented list feeds BOTH wedge sides and the closing probe —
-      // pin it once (eager localCheckpoint) so the degree aggregation +
-      // orientation joins run once, not three times
-      val (o, oBlocks) = cpTracked(orientByDegree(e))
-      val nTri = try {
-        val e1 = o.select(col("src"), col("dst").alias("x"), col("dst_deg").alias("__dx"))
-        val e2 = o.select(col("src"), col("dst").alias("z"), col("dst_deg").alias("__dz"))
-        // each unordered out-pair once: tips ordered by the same (deg, id) key
-        val wedges = e1.join(e2, "src")
-          .filter(struct(col("__dx"), col("x")) < struct(col("__dz"), col("z")))
-        val closing = o.select(col("src").alias("x"), col("dst").alias("z"))
-        wedges.join(closing, Seq("x", "z")).count()
-      } finally release(oBlocks) // the wedge count was the last consumer of o
+      // pin it once so the degree aggregation + orientation joins run
+      // once, not three times
+      val o = cp.pin(orientByDegree(e), carryStats = true)
+      val e1 = o.df.select(col("src"), col("dst").alias("x"), col("dst_deg").alias("__dx"))
+      val e2 = o.df.select(col("src"), col("dst").alias("z"), col("dst_deg").alias("__dz"))
+      // each unordered out-pair once: tips ordered by the same (deg, id) key
+      val wedges = e1.join(e2, "src")
+        .filter(struct(col("__dx"), col("x")) < struct(col("__dz"), col("z")))
+      val closing = o.df.select(col("src").alias("x"), col("dst").alias("z"))
+      val nTri = wedges.join(closing, Seq("x", "z")).count()
+      cp.release(o) // the wedge count was the last consumer of o
       statsRow(e, nTri)
-    } finally release(eBlocks)
-  }
+    }
 
-  /** The naive id-canonical wedge join (`a < b < c`). Correct, but the
-    * wedge fan-out is bounded only by deg(hub)² — a hub with a small id
-    * keeps its whole adjacency as out-edges. Kept as the bench
-    * counter-example for [[triangleStats]]'s degree ordering
-    * (scale_triangle_hub_plain vs _ordered); not for production graphs. */
-  private[graft] def triangleStatsIdOriented(edges: DataFrame): DataFrame = {
-    // same edge-list pin as [[triangleStats]] (round 15), so the
-    // counter-example pair isolates the WEDGE FAN-OUT difference —
-    // without it this arm also re-derived the edges three times and the
-    // plain-vs-ordered ratio partly measured edge recompute, not the
-    // hub-quadratic wedge join it exists to demonstrate. try/finally for
-    // the same failure-path reason as [[triangleStats]] (round 16).
-    val (e, eBlocks) = cpTracked(edges)
-    try {
-      val e1 = e.select(col("a").alias("x"), col("b").alias("y"))
-      val e2 = e.select(col("a").alias("y"), col("b").alias("z"))
-      val e3 = e.select(col("a").alias("x"), col("b").alias("z"))
-      val triangles = e1.join(e2, "y").join(e3, Seq("x", "z"))
-      statsRow(e, triangles.count())
-    } finally release(eBlocks) // all outputs are collected driver longs
-  }
-
-  /** Eager localCheckpoint with the persisted-RDD registry diff, so the
-    * caller can RELEASE the pinned blocks once every consumer has run —
-    * Dataset.unpersist() targets the CacheManager, not checkpoint blocks
-    * (the [[graft.ext.Dedup]] loop's cpTracked idiom, minus the stats
-    * reset this non-iterative path doesn't need). */
-  private def cpTracked(df: DataFrame)
-      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(true)
-    val fresh = sc.getPersistentRDDs
-      .collect { case (k, r) if !before.contains(k) => r }.toSeq
-    (out, fresh)
-  }
-
-  private def statsRow(edges: DataFrame, nTri: Long): DataFrame = {
+  private[graft] def statsRow(edges: DataFrame, nTri: Long): DataFrame = {
     val nNodes = edges.select(col("a").alias("n"))
       .union(edges.select(col("b").alias("n"))).distinct().count()
     val nEdges = edges.count()
@@ -184,69 +144,61 @@ object Graph {
    * differs across engines at ~1e-14 relative); 6-dp rounding on values
    * of magnitude ≥ (1−d)/N leaves orders of magnitude of slack.
    *
-   * Block lifetime (round 16): the returned frame still references the
-   * pinned `sym`/`degN` checkpoint blocks LAZILY (every round joins
-   * `sym`, and the final round is usually uncheckpointed), so this call
-   * cannot release them — the CALLER owns their lifetime: they are freed
-   * by driver GC / ContextCleaner once the returned frame (and anything
-   * derived from it) is unreachable. Superseded PERIODIC rank
-   * checkpoints, by contrast, are released inside the loop the moment
-   * the next eager checkpoint has materialized — deep runs hold at most
-   * one rank generation plus sym/degN, never `iterations/checkpointEvery`
-   * generations.
+   * Block lifetime: the rule in [[Checkpoints]]. The returned frame reads
+   * `sym`, `degN` and the latest periodic rank pin, so those are kept;
+   * superseded rank pins are released inside the loop.
    */
   def pageRank(edges: DataFrame, iterations: Int = 5,
                damping: Double = 0.85, checkpointEvery: Int = 8): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(checkpointEvery >= 1,
       s"checkpointEvery must be >= 1, got $checkpointEvery")
-    val spark = edges.sparkSession
-    val sym = edges.select(col("a").alias("src"), col("b").alias("dst"))
-      .union(edges.select(col("b").alias("src"), col("a").alias("dst")))
-      .localCheckpoint(true)
-    // the degree table doubles as the node list (canonical edges → every
-    // node has deg >= 1), and `deg` RIDES the rank table through the loop
-    // (round 15): the old shape joined rank ⋈ deg ⋈ sym every round —
-    // carrying deg in rank removes one equi-join per iteration, and the
-    // separate `nodes` checkpoint (+ its count job) collapses into degN
-    val degN = sym.groupBy(col("src")).agg(count(lit(1)).alias("deg"))
-      .localCheckpoint(true)
-    val n = degN.count()
-    val teleport = (1.0 - damping) / n
-    var rank = degN.select(col("src").alias("node"),
-      lit(1.0 / n).alias("r"), col("deg"))
-    var rankBlocks: Seq[org.apache.spark.rdd.RDD[_]] = Nil
-    for (i <- 1 to iterations) {
-      val contribs = rank.alias("__r")
-        .join(sym.alias("__s"), col("__r.node") === col("__s.src"))
-        .select(col("__s.dst").alias("node"),
-          (col("__r.r") / col("__r.deg")).alias("c"))
-        .groupBy("node").agg(sum("c").alias("in_sum"))
-      rank = degN.alias("__n")
-        .join(contribs.alias("__c"), col("__n.src") === col("__c.node"), "left")
-        .select(col("__n.src").alias("node"),
-          (lit(teleport) + lit(damping) * coalesce(col("__c.in_sum"), lit(0.0)))
-            .alias("r"), col("__n.deg").alias("deg"))
-      // rank is referenced ONCE per round, so lineage grows LINEARLY —
-      // unlike hopDistances' twice-referenced dist there is no
-      // exponential-plan hazard, and a shallow power-iteration run is
-      // one lazy query instead of `iterations` eager checkpoint jobs
-      // (round 15: q_pagerank ran 5 materialization jobs per call for a
-      // 5-round plan the analyzer handles trivially). Deep runs still
-      // cut lineage every `checkpointEvery` rounds so analyzer cost and
-      // recompute-on-eviction stay bounded.
-      if (i % checkpointEvery == 0 && i < iterations) {
-        val (cp, fresh) = cpTracked(rank)
-        // the new checkpoint is eager-materialized, so the PREVIOUS
-        // periodic generation's blocks are superseded — release them now
-        // instead of holding every generation until GC (round 16). The
-        // LAST generation is never released here: the returned frame may
-        // read it (caller-owned, see scaladoc).
-        release(rankBlocks)
-        rank = cp; rankBlocks = fresh
+    Checkpoints.scoped(edges.sparkSession) { cp =>
+      val sym = cp.keep(cp.pin(
+        edges.select(col("a").alias("src"), col("b").alias("dst"))
+          .union(edges.select(col("b").alias("src"), col("a").alias("dst")))))
+      // the degree table doubles as the node list (canonical edges → every
+      // node has deg >= 1), and `deg` RIDES the rank table through the loop
+      // (round 15): the old shape joined rank ⋈ deg ⋈ sym every round —
+      // carrying deg in rank removes one equi-join per iteration, and the
+      // separate `nodes` checkpoint (+ its count job) collapses into degN
+      val degN = cp.keep(cp.pin(
+        sym.groupBy(col("src")).agg(count(lit(1)).alias("deg"))))
+      val n = degN.count()
+      val teleport = (1.0 - damping) / n
+      var rank = degN.select(col("src").alias("node"),
+        lit(1.0 / n).alias("r"), col("deg"))
+      var rankPin: Option[Checkpoints.Pin] = None
+      for (i <- 1 to iterations) {
+        val contribs = rank.alias("__r")
+          .join(sym.alias("__s"), col("__r.node") === col("__s.src"))
+          .select(col("__s.dst").alias("node"),
+            (col("__r.r") / col("__r.deg")).alias("c"))
+          .groupBy("node").agg(sum("c").alias("in_sum"))
+        rank = degN.alias("__n")
+          .join(contribs.alias("__c"), col("__n.src") === col("__c.node"), "left")
+          .select(col("__n.src").alias("node"),
+            (lit(teleport) + lit(damping) * coalesce(col("__c.in_sum"), lit(0.0)))
+              .alias("r"), col("__n.deg").alias("deg"))
+        // rank is referenced ONCE per round, so lineage grows LINEARLY —
+        // unlike hopDistances' twice-referenced dist there is no
+        // exponential-plan hazard, and a shallow power-iteration run is
+        // one lazy query instead of `iterations` eager checkpoint jobs
+        // (round 15: q_pagerank ran 5 materialization jobs per call for a
+        // 5-round plan the analyzer handles trivially). Deep runs still
+        // cut lineage every `checkpointEvery` rounds so analyzer cost and
+        // recompute-on-eviction stay bounded.
+        if (i % checkpointEvery == 0 && i < iterations) {
+          val p = cp.pin(rank)
+          // p is eager-materialized: the previous generation is superseded
+          rankPin.foreach(cp.release)
+          rankPin = Some(p)
+          rank = p.df
+        }
       }
+      rankPin.foreach(cp.keep) // the returned frame reads the latest one
+      rank.select(col("node"), round(col("r"), 6).alias("rank"))
     }
-    rank.select(col("node"), round(col("r"), 6).alias("rank"))
   }
 
   /**
@@ -262,45 +214,40 @@ object Graph {
    * already-settled nodes is harmless — no frontier bookkeeping needed
    * at these hop counts.
    *
-   * Block lifetime (round 16): each round's eager checkpoint supersedes
-   * the previous round's distance blocks, which are released immediately
-   * (previously every generation leaked until GC/ContextCleaner), and
-   * `sym` is released before return — the final distance table is itself
-   * a checkpoint, so the returned frame reads nothing upstream of it.
-   * Only the FINAL generation's blocks survive the call (caller-owned:
-   * freed by GC once the returned frame is unreachable).
+   * Block lifetime: the rule in [[Checkpoints]]. The returned frame is the
+   * final distance pin, so only that one is kept.
    */
   def hopDistances(edges: DataFrame, seeds: Seq[Long], maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val spark = edges.sparkSession
     import spark.implicits._
-    // eager localCheckpoint per round: each round references the
-    // previous distance table TWICE (relax source + union), so without
-    // a lineage cut the logical plan doubles every round and the
-    // analyzer cost goes exponential (the same hazard the connected-
-    // components loop guards against). Checkpoint blocks also make the
-    // cache releases below safe — no recompute chain survives.
-    val (sym, symBlocks) = cpTracked(
-      edges.select(col("a").alias("src"), col("b").alias("dst"))
-        .union(edges.select(col("b").alias("src"), col("a").alias("dst"))))
-    try {
-      var (dist, distBlocks) = cpTracked(
-        seeds.toDF("node").select(col("node"), lit(0L).alias("dist")))
-      for (_ <- 1 to maxHops) {
-        // string-qualified aliases: `dist` already derives from `sym`
-        // after round 1, so df(col) references would be an ambiguous
-        // self-join
-        val next = dist.alias("__d")
+    // a pin per round: each round references the previous distance
+    // table TWICE (relax source + union), so without a lineage cut the
+    // logical plan doubles every round and the analyzer cost goes
+    // exponential (the same hazard the connected-components loop guards
+    // against). The cut also makes the releases below safe — no
+    // recompute chain survives.
+    Checkpoints.scoped(spark) { cp =>
+      // lazy: round 1's pin materializes sym inside its own job
+      val sym = cp.pin(
+        edges.select(col("a").alias("src"), col("b").alias("dst"))
+          .union(edges.select(col("b").alias("src"), col("a").alias("dst"))),
+        eager = false).df
+      // the seed table is a local relation: nothing to cut, and its
+      // statistics let round 1 broadcast it
+      val seedDist = seeds.toDF("node").select(col("node"), lit(0L).alias("dist"))
+      (1 to maxHops).foldLeft(Option.empty[Checkpoints.Pin]) { (dist, _) =>
+        val d = dist.fold(seedDist)(_.df)
+        // string-qualified aliases: `d` already derives from `sym` after
+        // round 1, so df(col) references would be an ambiguous self-join
+        val next = d.alias("__d")
           .join(sym.alias("__s"), col("__d.node") === col("__s.src"))
           .select(col("__s.dst").alias("node"),
             (col("__d.dist") + 1L).alias("dist"))
-        val (nd, ndBlocks) = cpTracked(dist.union(next)
-          .groupBy("node").agg(min("dist").alias("dist")))
-        // nd is eager-materialized — the previous generation is superseded
-        release(distBlocks)
-        dist = nd; distBlocks = ndBlocks
-      }
-      dist
-    } finally release(symBlocks)
+        val nd = cp.pin(d.union(next).groupBy("node").agg(min("dist").alias("dist")))
+        dist.foreach(cp.release) // nd is eager-materialized: dist is superseded
+        Some(nd)
+      }.fold(seedDist)(cp.keep)
+    }
   }
 }

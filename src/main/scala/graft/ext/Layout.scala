@@ -177,18 +177,19 @@ object Layout {
             else df.sparkSession.sessionState.conf.numShufflePartitions
     val keys = sortCols.map(graft.ColName.topCol)
     import org.apache.spark.sql.expressions.Window
-    // localCheckpoint: the id column is consumed by TWO subtrees (the
-    // offsets aggregation and the final join). Without a lineage pin,
-    // each subtree could re-execute the range shuffle with its own
-    // boundary sample and disagree on partition membership — offsets
-    // from one partitioning applied to ranks from another. Materializing
-    // once makes the nondeterministic id a fact, not a recipe (the
-    // Dedup/kGeneralize idiom); cost class = one extra corpus write to
-    // executor-local storage, same as a shuffle spill.
-    val tagged = df.repartitionByRange(n, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .withColumn("__gri_mid", monotonically_increasing_id())
-      .localCheckpoint()
+    // pin: the id column is consumed by TWO subtrees (the offsets
+    // aggregation and the final join). Without a lineage pin, each
+    // subtree could re-execute the range shuffle with its own boundary
+    // sample and disagree on partition membership — offsets from one
+    // partitioning applied to ranks from another. Materializing once
+    // makes the nondeterministic id a fact, not a recipe; cost class =
+    // one extra corpus write to executor-local storage. The output
+    // reads the pin, so it is kept.
+    val tagged = Checkpoints.scoped(df.sparkSession) { cp =>
+      cp.keep(cp.pin(df.repartitionByRange(n, keys: _*)
+        .sortWithinPartitions(keys: _*)
+        .withColumn("__gri_mid", monotonically_increasing_id())))
+    }
     val pidOf = shiftright(col("__gri_mid"), 33)
     val localOf = col("__gri_mid").bitwiseAND(lit((1L << 33) - 1))
     // offsets table: ≤ n pre-aggregated rows — the one unpartitioned

@@ -283,23 +283,25 @@ object Similarity {
           if (sampled.count() < 4L * nlist) corpus else sampled
         }
       }
-    var cents = train.orderBy(col(idCol).asc).limit(nlist)
+    val seeds = train.orderBy(col(idCol).asc).limit(nlist)
       .select(col(idCol).alias("cent_id"), col(vecCol).alias("cent_vec"))
-    (0 until iters).foreach { _ =>
-      val assigned = nearestCentroid(sp, train, idCol, vecCol, cents)
-      cents = assigned
-        .select(col("cent_id"), posexplode(col(vecCol)).as(Seq("__pos", "__v")))
-        .groupBy(col("cent_id"), col("__pos"))
-        .agg(avg(col("__v")).alias("__m"))
-        .groupBy(col("cent_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("__pos"), col("__m")))),
-          x => x.getField("__m")).alias("cent_vec"))
-        // truncate lineage: without this, iteration i's broadcast re-runs
-        // all prior iterations' crossJoins (O(iters²) corpus scans)
-        .localCheckpoint()
+    // pin each generation: without the lineage cut, iteration i's
+    // broadcast re-runs all prior iterations' crossJoins (O(iters²)
+    // corpus scans); the returned frame keeps only the last pin
+    Checkpoints.scoped(sp) { cp =>
+      (0 until iters).foldLeft(Option.empty[Checkpoints.Pin]) { (cents, _) =>
+        val next = cp.pin(nearestCentroid(sp, train, idCol, vecCol, cents.fold(seeds)(_.df))
+          .select(col("cent_id"), posexplode(col(vecCol)).as(Seq("__pos", "__v")))
+          .groupBy(col("cent_id"), col("__pos"))
+          .agg(avg(col("__v")).alias("__m"))
+          .groupBy(col("cent_id"))
+          .agg(transform(
+            array_sort(collect_list(struct(col("__pos"), col("__m")))),
+            x => x.getField("__m")).alias("cent_vec")))
+        cents.foreach(cp.release) // next is eager-materialized
+        Some(next)
+      }.fold(seeds)(cp.keep)
     }
-    cents
   }
 
   /** Argmax centroid per vector as a map-side-combinable aggregate:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, classic}
 
 /**
  * The one place this repo reaches into a `private[sql]` Spark API, and
- * why it must: Spark 4's `Dataset.localCheckpoint` carries the ORIGINAL
+ * why it must: a Spark 4 Dataset's local checkpoint carries the ORIGINAL
  * plan's statistics onto the checkpointed `LogicalRDD`
  * (`LogicalRDD.rewriteStatsAndConstraints`, ExistingRDD.scala:263), and
  * the size-only stats visitor estimates a join as the PRODUCT of its

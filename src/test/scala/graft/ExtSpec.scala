@@ -452,9 +452,9 @@ class ExtSpec extends SparkSpec {
     val chain = spark.range(32).select(col("id").alias("id_a"),
       (col("id") + 1).alias("id_b"))
     val (contracted, cr) = Dedup.connectedComponentsCounted(
-      chain, "id_a", "id_b", maxIter = 25, contract = true)
-    val (plain, pr) = Dedup.connectedComponentsCounted(
-      chain, "id_a", "id_b", maxIter = 80, contract = false)
+      chain, "id_a", "id_b", maxIter = 25)
+    val (plain, pr) = CounterExamples.propagationComponents(
+      chain, "id_a", "id_b", maxIter = 80)
     // contraction: component node count at least halves per round
     assert(cr <= 7, s"contraction took $cr rounds on a 33-node chain")
     // plain: the min travels one hop per round — the O(diameter) cost
@@ -483,7 +483,7 @@ class ExtSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("a", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.LongType))))
     val (labels, rounds) = Dedup.connectedComponentsCounted(
-      df, "a", "b", maxIter = 25, contract = true)
+      df, "a", "b", maxIter = 25)
     assert(rounds <= 10, s"contraction took $rounds rounds on a " +
       "permuted 200-node path (log2(200) ≈ 7.6)")
     val m = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -111,13 +111,11 @@ class BpeSpec extends SparkSpec {
       (3L, "the theme there then"),
       (4L, "low low low lower newest newest")).toDF("doc_id", "text")
     val merges = Bpe.trainMergesSeq(docs, "text", 12).map(x => (x._2, x._3))
-    def result(strategy: String): Map[Long, (Long, Long)] =
-      Bpe.encodeCounts(docs, "doc_id", "text", merges, strategy)
-        .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    val fold = result("fold")
-    val rank = result("rankmap")
+    def result(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
+      df.as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val fold = result(graft.CounterExamples.foldedEncodeCounts(docs, "doc_id", "text", merges))
+    val rank = result(Bpe.encodeCounts(docs, "doc_id", "text", merges))
     assert(fold == rank, s"\nfold:    $fold\nrankmap: $rank")
-    assert(result("auto") == rank) // auto IS the rankmap path
     // word-level gate, stronger than the count equality: the two apply
     // strategies must produce the SAME symbol sequence per word
     val rm: scala.collection.Map[(String, String), Int] = merges.zipWithIndex.toMap
@@ -170,12 +168,12 @@ class BpeSpec extends SparkSpec {
     val alpha = ('a' to 'z').map(_.toString) ++ ('0' to '9').map(_.toString)
     val merges = (for (l <- alpha; r <- alpha) yield (l, r)).take(128)
     val e = intercept[Throwable] {
-      Bpe.encodeCounts(docs, "doc_id", "text", merges, "fold").collect()
+      graft.CounterExamples.foldedEncodeCounts(docs, "doc_id", "text", merges).collect()
     }
     assert(Option(e.getMessage).getOrElse("").contains("Max iterations"),
       s"expected analyzer max-iterations failure, got: $e")
     // and the SAME table through the rankmap path is fine
-    val ok = Bpe.encodeCounts(docs, "doc_id", "text", merges, "rankmap")
+    val ok = Bpe.encodeCounts(docs, "doc_id", "text", merges)
       .as[(Long, Long, Long)].collect()
     assert(ok.length == 1 && ok(0)._2 == 3L)
   }

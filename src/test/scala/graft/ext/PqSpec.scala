@@ -94,8 +94,7 @@ class PqSpec extends SparkSpec {
     assert(ties.select("fast").as[Seq[Int]].collect().forall(_.forall(_ == 0)))
   }
 
-  test("ivfTopKPq at nprobe = nlist equals flat pqTopK (total probed set); " +
-    "persisted index serves identically") {
+  test("ivfTopK(Pq) at nprobe = nlist equals flat pqTopK; the persisted index serves it") {
     // genuinely lossy regime: 60 vectors against ksub=8 codes — the
     // equality is between the two PQ paths (flat scan vs coded inverted
     // file), NOT against brute force, so it pins probe + LUT + ADC

@@ -97,8 +97,7 @@ class Sq8Spec extends SparkSpec {
     assertSameRows(got, want)
   }
 
-  test("ivfTopKSq8 at nprobe = nlist equals flat sq8TopK (total probed " +
-    "union); persisted index serves the identical ranking") {
+  test("ivfTopK(Sq8) at nprobe = nlist equals flat sq8TopK; the persisted index serves it") {
     val rnd = new scala.util.Random(7)
     val corpus = (0L until 300L).map(i =>
       (i, Array.fill(16)(rnd.nextFloat() * 2 - 1))).toDF("vec_id", "embedding")

@@ -15,13 +15,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *
  * or `SparkSession.builder().withExtensions(new GraftExtensions())` — and
  * the functions resolve in pure SQL (`SELECT simhash64(tokens) ...`) on
- * every session of the cluster, with no imperative `register` call.
+ * every session of the cluster.
  *
- * The imperative per-session registration in each function's companion
- * (`SimHash.register(spark)` etc., used by the Column APIs) remains — the
- * two paths are idempotent with each other: `injectFunction` seeds the
- * session registry at build time and `createOrReplaceTempFunction`
- * overwrites with the identical builder at first Column-API use.
+ * [[GraftExtensions.injected]] is the one SQL name table. The Column APIs
+ * (`SimHash.simhash64`, `DotProduct.dot`, ...) do not go through it: they
+ * build the same expressions directly, so they need no session, never
+ * write the function registry, and work whether or not the extension is
+ * installed.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -29,41 +29,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-
-  /** Per-registry record of the names GRAFT itself registered, keyed
-    * weakly on the registry instance so dropped sessions don't leak.
-    * Guards [[ensureRegistered]]: a name is skipped only when *we*
-    * already put graft's builder in THIS registry — a user- or
-    * SQL-registered temp function with the same name is replaced, not
-    * silently allowed to shadow the Column API. */
-  private val registered =
-    new java.util.WeakHashMap[AnyRef, scala.collection.mutable.Set[String]]()
-
-  /** Idempotent imperative registration for the Column APIs: registers
-    * `name` unless graft already registered it in this session's
-    * registry. Repeated Column-API calls previously re-registered
-    * unconditionally, and `createOrReplaceTempFunction` logs one
-    * `SimpleFunctionRegistry ... replaced` WARN per replacement — at
-    * bench scale (hundreds of calls) those warnings dominated the
-    * captured driver log. A bare functionExists check traded the spam
-    * for a shadowing hazard (any pre-existing same-name function,
-    * graft's or not, suppressed registration); tracking our own
-    * registrations per registry instance removes both. */
-  private[graft] def ensureRegistered(
-      spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val mine = registered.synchronized {
-      var s = registered.get(reg)
-      if (s == null) { s = scala.collection.mutable.Set.empty[String]; registered.put(reg, s) }
-      s
-    }
-    val needs = mine.synchronized { !mine.contains(name) }
-    if (needs) {
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-      mine.synchronized { mine += name; () }
-    }
-  }
 
   private def fn(name: String, arity: Int)(builder: Seq[Expression] => Expression)
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
@@ -84,5 +49,8 @@ object GraftExtensions {
     fn("minhash_sig", 2)(exprs => functions.MinHashSignature(exprs(0), exprs(1))),
     fn("top_k_by_score", 3)(exprs => functions.TopKByScore(exprs(0), exprs(1), exprs(2))),
     fn("misra_gries", 2)(exprs => functions.MisraGriesSketch(exprs(0), exprs(1))),
-    fn("pq_encode", 4)(exprs => functions.PqEncode.fromExprs(exprs)))
+    fn("pq_encode", 4)(exprs => functions.PqEncode.fromExprs(exprs)),
+    fn("sq8_encode", 1)(exprs => functions.Sq8Encode(exprs.head)),
+    fn("sq8_decode", 1)(exprs => functions.Sq8Decode(exprs.head)),
+    fn("mad_stats", 2)(exprs => functions.MadStats(exprs(0), exprs(1))))
 }

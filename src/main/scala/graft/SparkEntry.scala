@@ -1028,7 +1028,7 @@ object SparkEntry {
       // sum by ~2^40 + digest and fails the value compare — no literal
       // constant left on the oracle side.
       d.select(col("doc_id"),
-          graft.functions.SimHash.simhash64(s, toks).alias("sh_expr"), hofVal.alias("sh_hof"),
+          graft.functions.SimHash.simhash64(toks).alias("sh_expr"), hofVal.alias("sh_hof"),
           TextAnalysis.rollingHash(col("text")).alias("rolling_hash"),
           TextAnalysis.fingerprint(col("text")).alias("fp"))
         .agg(count(lit(1)).alias("n_docs"),
@@ -1071,7 +1071,7 @@ object SparkEntry {
       val e = table(s, dir, "embeddings")
       Similarity.sq8Compress(e, "vec_id", "embedding")
         .select(col("vec_id"),
-          graft.functions.Sq8.decode(s, col("sq8")).alias("__d"))
+          graft.functions.Sq8.decode(col("sq8")).alias("__d"))
         .select(col("vec_id"), posexplode(col("__d")).as(Seq("pos", "val")))
         .select(col("vec_id"), col("pos").cast("long").alias("pos"),
           round(col("val"), 6).alias("val"))

@@ -293,7 +293,7 @@ object Curation {
     if (integralId) {
       val picked = df
         .groupBy(col(strataCol))
-        .agg(graft.functions.TopKByScore.topK(df.sparkSession,
+        .agg(graft.functions.TopKByScore.topK(
           -hashUnit(col(idCol)), col(idCol).cast("long"), k).alias("__top"))
       picked.select(col(strataCol), posexplode(col("__top")))
         .select(col(strataCol), (col("pos") + 1).cast("long").alias("rank"),
@@ -308,7 +308,7 @@ object Curation {
         xxhash64(col(idCol).cast("string")).alias("__sid"))
       val picked = keyed
         .groupBy(col(strataCol))
-        .agg(graft.functions.TopKByScore.topK(df.sparkSession,
+        .agg(graft.functions.TopKByScore.topK(
           -hashUnit(col(idCol)), col("__sid"), k).alias("__top"))
         .select(col(strataCol), posexplode(col("__top")))
         .select(col(strataCol), (col("pos") + 1).cast("long").alias("rank"),
@@ -346,8 +346,7 @@ object Curation {
     val picked = df
       .filter(w > 0) // null/zero/negative weight: excluded, never sampled
       .groupBy(col(strataCol))
-      .agg(graft.functions.TopKByScore.topK(df.sparkSession,
-        key, col(idCol).cast("long"), k).alias("__top"))
+      .agg(graft.functions.TopKByScore.topK(key, col(idCol).cast("long"), k).alias("__top"))
     picked.select(col(strataCol), posexplode(col("__top")))
       .select(col(strataCol), (col("pos") + 1).cast("long").alias("rank"),
         col("col.id").cast(idType).alias(idCol))

@@ -256,13 +256,12 @@ object Dedup {
     * correctness baseline; use [[minhashNearDuplicates]] at scale). */
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
                         n: Int, threshold: Double): DataFrame = {
-    val sp = df.sparkSession
     val withSh = df.select(col(idCol), wordShingles(col(textCol), n).alias("__sh"))
     val l = withSh.select(col(idCol).alias("id_a"), col("__sh").alias("sh_a"))
     val r = withSh.select(col(idCol).alias("id_b"), col("__sh").alias("sh_b"))
     l.join(r, col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(graft.functions.JaccardSim.jaccard(sp, col("sh_a"), col("sh_b")), 6)
+        round(graft.functions.JaccardSim.jaccard(col("sh_a"), col("sh_b")), 6)
           .alias("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
@@ -383,7 +382,7 @@ object Dedup {
     // ReuseExchange shares the exchange between both join sides (measured
     // 25x on 100 docs). Payload is only (id, k x 8B signature).
     val sig = sh.select(col(idCol),
-      graft.functions.MinHashSignature.signature(sh.sparkSession, col("__sh"), numHashes)
+      graft.functions.MinHashSignature.signature(col("__sh"), numHashes)
         .alias("__sig"))
       .repartition(col(idCol))
     val banded = sig.select(col(idCol),
@@ -403,14 +402,13 @@ object Dedup {
                             threshold: Double, shingleN: Int = 3,
                             numHashes: Int = 32, bands: Int = 8,
                             maxBucketSize: Int = 1000): DataFrame = {
-    val sp = df.sparkSession
     val sh = shingleFrame(df, textCol, idCol, shingleN)
     val cands = candidatesFromShingles(sh, idCol, numHashes, bands, maxBucketSize)
     cands
       .join(sh.select(col(idCol).alias("id_a"), col("__sh").alias("sh_a")), Seq("id_a"))
       .join(sh.select(col(idCol).alias("id_b"), col("__sh").alias("sh_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(graft.functions.JaccardSim.jaccard(sp, col("sh_a"), col("sh_b")), 6)
+        round(graft.functions.JaccardSim.jaccard(col("sh_a"), col("sh_b")), 6)
           .alias("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
@@ -768,7 +766,6 @@ object Dedup {
                          textCol: String, idCol: String, threshold: Double,
                          shingleN: Int = 3, numHashes: Int = 32,
                          bands: Int = 8, maxBucketSize: Int = 1000): DataFrame = {
-    val sp = delta.sparkSession
     // one precondition job, not two: corpus-max and delta-min ride ONE
     // aggregation over the union of the two (side-tagged) id columns, so
     // both scans run — and overlap — inside a single scheduled job (a
@@ -790,7 +787,7 @@ object Dedup {
     def banded(df: DataFrame) = {
       val sh = shingleFrame(df, textCol, idCol, shingleN)
       val sig = sh.select(col(idCol),
-        graft.functions.MinHashSignature.signature(sp, col("__sh"), numHashes)
+        graft.functions.MinHashSignature.signature(col("__sh"), numHashes)
           .alias("__sig"))
         .repartition(col(idCol))
       (sh, sig.select(col(idCol), posexplode(
@@ -823,7 +820,7 @@ object Dedup {
       // ([[minhashNearDuplicates]]) and the DuckDB oracle both do, so a
       // pair within 5e-7 of the threshold must classify identically here
       // or the documented batch≡incremental equivalence breaks
-      .filter(round(graft.functions.JaccardSim.jaccard(sp, col("sh_a"), col("sh_b")), 6)
+      .filter(round(graft.functions.JaccardSim.jaccard(col("sh_a"), col("sh_b")), 6)
         >= threshold)
       .select("id_a", "id_b")
     val comps = connectedComponents(verified, "id_a", "id_b")
@@ -845,8 +842,8 @@ object Dedup {
     * expression — one hash per token, single pass). */
   def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.select(col(idCol),
-      SimHash.simhash64(df.sparkSession,
-        TextAnalysis.tokens(TextAnalysis.normalized(col(textCol)))).alias("simhash"))
+      SimHash.simhash64(TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))))
+        .alias("simhash"))
 
   /** SimHash near-dup pairs with PIGEONHOLE blocking (Manku et al.'s
     * simhash dedup scheme): the 64-bit hash splits into maxDist+1
@@ -922,16 +919,15 @@ object Dedup {
     * [[Similarity.hyperplaneBuckets]] is the scale path). */
   def embeddingNearDupExact(df: DataFrame, vecCol: String, idCol: String,
                             threshold: Double): DataFrame = {
-    val sp = df.sparkSession
     val withN = df.select(col(idCol), col(vecCol),
-      Similarity.fastL2(sp, col(vecCol)).alias("__n"))
+      Similarity.fastL2(col(vecCol)).alias("__n"))
     val l = withN.select(col(idCol).alias("id_a"), col(vecCol).alias("v_a"), col("__n").alias("n_a"))
     val r = withN.select(col(idCol).alias("id_b"), col(vecCol).alias("v_b"), col("__n").alias("n_b"))
     l.join(r, col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         // try_divide, not `/`: a zero-norm vector must yield null cosine
         // (dropped by the filter), not an ANSI DIVIDE_BY_ZERO crash
-        round(try_divide(Similarity.fastDot(sp, col("v_a"), col("v_b")),
+        round(try_divide(graft.functions.DotProduct.dot(col("v_a"), col("v_b")),
           col("n_a") * col("n_b")), 6).alias("cosine"))
       .filter(col("cosine") >= threshold)
   }
@@ -970,14 +966,13 @@ object Dedup {
                         trainIters: Int = 2,
                         trainSampleMult: Int = 0): DataFrame = {
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
-    val sp = df.sparkSession
     val cents = Similarity.trainCentroids(df, idCol, vecCol, nlist, trainIters,
       trainSampleMult)
     // fence (the shingleFrame idiom): assignment + norms compute once
     // pre-shuffle and the exchange serves both self-join sides
-    val withN = Similarity.nearestCentroid(sp, df, idCol, vecCol, cents)
+    val withN = Similarity.nearestCentroid(df, idCol, vecCol, cents)
       .select(col(idCol), col("cent_id"), col(vecCol),
-        Similarity.fastL2(sp, col(vecCol)).alias("__n"))
+        Similarity.fastL2(col(vecCol)).alias("__n"))
       .repartition(col(idCol))
     val l = withN.select(col("cent_id"), col(idCol).alias("id_a"),
       col(vecCol).alias("v_a"), col("__n").alias("n_a"))
@@ -985,7 +980,7 @@ object Dedup {
       col(vecCol).alias("v_b"), col("__n").alias("n_b"))
     val pairs = l.join(r, Seq("cent_id")).filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(try_divide(Similarity.fastDot(sp, col("v_a"), col("v_b")),
+        round(try_divide(graft.functions.DotProduct.dot(col("v_a"), col("v_b")),
           col("n_a") * col("n_b")), 6).alias("cosine"))
       .filter(col("cosine") >= threshold)
     val comps = connectedComponents(pairs, "id_a", "id_b")
@@ -1001,12 +996,11 @@ object Dedup {
   def embeddingNearDupLsh(df: DataFrame, vecCol: String, idCol: String,
                           threshold: Double, planes: Int = 16,
                           bands: Int = 4, dim: Int = 64): DataFrame = {
-    val sp = df.sparkSession
     val sig = Similarity.hyperplaneBuckets(df, vecCol, idCol, planes, bands, dim)
     // fence (same pattern as minhash's shingleFrame): the (id, vec, norm)
     // exchange materializes once and AQE reuses it for BOTH verify-join
     // sides instead of re-scanning and re-deriving norms per side
-    val withN = df.select(col(idCol), col(vecCol), Similarity.fastL2(sp, col(vecCol)).alias("__n"))
+    val withN = df.select(col(idCol), col(vecCol), Similarity.fastL2(col(vecCol)).alias("__n"))
       .repartition(col(idCol))
     val l = sig.select(col("__band"), col("__bucket"), col(idCol).alias("id_a"))
     val r = sig.select(col("__band"), col("__bucket"), col(idCol).alias("id_b"))
@@ -1018,7 +1012,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         // try_divide, not `/`: a zero-norm vector must yield null cosine
         // (dropped by the filter), not an ANSI DIVIDE_BY_ZERO crash
-        round(try_divide(Similarity.fastDot(sp, col("v_a"), col("v_b")),
+        round(try_divide(graft.functions.DotProduct.dot(col("v_a"), col("v_b")),
           col("n_a") * col("n_b")), 6).alias("cosine"))
       .filter(col("cosine") >= threshold)
   }

@@ -37,9 +37,8 @@ object HeavyHitters {
     * `lb`. At most `capacity` rows, superset of all items with true
     * count > n/(capacity+1). */
   def sketchCandidates(items: DataFrame, itemCol: String, capacity: Int): DataFrame = {
-    val spark = items.sparkSession
     items
-      .agg(MisraGriesSketch.sketch(spark, col(itemCol), capacity).alias("sk"))
+      .agg(MisraGriesSketch.sketch(col(itemCol), capacity).alias("sk"))
       .select(explode(col("sk")).alias("e"))
       .select(col("e.item").alias("item"), col("e.lb").alias("lb"))
   }
@@ -48,14 +47,13 @@ object HeavyHitters {
     * strictly more than n/(capacity+1) times (n = count of non-null
     * items), with exact counts. Columns: item, cnt. */
   def exact(items: DataFrame, itemCol: String, capacity: Int): DataFrame = {
-    val spark = items.sparkSession
     val src = items.select(col(itemCol).alias("item")).filter(col("item").isNotNull)
     // ONE pass-1 aggregation carries both the sketch and n (both
     // partial-aggregatable, same map-side reduce). The collect is a
     // single row whose sketch array is structurally <= capacity entries —
     // a bounded driver materialization, not data-dependent.
     val row = src.agg(
-      MisraGriesSketch.sketch(spark, col("item"), capacity).alias("sk"),
+      MisraGriesSketch.sketch(col("item"), capacity).alias("sk"),
       count(lit(1)).alias("n")).collect()(0)
     val cand = row.getSeq[org.apache.spark.sql.Row](0).map(_.getString(0))
     val n = row.getLong(1)

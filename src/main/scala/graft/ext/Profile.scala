@@ -114,8 +114,7 @@ object Profile {
     val v = graft.ColName.topCol(valueCol).cast("double")
     val rows = df.filter(v.isNotNull).select(g.alias("__g"), v.alias("__v"))
     rows.groupBy(col("__g").alias(groupCol))
-      .agg(graft.functions.MadStats.madStats(
-        df.sparkSession, col("__v"), k).alias("__ms"))
+      .agg(graft.functions.MadStats.madStats(col("__v"), k).alias("__ms"))
       .select(graft.ColName.topCol(groupCol),
         round(col("__ms").getField("med"), 4).alias("med"),
         round(col("__ms").getField("mad"), 4).alias("mad"),

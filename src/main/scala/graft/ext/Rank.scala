@@ -30,13 +30,11 @@ object Rank {
                    id: Column, k: Int): DataFrame = {
     require(groupCols.nonEmpty, "topKPerGroup: at least one group column")
     require(k >= 1, s"topKPerGroup: k must be >= 1, got $k")
-    val sp = df.sparkSession
     val gs = groupCols.map(graft.ColName.topCol)
     df.select(gs :+ score.cast("double").alias("__score")
         :+ id.cast("long").alias("__id"): _*)
       .groupBy(groupCols.map(graft.ColName.topCol): _*)
-      .agg(graft.functions.TopKByScore.topK(
-        sp, col("__score"), col("__id"), k).alias("__top"))
+      .agg(graft.functions.TopKByScore.topK(col("__score"), col("__id"), k).alias("__top"))
       .select(groupCols.map(graft.ColName.topCol) :+
         posexplode(col("__top")).as(Seq("__i", "__e")): _*)
       .select(groupCols.map(graft.ColName.topCol) ++ Seq(

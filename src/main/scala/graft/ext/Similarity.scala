@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import graft.functions.DotProduct
 
 /**
  * Similarity search over an embedding column (Array[Float]).
@@ -50,12 +51,9 @@ object Similarity {
     try_divide(dot(a, b), l2norm(a) * l2norm(b))
 
   // fused custom-expression kernels (same math, single loop, no allocation)
-  private[ext] def fastDot(s: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    graft.functions.DotProduct.dot(s, a, b)
-  private[ext] def fastL2(s: org.apache.spark.sql.SparkSession, a: Column): Column =
-    sqrt(graft.functions.DotProduct.dot(s, a, a))
-  private[ext] def fastCosine(s: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
-    try_divide(fastDot(s, a, b), fastL2(s, a) * fastL2(s, b))
+  private[ext] def fastL2(a: Column): Column = sqrt(DotProduct.dot(a, a))
+  private[ext] def fastCosine(a: Column, b: Column): Column =
+    try_divide(DotProduct.dot(a, b), fastL2(a) * fastL2(b))
 
   /**
    * Final ranking of scored (query_id, vec_id, cosine) candidates via the
@@ -68,9 +66,8 @@ object Similarity {
    * last (dropped, since every query here has >= k non-null candidates).
    */
   private[graft] def topKRank(scored: DataFrame, k: Int): DataFrame = {
-    val sp = scored.sparkSession
     scored.groupBy(col("query_id"))
-      .agg(graft.functions.TopKByScore.topK(sp, col("cosine"), col("vec_id"), k).alias("__top"))
+      .agg(graft.functions.TopKByScore.topK(col("cosine"), col("vec_id"), k).alias("__top"))
       .select(col("query_id"), posexplode(col("__top")).as(Seq("__i", "__e")))
       .select(col("query_id"), col("__e.id").alias("vec_id"),
         col("__e.score").alias("cosine"), (col("__i") + 1).cast("long").alias("rank"))
@@ -90,14 +87,13 @@ object Similarity {
    */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String, vecCol: String): DataFrame = {
-    val sp = corpus.sparkSession
     val c = corpus.select(col(idCol).alias("vec_id"), col(vecCol).alias("__cv"),
-      fastL2(sp, col(vecCol)).alias("__cn"))
+      fastL2(col(vecCol)).alias("__cn"))
     val q = queries.select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"),
-      fastL2(sp, col(vecCol)).alias("__qn"))
+      fastL2(col(vecCol)).alias("__qn"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        round(try_divide(fastDot(sp, col("__qv"), col("__cv")), col("__qn") * col("__cn")), 6)
+        round(try_divide(DotProduct.dot(col("__qv"), col("__cv")), col("__qn") * col("__cn")), 6)
           .alias("cosine"))
     topKRank(scored, k)
   }
@@ -107,9 +103,8 @@ object Similarity {
     * to store/shuffle/cache than float32. One narrow codegen'd scan. */
   def sq8Compress(df: DataFrame, idCol: String, vecCol: String,
                   outCol: String = "sq8"): DataFrame = {
-    val sp = df.sparkSession
     df.select(col(idCol),
-      graft.functions.Sq8.encode(sp, graft.ColName.topCol(vecCol)).alias(outCol))
+      graft.functions.Sq8.encode(graft.ColName.topCol(vecCol)).alias(outCol))
   }
 
   /** Brute-force cosine top-k over an SQ8-compressed corpus: asymmetric
@@ -125,16 +120,15 @@ object Similarity {
     * plus Sq8Spec's ranking-equivalence test. */
   def sq8TopK(compressed: DataFrame, queries: DataFrame, k: Int,
               idCol: String, vecCol: String, codesCol: String = "sq8"): DataFrame = {
-    val sp = compressed.sparkSession
     val c = compressed
       .select(col(idCol).alias("vec_id"),
-        graft.functions.Sq8.decode(sp, graft.ColName.topCol(codesCol)).alias("__cv"))
-      .select(col("vec_id"), col("__cv"), fastL2(sp, col("__cv")).alias("__cn"))
+        graft.functions.Sq8.decode(graft.ColName.topCol(codesCol)).alias("__cv"))
+      .select(col("vec_id"), col("__cv"), fastL2(col("__cv")).alias("__cn"))
     val q = queries.select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"),
-      fastL2(sp, col(vecCol)).alias("__qn"))
+      fastL2(col(vecCol)).alias("__qn"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        round(try_divide(fastDot(sp, col("__qv"), col("__cv")), col("__qn") * col("__cn")), 6)
+        round(try_divide(DotProduct.dot(col("__qv"), col("__cv")), col("__qn") * col("__cn")), 6)
           .alias("cosine"))
     topKRank(scored, k)
   }
@@ -156,7 +150,6 @@ object Similarity {
         "(perBand = planes/bands would be 0: every band key would vanish " +
         "and the LSH would silently emit no candidates)")
     val perBand = planes / bands
-    val sp = df.sparkSession
     val planesArr = planeLiterals(planes, dim)
     // a vector whose length != dim makes every plane dot null, which would
     // silently sign to all-zero bits and collapse the corpus into ONE
@@ -165,7 +158,7 @@ object Similarity {
       .otherwise(raise_error(concat(
         lit(s"hyperplaneBuckets: embedding size != dim=$dim for id "),
         col(idCol).cast("string"))))
-    val bits = transform(planesArr, p => when(fastDot(sp, p, checkedVec) >= 0, 1L).otherwise(0L))
+    val bits = transform(planesArr, p => when(DotProduct.dot(p, checkedVec) >= 0, 1L).otherwise(0L))
     // ONE pass over `bits`: referencing it inside a per-band lambda (the
     // obvious transform(0..bands-1, b => fold(slice(bits, ...))) shape)
     // re-evaluates every plane dot product once per band — the HOF
@@ -290,7 +283,7 @@ object Similarity {
     // corpus scans); the returned frame keeps only the last pin
     Checkpoints.scoped(sp) { cp =>
       (0 until iters).foldLeft(Option.empty[Checkpoints.Pin]) { (cents, _) =>
-        val next = cp.pin(nearestCentroid(sp, train, idCol, vecCol, cents.fold(seeds)(_.df))
+        val next = cp.pin(nearestCentroid(train, idCol, vecCol, cents.fold(seeds)(_.df))
           .select(col("cent_id"), posexplode(col(vecCol)).as(Seq("__pos", "__v")))
           .groupBy(col("cent_id"), col("__pos"))
           .agg(avg(col("__v")).alias("__m"))
@@ -310,11 +303,11 @@ object Similarity {
     * -2.0, below any real cosine — but partial aggregation collapses each
     * partition's nlist candidate rows per vector BEFORE the shuffle, so
     * the exchange carries |corpus| rows instead of |corpus| x nlist. */
-  private[ext] def nearestCentroid(sp: org.apache.spark.sql.SparkSession, vectors: DataFrame,
-                                   idCol: String, vecCol: String, cents: DataFrame): DataFrame =
+  private[ext] def nearestCentroid(vectors: DataFrame, idCol: String, vecCol: String,
+                                   cents: DataFrame): DataFrame =
     vectors.crossJoin(broadcast(cents))
       .select(col(idCol), col(vecCol), col("cent_id"),
-        coalesce(fastCosine(sp, col(vecCol), col("cent_vec")), lit(-2.0)).alias("__sim"))
+        coalesce(fastCosine(col(vecCol), col("cent_vec")), lit(-2.0)).alias("__sim"))
       .groupBy(col(idCol))
       .agg(max_by(
         struct(col(vecCol).alias("v"), col("cent_id").alias("c")),
@@ -343,7 +336,6 @@ object Similarity {
                    nlist: Int, trainIters: Int = 0,
                    trainSampleMult: Int = 0): DataFrame = {
     require(nlist >= 1, s"kmeansAssign: nlist must be >= 1, got $nlist")
-    val sp = corpus.sparkSession
     val centRows = trainCentroids(corpus, idCol, vecCol, nlist, trainIters,
       trainSampleMult)
       .select(col("cent_id").cast("long").alias("c"),
@@ -355,7 +347,7 @@ object Similarity {
         array(r.getSeq[Double](1).map(lit(_)): _*).alias("v"))
     }: _*)
     val scored = transform(centArr, c => struct(
-      (-coalesce(round(fastCosine(sp, col(vecCol), c.getField("v")), 6),
+      (-coalesce(round(fastCosine(col(vecCol), c.getField("v")), 6),
         lit(-2.0))).alias("negsim"),
       c.getField("c").alias("cid")))
     corpus.select(col(idCol),
@@ -438,14 +430,13 @@ object Similarity {
     * seeds two centroids under one cent_id still probes each list once.
     * A narrow projection, no shuffle: the centroid list ships to the
     * executors once per query as a one-row broadcast relation. */
-  private def probeLists(sp: org.apache.spark.sql.SparkSession, cents: IvfCentroids,
-                         queries: DataFrame, idCol: String, vecCol: String,
-                         nprobe: Int): DataFrame = {
-    val list = sp.createDataFrame(java.util.Arrays.asList(Row(cents.rows)),
+  private def probeLists(cents: IvfCentroids, queries: DataFrame, idCol: String,
+                         vecCol: String, nprobe: Int): DataFrame = {
+    val list = queries.sparkSession.createDataFrame(java.util.Arrays.asList(Row(cents.rows)),
       StructType(Seq(StructField("__cents", ArrayType(cents.schema)))))
     // descending (sim, -cent_id): null sims last, ties to the lower id
     val nearest = sort_array(transform(col("__cents"), c => struct(
-      fastCosine(sp, col("__qv"), c.getField("cent_vec")).alias("sim"),
+      fastCosine(col("__qv"), c.getField("cent_vec")).alias("sim"),
       (-c.getField("cent_id")).alias("neg_id"))), asc = false)
     queries.select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"))
       .crossJoin(broadcast(list))
@@ -457,22 +448,21 @@ object Similarity {
     * file (vec_id, __cv, __cn, cent_id), or with a `codebook` the coded
     * one (vec_id, __codes, __cn, cent_id), scored by ADC against each
     * query's [[pqLuts]] so the probed scan reads codes only. */
-  private def probeRank(sp: org.apache.spark.sql.SparkSession, cents: IvfCentroids,
-                        inverted: DataFrame, queries: DataFrame, k: Int,
+  private def probeRank(cents: IvfCentroids, inverted: DataFrame, queries: DataFrame, k: Int,
                         idCol: String, vecCol: String, nprobe: Int,
                         codebook: Option[PqCodebook]): DataFrame = {
     // what a probe row carries for its query; the candidate dot against it
     val (payload, dot): (Column => Column, Column => Column) = codebook match {
       case Some(cb) => (pqLuts(cb, _), pqAdcDot(col("__codes"), _))
-      case None => (identity, fastDot(sp, _, col("__cv")))
+      case None => (identity, DotProduct.dot(_, col("__cv")))
     }
     // payload and norm once per query (this projection sits below the
     // explode), then one row per probed list. The probe side is
     // |Q| x nprobe rows (queries are the small side by contract, as in
     // bruteForceTopK): broadcast, so the inverted file never shuffles
-    val probes = probeLists(sp, cents, queries, idCol, vecCol, nprobe)
+    val probes = probeLists(cents, queries, idCol, vecCol, nprobe)
       .select(col("query_id"), payload(col("__qv")).alias("__q"),
-        fastL2(sp, col("__qv")).alias("__qn"), col("__probes"))
+        fastL2(col("__qv")).alias("__qn"), col("__probes"))
       // explode_outer: a plain explode gets an inferred size(__probes) > 0
       // filter that is pushed into the crossJoin, ranking every query twice
       .select(col("query_id"), col("__q"), col("__qn"),
@@ -524,13 +514,13 @@ object Similarity {
       trainIters, trainSampleMult))
     val v = graft.ColName.topCol(vecCol)
     val (stored, codebook) = quantizer match {
-      case Flat => (Seq(v.alias("vec"), fastL2(sp, v).alias("norm")), None)
-      case Sq8 => (Seq(graft.functions.Sq8.encode(sp, v).alias("sq8")), None)
+      case Flat => (Seq(v.alias("vec"), fastL2(v).alias("norm")), None)
+      case Sq8 => (Seq(graft.functions.Sq8.encode(v).alias("sq8")), None)
       case Pq(dim, m, ksub, iters) =>
         val cb = pqTrain(corpus, idCol, vecCol, dim, m, ksub, iters)
-        (Seq(pqCodes(sp, v, cb).alias("codes"), fastL2(sp, v).alias("norm")), Some(cb))
+        (Seq(pqCodes(v, cb).alias("codes"), fastL2(v).alias("norm")), Some(cb))
     }
-    val assigned = nearestCentroid(sp, predicate.fold(corpus)(corpus.filter),
+    val assigned = nearestCentroid(predicate.fold(corpus)(corpus.filter),
         idCol, vecCol, cents.table(sp))
       .select((col(idCol).alias("vec_id") +: stored) :+ col("cent_id"): _*)
     val inverted =
@@ -680,7 +670,6 @@ object Similarity {
                      idCol: String, vecCol: String, nprobe: Int = 0,
                      predicate: Option[Column] = None): DataFrame = {
     val np = probeWidth("ivfTopKIndexed", nprobe, index.centroids.nlist)
-    val sp = queries.sparkSession
     val rows = predicate.fold(index.assignments)(index.assignments.filter)
     val inverted = index.codebook match {
       case Some(_) => rows.select(col("vec_id"), col("codes").alias("__codes"),
@@ -688,14 +677,14 @@ object Similarity {
       // ONE decode projection per inverted-file row, norm over the decoded
       // vector (the quantized ranking's norm, matching sq8TopK)
       case None if index.assignments.columns.contains("sq8") => rows
-        .select(col("vec_id"), graft.functions.Sq8.decode(sp, col("sq8")).alias("__cv"),
+        .select(col("vec_id"), graft.functions.Sq8.decode(col("sq8")).alias("__cv"),
           col("cent_id"))
-        .select(col("vec_id"), col("__cv"), fastL2(sp, col("__cv")).alias("__cn"),
+        .select(col("vec_id"), col("__cv"), fastL2(col("__cv")).alias("__cn"),
           col("cent_id"))
       case None => rows.select(col("vec_id"), col("vec").alias("__cv"),
         col("norm").alias("__cn"), col("cent_id"))
     }
-    probeRank(sp, index.centroids, inverted, queries, k, idCol, vecCol, np,
+    probeRank(index.centroids, inverted, queries, k, idCol, vecCol, np,
       index.codebook)
   }
 
@@ -717,10 +706,8 @@ object Similarity {
     * codegen'd [[graft.functions.PqEncode]] fused argmin (the HOF chain
     * below is interpreted and was the dominant cost of PQ training and
     * serving). Distance ties pick the lowest code id (deterministic). */
-  private[ext] def pqCodes(sp: org.apache.spark.sql.SparkSession,
-                           vec: Column, cb: PqCodebook): Column =
-    graft.functions.PqEncode.encode(sp, vec,
-      cb.book.flatten.flatten, cb.dim, cb.m)
+  private[ext] def pqCodes(vec: Column, cb: PqCodebook): Column =
+    graft.functions.PqEncode.encode(vec, cb.book.flatten.flatten, cb.dim, cb.m)
 
   /** The readable HOF reference model of [[pqCodes]] — kept for the
     * equivalence spec (PqSpec asserts codegen ≡ HOF), like
@@ -782,12 +769,11 @@ object Similarity {
     val k = math.min(ksub, seedRows.length)
     var cb = PqCodebook(dim, Array.tabulate(m, k) { (s, j) =>
       seedRows(j).getSeq[Double](0).slice(s * dsub, (s + 1) * dsub).toArray })
-    val sp0 = corpus.sparkSession
     (0 until iters).foreach { _ =>
       val sId = (col("__pos") / dsub).cast("int")
       val cell = corpus
         .select(col(idCol).alias("__id"), col(vecCol).alias("__v"),
-          pqCodes(sp0, col(vecCol), cb).alias("__codes"))
+          pqCodes(col(vecCol), cb).alias("__codes"))
         // fence: codes compute once per row, not once per exploded element
         .repartition(col("__id"))
         .select(col("__codes"), posexplode(col("__v")).as(Seq("__pos", "__x")))
@@ -825,17 +811,16 @@ object Similarity {
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              idCol: String, vecCol: String, dim: Int,
              m: Int = 8, ksub: Int = 16, trainIters: Int = 1): DataFrame = {
-    val sp = corpus.sparkSession
     val cb = pqTrain(corpus, idCol, vecCol, dim, m, ksub, trainIters)
     val enc = corpus
-      .select(col(idCol).alias("vec_id"), pqCodes(sp, col(vecCol), cb).alias("__codes"),
-        fastL2(sp, col(vecCol)).alias("__cn"))
+      .select(col(idCol).alias("vec_id"), pqCodes(col(vecCol), cb).alias("__codes"),
+        fastL2(col(vecCol)).alias("__cn"))
       // fence: codes + norm compute once per corpus row, not once per
       // (query x candidate) pair after the broadcast join
       .repartition(col("vec_id"))
     val q = queries.select(col(idCol).alias("query_id"),
       pqLuts(cb, col(vecCol)).alias("__lut"),
-      fastL2(sp, col(vecCol)).alias("__qn"))
+      fastL2(col(vecCol)).alias("__qn"))
     val scored = enc.join(broadcast(q), col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
         round(try_divide(pqAdcDot(col("__codes"), col("__lut")),
@@ -885,17 +870,16 @@ object Similarity {
                     m: Int = 8, ksub: Int = 16, trainIters: Int = 1,
                     refineFactor: Int = 4): DataFrame = {
     require(refineFactor >= 1, s"refineFactor must be >= 1, got $refineFactor")
-    val sp = corpus.sparkSession
     val shortlist = pqTopK(corpus, queries, k * refineFactor, idCol, vecCol,
       dim, m, ksub, trainIters).select(col("query_id"), col("vec_id"))
     val cv = corpus.select(col(idCol).alias("vec_id"), col(vecCol).alias("__cv"),
-      fastL2(sp, col(vecCol)).alias("__cn"))
+      fastL2(col(vecCol)).alias("__cn"))
     val qv = queries.select(col(idCol).alias("query_id"), col(vecCol).alias("__qv"),
-      fastL2(sp, col(vecCol)).alias("__qn"))
+      fastL2(col(vecCol)).alias("__qn"))
     val scored = cv.join(broadcast(shortlist), Seq("vec_id"))
       .join(broadcast(qv), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(try_divide(fastDot(sp, col("__qv"), col("__cv")),
+        round(try_divide(DotProduct.dot(col("__qv"), col("__cv")),
           col("__qn") * col("__cn")), 6).alias("cosine"))
     topKRank(scored, k)
   }

@@ -1,7 +1,9 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 
 /**
  * Skew-mitigation joins. Spark's AQE already splits skewed SHUFFLE join
@@ -24,18 +26,13 @@ object Skew {
 
   private val SaltCol = "__salt"
 
-  /** Registered wrapper around Spark's own `BloomFilterMightContain`
-    * runtime-filter expression (the engine applies it internally for
+  /** Spark's own `BloomFilterMightContain` runtime-filter expression as
+    * a Column (the engine applies it internally for
     * `spark.sql.optimizer.runtime.bloomFilter`; there is no public
     * Column API). First arg: serialized `util.sketch.BloomFilter`
     * binary literal; second: the xxhash64 of the probe key. */
-  private def mightContain(spark: org.apache.spark.sql.SparkSession,
-                           bloomBytes: Array[Byte], value: Column): Column = {
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "graft_bloom_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs(0), exprs(1)))
-    call_function("graft_bloom_might_contain", lit(bloomBytes), value)
-  }
+  private def mightContain(bloomBytes: Array[Byte], value: Column): Column =
+    ColumnShim.column(BloomFilterMightContain(Literal(bloomBytes), ColumnShim.expression(value)))
 
   /** The probe-side predicate of [[bloomPrunedJoin]], reusable on its
     * own (e.g. prune a corpus against a key set before an expensive
@@ -61,7 +58,7 @@ object Skew {
     val bf = hashes.stat.bloomFilter(col("__h"), expectedItems + 1, fpp)
     val out = new java.io.ByteArrayOutputStream()
     bf.writeTo(out)
-    mightContain(probe.sparkSession, out.toByteArray,
+    mightContain(out.toByteArray,
       xxhash64(probeKeys.map(k => probe(q(k))): _*))
   }
 

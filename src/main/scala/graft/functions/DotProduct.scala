@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /**
@@ -100,16 +101,6 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Register dot_product in the session's function registry (idempotent —
-    * no-op when the session already resolves it; see
-    * [[GraftExtensions.ensureRegistered]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)))
-
   /** Column API: dot_product(a, b). */
-  def dot(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("dot_product", a, b)
-  }
+  def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /**
@@ -68,15 +69,6 @@ object JaccardSim {
     if (union == 0) 0.0 else inter.toDouble / union
   }
 
-  /** Register jaccard_sim in the session's function registry (idempotent —
-    * no-op when the session already resolves it; see
-    * [[GraftExtensions.ensureRegistered]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "jaccard_sim",
-      exprs => JaccardSim(exprs(0), exprs(1)))
-
-  def jaccard(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("jaccard_sim", a, b)
-  }
+  /** Column API: jaccard_sim(a, b). */
+  def jaccard(a: Column, b: Column): Column = column(JaccardSim(expression(a), expression(b)))
 }

@@ -5,8 +5,9 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /**
@@ -370,15 +371,7 @@ object MadStats {
     (higher - pos) * lowerKey + (pos - lower) * higherKey
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "mad_stats",
-      exprs => MadStats(exprs(0), exprs(1)))
-
   /** Aggregate Column: struct(med, mad, n, n_outliers) per group. */
-  def madStats(spark: org.apache.spark.sql.SparkSession,
-               value: Column, k: Double): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "mad_stats", value, org.apache.spark.sql.functions.lit(k))
-  }
+  def madStats(value: Column, k: Double): Column =
+    column(MadStats(expression(value), Literal(k)))
 }

@@ -2,9 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /**
@@ -100,17 +101,9 @@ case class MinHashSignature(left: Expression, right: Expression)
 }
 
 object MinHashSignature {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "minhash_sig",
-      exprs => MinHashSignature(exprs(0), exprs(1)))
-
   /** Column API: fused k-slot minhash signature of a shingle array. */
-  def signature(spark: org.apache.spark.sql.SparkSession,
-                shingles: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "minhash_sig", shingles, org.apache.spark.sql.functions.lit(k))
-  }
+  def signature(shingles: Column, k: Int): Column =
+    column(MinHashSignature(expression(shingles), Literal(k)))
 
   /** Reference-model mix, for spec-side expected-value computation. */
   private[graft] def mixFor(k: Int): (Array[Long], Array[Long]) = {

@@ -6,9 +6,10 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -162,17 +163,9 @@ case class MisraGriesSketch(
 }
 
 object MisraGriesSketch {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "misra_gries",
-      exprs => MisraGriesSketch(exprs(0), exprs(1)))
-
   /** Aggregate Column: array of (item, lb) structs, count-descending.
     * `lb` is a LOWER BOUND on the item's true count, within
     * n/(capacity+1) of exact. */
-  def sketch(spark: org.apache.spark.sql.SparkSession,
-             item: Column, capacity: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "misra_gries", item, org.apache.spark.sql.functions.lit(capacity))
-  }
+  def sketch(item: Column, capacity: Int): Column =
+    column(MisraGriesSketch(expression(item), Literal(capacity)))
 }

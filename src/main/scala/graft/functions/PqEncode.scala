@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /**
@@ -150,23 +151,13 @@ object PqEncode {
     e.eval().asInstanceOf[ArrayData].toDoubleArray().toIndexedSeq
   }
 
-  /** Builder for the registry: pq_encode(vec, flat_book, dim, m) — the
-    * codebook and shape arrive as foldable literals and are folded into
-    * the expression at build time. */
+  /** SQL builder: pq_encode(vec, flat_book, dim, m) — the codebook and
+    * shape arrive as foldable literals and are folded into the expression
+    * at build time. */
   def fromExprs(exprs: Seq[Expression]): PqEncode =
     PqEncode(exprs(0), evalDoubles(exprs(1)), evalInt(exprs(2)), evalInt(exprs(3)))
 
-  /** SQL registration (idempotent, session-scoped). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "pq_encode", fromExprs)
-
-  /** Column API. */
-  def encode(spark: org.apache.spark.sql.SparkSession, vec: Column,
-             flatBook: Array[Double], dim: Int, m: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("pq_encode", vec,
-      org.apache.spark.sql.functions.lit(flatBook),
-      org.apache.spark.sql.functions.lit(dim),
-      org.apache.spark.sql.functions.lit(m))
-  }
+  /** Column API: the codebook goes straight into the expression. */
+  def encode(vec: Column, flatBook: Array[Double], dim: Int, m: Int): Column =
+    column(PqEncode(expression(vec), flatBook.toIndexedSeq, dim, m))
 }

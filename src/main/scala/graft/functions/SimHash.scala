@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /**
@@ -89,19 +90,8 @@ case class SimHash(child: Expression) extends UnaryExpression {
 }
 
 object SimHash {
-  /** Register simhash64 in the session's function registry (idempotent —
-    * no-op when the session already resolves it; see
-    * [[GraftExtensions.ensureRegistered]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "simhash64",
-      exprs => SimHash(exprs.head))
-
-  /** Column API: simhash64(tokensArray). Requires [[register]] on the
-    * session first (done by callers in [[graft.ext.Dedup]]). */
-  def simhash64(spark: org.apache.spark.sql.SparkSession, tokens: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("simhash64", tokens)
-  }
+  /** Column API: simhash64(tokensArray). */
+  def simhash64(tokens: Column): Column = column(SimHash(expression(tokens)))
 
   /** Hamming distance between two simhash values. */
   def hammingDist(a: Column, b: Column): Column =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /**
@@ -211,23 +212,9 @@ case class Sq8Decode(child: Expression) extends UnaryExpression {
 }
 
 object Sq8 {
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "sq8_encode",
-      exprs => Sq8Encode(exprs.head))
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "sq8_decode",
-      exprs => Sq8Decode(exprs.head))
-  }
-
   /** Column API: sq8_encode(vec) → 16+dim-byte blob. */
-  def encode(spark: org.apache.spark.sql.SparkSession, vec: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("sq8_encode", vec)
-  }
+  def encode(vec: Column): Column = column(Sq8Encode(expression(vec)))
 
   /** Column API: sq8_decode(blob) → array<double>. */
-  def decode(spark: org.apache.spark.sql.SparkSession, blob: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("sq8_decode", blob)
-  }
+  def decode(blob: Column): Column = column(Sq8Decode(expression(blob)))
 }

@@ -6,9 +6,10 @@ import java.util.{Comparator, PriorityQueue}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 import org.apache.spark.sql.types._
 
 /**
@@ -136,15 +137,7 @@ object TopKByScore {
     }
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    _root_.graft.GraftExtensions.ensureRegistered(spark, "top_k_by_score",
-      exprs => TopKByScore(exprs(0), exprs(1), exprs(2)))
-
   /** Aggregate Column: array of the k best (id, score) structs, best first. */
-  def topK(spark: org.apache.spark.sql.SparkSession,
-           score: Column, id: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "top_k_by_score", score, id, org.apache.spark.sql.functions.lit(k))
-  }
+  def topK(score: Column, id: Column, k: Int): Column =
+    column(TopKByScore(expression(score), expression(id), Literal(k)))
 }

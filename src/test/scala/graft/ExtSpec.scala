@@ -248,7 +248,7 @@ class ExtSpec extends SparkSpec {
       .limit(500)
       .select(
         Similarity.dot(col("embedding"), col("e2")).alias("hof"),
-        graft.functions.DotProduct.dot(sp, col("embedding"), col("e2")).alias("fused"))
+        graft.functions.DotProduct.dot(col("embedding"), col("e2")).alias("fused"))
     // exact bitwise equality: same left-to-right double accumulation.
     // null-safe compare: a null-vs-value divergence must fail, not vanish
     assert(both.filter(not(col("hof") <=> col("fused"))).count() == 0)
@@ -256,7 +256,7 @@ class ExtSpec extends SparkSpec {
     val plane = array((0 until 16).map(i => lit(i * 0.37 - 2.0)): _*)
     val mixed = vectors.select(
       Similarity.dot(plane, col("embedding")).alias("hof"),
-      graft.functions.DotProduct.dot(sp, plane, col("embedding")).alias("fused"))
+      graft.functions.DotProduct.dot(plane, col("embedding")).alias("fused"))
     assert(mixed.filter(not(col("hof") <=> col("fused"))).count() == 0)
     // degenerate inputs: null element and length mismatch poison BOTH paths
     val weird = sp.sql("""SELECT array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)) AS a,
@@ -264,9 +264,9 @@ class ExtSpec extends SparkSpec {
       array(CAST(1.0 AS FLOAT)) AS short""")
     val degen = weird.select(
       Similarity.dot(col("a"), col("b")).alias("h1"),
-      graft.functions.DotProduct.dot(sp, col("a"), col("b")).alias("f1"),
+      graft.functions.DotProduct.dot(col("a"), col("b")).alias("f1"),
       Similarity.dot(col("short"), col("b")).alias("h2"),
-      graft.functions.DotProduct.dot(sp, col("short"), col("b")).alias("f2")).collect()(0)
+      graft.functions.DotProduct.dot(col("short"), col("b")).alias("f2")).collect()(0)
     assert(degen.isNullAt(0) && degen.isNullAt(1) && degen.isNullAt(2) && degen.isNullAt(3))
   }
 
@@ -289,11 +289,11 @@ class ExtSpec extends SparkSpec {
     val pairs = sh.crossJoin(sh.select(col("doc_id").alias("id2"), col("s").alias("s2")))
       .select(
         Dedup.jaccard(col("s"), col("s2")).alias("hof"),
-        graft.functions.JaccardSim.jaccard(sp, col("s"), col("s2")).alias("fused"))
+        graft.functions.JaccardSim.jaccard(col("s"), col("s2")).alias("fused"))
     assert(pairs.filter(not(col("hof") <=> col("fused"))).count() == 0)
     // empty-vs-empty → 0.0 on both paths
     val e = sp.sql("SELECT CAST(array() AS array<string>) AS a")
-    assert(e.select(graft.functions.JaccardSim.jaccard(sp, col("a"), col("a")))
+    assert(e.select(graft.functions.JaccardSim.jaccard(col("a"), col("a")))
       .collect()(0).getDouble(0) == 0.0)
   }
 
@@ -313,7 +313,7 @@ class ExtSpec extends SparkSpec {
 
   test("simhash rejects non array<string> input") {
     assertThrows[org.apache.spark.sql.AnalysisException] {
-      docs.select(SimHash.simhash64(spark, col("doc_id"))).collect()
+      docs.select(SimHash.simhash64(col("doc_id"))).collect()
     }
   }
 
@@ -558,7 +558,7 @@ class ExtSpec extends SparkSpec {
     }
     val sh = docs.select(col("doc_id"), Dedup.wordShingles(col("text"), 2).alias("s"))
     val got = sh.select(col("doc_id"),
-        graft.functions.MinHashSignature.signature(spark, col("s"), k).alias("sig"),
+        graft.functions.MinHashSignature.signature(col("s"), k).alias("sig"),
         col("s"))
       .collect()
     got.foreach { r =>
@@ -568,13 +568,13 @@ class ExtSpec extends SparkSpec {
     }
     // empty array → MaxValue slots; null array → null; wrong type rejected
     val edge = spark.sql("SELECT CAST(array() AS array<string>) AS e, CAST(NULL AS array<string>) AS n")
-      .select(graft.functions.MinHashSignature.signature(spark, col("e"), 4).alias("se"),
-        graft.functions.MinHashSignature.signature(spark, col("n"), 4).alias("sn"))
+      .select(graft.functions.MinHashSignature.signature(col("e"), 4).alias("se"),
+        graft.functions.MinHashSignature.signature(col("n"), 4).alias("sn"))
       .collect()(0)
     assert(edge.getSeq[Long](0) == Seq.fill(4)(Long.MaxValue))
     assert(edge.isNullAt(1))
     assertThrows[org.apache.spark.sql.AnalysisException] {
-      docs.select(graft.functions.MinHashSignature.signature(spark, col("doc_id"), 4)).collect()
+      docs.select(graft.functions.MinHashSignature.signature(col("doc_id"), 4)).collect()
     }
   }
 

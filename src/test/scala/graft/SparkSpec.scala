@@ -36,6 +36,34 @@ trait SparkSpec extends AnyFunSuite {
     js.toIndexedSeq.sorted
   }
 
+  /** Runs `body` with a `jobsSoFar()` that returns, and resets, the
+    * number of Spark jobs started since its previous call. The listener
+    * bus is asynchronous: a marker job flushes it, so every job started
+    * before the marker has been counted once the marker is seen. */
+  def withJobCount[T](body: (() => Int) => T): T = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var sawMarker = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties)
+          .exists(_.getProperty("spark.job.description", "") == "graft-jobs-marker"))
+          sawMarker = true
+        else jobs.incrementAndGet()
+    }
+    def jobsSoFar(): Int = {
+      sawMarker = false
+      spark.sparkContext.setJobDescription("graft-jobs-marker")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sawMarker, "listener bus did not deliver the marker job in 10s")
+      jobs.getAndSet(0)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try body(() => jobsSoFar())
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def assertSameRows(left: DataFrame, right: DataFrame): Unit = {
     val l = canonicalRows(left)
     val r = canonicalRows(right)

@@ -103,7 +103,7 @@ class HeavyHittersSpec extends SparkSpec {
     // into the running buffer
     val mem = MemoryStream[String]
     val q = mem.toDF().toDF("item")
-      .agg(MisraGriesSketch.sketch(spark, col("item"), 4).alias("sk"))
+      .agg(MisraGriesSketch.sketch(col("item"), 4).alias("sk"))
       .writeStream.format("memory").queryName("mg_out")
       .outputMode("complete").start()
     try {
@@ -124,7 +124,7 @@ class HeavyHittersSpec extends SparkSpec {
 
   test("sketch aggregate is partial-aggregatable (no extra shuffle beyond the agg)") {
     val df = corpus(8)
-    val plan = df.agg(MisraGriesSketch.sketch(spark, col("item"), 10).alias("sk"))
+    val plan = df.agg(MisraGriesSketch.sketch(col("item"), 10).alias("sk"))
       .queryExecution.executedPlan.toString
     // ObjectHashAggregate partial → exchange → final: exactly one exchange
     val exchanges = "Exchange".r.findAllIn(plan).length

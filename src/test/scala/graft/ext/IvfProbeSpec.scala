@@ -1,9 +1,6 @@
 package graft.ext
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,12 +42,12 @@ class IvfProbeSpec extends SparkSpec {
     val probes = q.crossJoin(broadcast(cents))
       .select(col("vec_id").alias("query_id"), col("embedding").alias("__qv"),
         col("cent_id"),
-        Similarity.fastCosine(spark, col("embedding"), col("cent_vec")).alias("__sim"))
+        Similarity.fastCosine(col("embedding"), col("cent_vec")).alias("__sim"))
       .withColumn("__rk", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("__sim").desc, col("cent_id").asc)))
       .filter(col("__rk") <= nprobe)
       .select(col("query_id"), payload(col("__qv")).alias("__q"),
-        Similarity.fastL2(spark, col("__qv")).alias("__qn"), col("cent_id"))
+        Similarity.fastL2(col("__qv")).alias("__qn"), col("cent_id"))
     val scored = inverted.join(broadcast(probes), Seq("cent_id"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
@@ -87,7 +84,7 @@ class IvfProbeSpec extends SparkSpec {
       val served = Similarity.ivfTopKIndexed(Similarity.loadIvf(spark, dir), q, k,
         "vec_id", "embedding", nprobe = np)
       assertSameRows(windowProbeRank(cents, inverted, q, k, np, identity,
-        Similarity.fastDot(spark, _, col("__cv"))), served)
+        graft.functions.DotProduct.dot(_, col("__cv"))), served)
       // the approximate search really is approximate here, and the
       // zero-norm query returns nothing
       val exact = Similarity.ivfTopKIndexed(Similarity.loadIvf(spark, dir), q, k,
@@ -100,13 +97,13 @@ class IvfProbeSpec extends SparkSpec {
         quantizer = Similarity.Sq8)
       val decoded = assignmentsAt(dir)
         .select(col("vec_id"),
-          graft.functions.Sq8.decode(spark, col("sq8")).alias("__cv"), col("cent_id"))
+          graft.functions.Sq8.decode(col("sq8")).alias("__cv"), col("cent_id"))
         .select(col("vec_id"), col("__cv"),
-          Similarity.fastL2(spark, col("__cv")).alias("__cn"), col("cent_id"))
+          Similarity.fastL2(col("__cv")).alias("__cn"), col("cent_id"))
       val served = Similarity.ivfTopKIndexed(Similarity.loadIvf(spark, dir), q, k,
         "vec_id", "embedding", nprobe = np)
       assertSameRows(windowProbeRank(centroidsAt(dir), decoded, q, k, np, identity,
-        Similarity.fastDot(spark, _, col("__cv"))), served)
+        graft.functions.DotProduct.dot(_, col("__cv"))), served)
     }
     withDir("graft_ivf_probe_pq") { dir =>
       Similarity.saveIvf(c, "vec_id", "embedding", dir, nlist = 6,
@@ -139,45 +136,25 @@ class IvfProbeSpec extends SparkSpec {
   test("ivfTopKIndexed runs no job to build its plan and at most 4 to collect") {
     val q = queries
     q.schema
-    // the listener bus is asynchronous: a marker job flushes it, so every
-    // job started before the marker has been counted once it is seen
-    val jobs = new AtomicInteger(0)
-    @volatile var sawMarker = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-          .exists(_.getProperty("spark.job.description", "") == "ivf-jobs-marker"))
-          sawMarker = true
-        else jobs.incrementAndGet()
-    }
-    def jobsSoFar(): Int = {
-      sawMarker = false
-      spark.sparkContext.setJobDescription("ivf-jobs-marker")
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!sawMarker && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(sawMarker, "listener bus did not deliver the marker job in 10s")
-      jobs.getAndSet(0)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try Seq(Similarity.Flat, Similarity.Sq8, Similarity.Pq(dim = 4, m = 2, ksub = 4))
-      .foreach { quantizer =>
-        withDir("graft_ivf_jobs") { dir =>
-          Similarity.saveIvf(corpus, "vec_id", "embedding", dir, nlist = 6,
-            quantizer = quantizer)
-          val index = Similarity.loadIvf(spark, dir)
-          jobsSoFar() // drop jobs of the build and load still queued on the bus
-          // nprobe = 0: the width derives from the index's nlist; a PQ
-          // index's codebook was collected by loadIvf
-          val top = Similarity.ivfTopKIndexed(index, q, 5, "vec_id", "embedding")
-          assert(jobsSoFar() == 0,
-            s"$quantizer: building the search plan must run no Spark job")
-          assert(top.collect().nonEmpty)
-          val collectJobs = jobsSoFar()
-          if (quantizer == Similarity.Flat)
-            assert(collectJobs <= 4, s"collect ran $collectJobs jobs; expected at most 4")
+    withJobCount { jobsSoFar =>
+      Seq(Similarity.Flat, Similarity.Sq8, Similarity.Pq(dim = 4, m = 2, ksub = 4))
+        .foreach { quantizer =>
+          withDir("graft_ivf_jobs") { dir =>
+            Similarity.saveIvf(corpus, "vec_id", "embedding", dir, nlist = 6,
+              quantizer = quantizer)
+            val index = Similarity.loadIvf(spark, dir)
+            jobsSoFar() // drop jobs of the build and load still queued on the bus
+            // nprobe = 0: the width derives from the index's nlist; a PQ
+            // index's codebook was collected by loadIvf
+            val top = Similarity.ivfTopKIndexed(index, q, 5, "vec_id", "embedding")
+            assert(jobsSoFar() == 0,
+              s"$quantizer: building the search plan must run no Spark job")
+            assert(top.collect().nonEmpty)
+            val collectJobs = jobsSoFar()
+            if (quantizer == Similarity.Flat)
+              assert(collectJobs <= 4, s"collect ran $collectJobs jobs; expected at most 4")
+          }
         }
-      }
-    finally spark.sparkContext.removeSparkListener(listener)
+    }
   }
 }

@@ -81,14 +81,14 @@ class PqSpec extends SparkSpec {
     val cb = Similarity.pqTrain(c, "vec_id", "embedding", dim, m = 4, ksub = 8,
       iters = 2)
     val both = c.select(col("vec_id"),
-      Similarity.pqCodes(spark, col("embedding"), cb).alias("fast"),
+      Similarity.pqCodes(col("embedding"), cb).alias("fast"),
       Similarity.pqCodesHof(col("embedding"), cb).alias("ref"))
     assert(both.filter(not(col("fast") === col("ref"))).count() == 0)
     // duplicated centroids force distance ties — both must pick lowest id
     val dupBook = cb.book.map(b => b.map(_ => b.head.clone()))
     val tieCb = Similarity.PqCodebook(dim, dupBook)
     val ties = c.limit(20).select(
-      Similarity.pqCodes(spark, col("embedding"), tieCb).alias("fast"),
+      Similarity.pqCodes(col("embedding"), tieCb).alias("fast"),
       Similarity.pqCodesHof(col("embedding"), tieCb).alias("ref"))
     assert(ties.filter(not(col("fast") === col("ref"))).count() == 0)
     assert(ties.select("fast").as[Seq[Int]].collect().forall(_.forall(_ == 0)))
@@ -125,7 +125,7 @@ class PqSpec extends SparkSpec {
     val bad = Seq((0L, Array(1f, 2f))).toDF("vec_id", "embedding")
     val cb = Similarity.pqTrain(corpus(8), "vec_id", "embedding", dim, m = 4, ksub = 8)
     val e = intercept[Exception] {
-      bad.select(Similarity.pqCodes(spark, col("embedding"), cb)).collect()
+      bad.select(Similarity.pqCodes(col("embedding"), cb)).collect()
     }
     assert(e.getMessage.contains("pq"))
   }
@@ -138,7 +138,7 @@ class PqSpec extends SparkSpec {
     val bad = Seq((0L, vals)).toDF("vec_id", "embedding")
     val cb = Similarity.pqTrain(corpus(8), "vec_id", "embedding", dim, m = 4, ksub = 8)
     val e = intercept[Exception] {
-      bad.select(Similarity.pqCodes(spark, col("embedding"), cb)).collect()
+      bad.select(Similarity.pqCodes(col("embedding"), cb)).collect()
     }
     assert(e.getMessage.contains("null elements"))
   }

@@ -734,7 +734,7 @@ class PrivacyDedupOpsSpec extends SparkSpec {
       nlist = 4, trainIters = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val cents = Similarity.trainCentroids(vecs, "vec_id", "embedding", 4, 2)
-    val want = Similarity.nearestCentroid(spark, vecs, "vec_id", "embedding", cents)
+    val want = Similarity.nearestCentroid(vecs, "vec_id", "embedding", cents)
       .select(col("vec_id"), col("cent_id").cast("long"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // 6-dp rounding in kmeansAssign can flip genuinely borderline pairs;

@@ -128,7 +128,7 @@ class ProfileSpec extends SparkSpec {
       .map(r => r._1 -> r).toMap
     // fused path, UNROUNDED (reach the struct directly for bit-exactness)
     val got = rows.groupBy(col("__g"))
-      .agg(graft.functions.MadStats.madStats(spark, col("__v"), k).alias("s"))
+      .agg(graft.functions.MadStats.madStats(col("__v"), k).alias("s"))
       .select(col("__g"), col("s.med"), col("s.mad"), col("s.n"), col("s.n_outliers"))
       .as[(String, Double, Double, Long, Long)].collect()
       .map(r => r._1 -> r).toMap

@@ -9,7 +9,7 @@ class Sq8Spec extends SparkSpec {
   import spark.implicits._
 
   private def enc(vec: Array[Float]) =
-    Seq(Tuple1(vec)).toDF("v").select(Sq8.encode(spark, col("v")).alias("b"))
+    Seq(Tuple1(vec)).toDF("v").select(Sq8.encode(col("v")).alias("b"))
 
   test("blob layout: 16-byte header + one code byte per element") {
     val b = enc(Array(1f, 2f, 3f)).collect()(0).getAs[Array[Byte]](0)
@@ -28,7 +28,7 @@ class Sq8Spec extends SparkSpec {
     val vecs = (0 until 50).map(i =>
       (i.toLong, Array.fill(64)(rnd.nextFloat() * 4 - 2))).toDF("id", "v")
     val out = vecs.select(col("id"), col("v"),
-        Sq8.decode(spark, Sq8.encode(spark, col("v"))).alias("d"))
+        Sq8.decode(Sq8.encode(col("v"))).alias("d"))
       .collect()
     out.foreach { r =>
       val v = r.getSeq[Float](1); val d = r.getSeq[Double](2)
@@ -40,21 +40,21 @@ class Sq8Spec extends SparkSpec {
     }
     // constant vector: scale 0, decode exactly the constant
     val const = enc(Array(7.5f, 7.5f, 7.5f))
-      .select(Sq8.decode(spark, col("b"))).collect()(0).getSeq[Double](0)
+      .select(Sq8.decode(col("b"))).collect()(0).getSeq[Double](0)
     assert(const == Seq(7.5, 7.5, 7.5))
   }
 
   test("null vector -> null blob; null elements and short blobs raise") {
     val withNull = Seq(Tuple1(Option.empty[Array[Float]])).toDF("v")
-      .select(Sq8.encode(spark, col("v")).alias("b")).collect()(0)
+      .select(Sq8.encode(col("v")).alias("b")).collect()(0)
     assert(withNull.isNullAt(0))
     val err = intercept[Exception](
       Seq(Tuple1(Array[java.lang.Float](1f, null))).toDF("v")
-        .select(Sq8.encode(spark, col("v"))).collect())
+        .select(Sq8.encode(col("v"))).collect())
     assert(err.getMessage != null)
     val short = intercept[Exception](
       Seq(Tuple1(Array[Byte](1, 2, 3))).toDF("b")
-        .select(Sq8.decode(spark, col("b"))).collect())
+        .select(Sq8.decode(col("b"))).collect())
     assert(short.getMessage != null)
   }
 
@@ -90,7 +90,7 @@ class Sq8Spec extends SparkSpec {
       queries, 10, "vec_id", "embedding")
     // the reference: decode explicitly, then the standard exact top-k
     val decoded = corpus.select(col("vec_id"),
-      Sq8.decode(spark, Sq8.encode(spark, col("embedding"))).alias("embedding"))
+      Sq8.decode(Sq8.encode(col("embedding"))).alias("embedding"))
     val want = Similarity.bruteForceTopK(decoded, queries.select(col("vec_id"),
       col("embedding").cast("array<double>").alias("embedding")),
       10, "vec_id", "embedding")

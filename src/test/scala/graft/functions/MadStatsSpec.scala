@@ -16,7 +16,7 @@ class MadStatsSpec extends SparkSpec {
       : (Double, Double, Long, Long) = {
     val df = values.map(v => ("g", v)).toDF("g", "v").repartition(7)
     val r = df.groupBy("g")
-      .agg(MadStats.madStats(spark, col("v"), k).alias("s"))
+      .agg(MadStats.madStats(col("v"), k).alias("s"))
       .select(col("s.med"), col("s.mad"), col("s.n"), col("s.n_outliers"))
       .as[(Double, Double, Long, Long)].collect()(0)
     r
@@ -114,7 +114,7 @@ class MadStatsSpec extends SparkSpec {
       val df = spark.range(5000).select(lit("g").alias("g"),
         col("id").cast("double").alias("v"))
       val thrown = intercept[Throwable] {
-        df.groupBy("g").agg(MadStats.madStats(spark, col("v"), 3.0).alias("s"))
+        df.groupBy("g").agg(MadStats.madStats(col("v"), 3.0).alias("s"))
           .collect()
       }
       def messages(t: Throwable): Seq[String] =

@@ -1,0 +1,51 @@
+#!/usr/bin/env python3
+"""Compare two `graft.tools.Inspect explain` dump directories plan by plan.
+
+    python3 scripts_plan_diff.py <dirA> <dirB>
+
+Each directory holds `<name>_<tag>.txt` files; files pair up by query name
+(the part before the last `_`), so the two dumps may use different tags.
+Per-run noise is normalized away before comparing: expression ids (`#12`,
+`#12L`), exchange `plan_id`s, lambda identity hashes, per-process temp-dir
+suffixes (`_p<pid>`) and RDD ids. Prints each name whose plans differ or
+that only one side has; exits 1 if there is any, else 0."""
+import os, re, sys
+
+NORMALIZE = [
+    (re.compile(r"#[0-9]+L?"), "#N"),
+    (re.compile(r"plan_id=[0-9]+"), "plan_id=N"),
+    (re.compile(r"\$\$Lambda(\$[0-9]+)?/0x[0-9a-f]+@[0-9a-f]+"), "LAMBDA"),
+    (re.compile(r"_p[0-9]+"), "_pN"),
+    (re.compile(r"RDD\[[0-9]+\]"), "RDD[N]"),
+]
+
+
+def normalized(path):
+    with open(path, encoding="utf-8") as f:
+        text = f.read()
+    for pattern, repl in NORMALIZE:
+        text = pattern.sub(repl, text)
+    return text
+
+
+def plans(d):
+    return {f[:-len(".txt")].rsplit("_", 1)[0]: os.path.join(d, f)
+            for f in os.listdir(d) if f.endswith(".txt")}
+
+
+def main():
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    a, b = plans(sys.argv[1]), plans(sys.argv[2])
+    differ = sorted(n for n in a.keys() | b.keys()
+                    if n not in a or n not in b
+                    or normalized(a[n]) != normalized(b[n]))
+    for n in differ:
+        side = "only in A" if n not in b else "only in B" if n not in a else "differs"
+        print(f"{n}: {side}")
+    print(f"{len(a)} vs {len(b)} plans, {len(differ)} differing")
+    sys.exit(1 if differ else 0)
+
+
+if __name__ == "__main__":
+    main()

@@ -173,13 +173,16 @@ final class Packer(
     }
 
   /** Aggregate-strategy pack over an ALREADY-PREPARED frame — shared by
-    * [[pack]] and [[packSplitJoin]] so the split path runs frame prep and
-    * extra-column classification exactly once. */
+    * [[pack]], [[packSalted]], [[packSplitJoin]] and [[packStreaming]], so
+    * each runs frame prep and extra-column classification exactly once.
+    * `saltBuckets > 0` salts the leaf fold only (see [[packSingleLevel]]). */
   private def packAggregate(prepared: DataFrame, toLevel: String,
                             extraColumns: ExtraColumns, added: Seq[String],
-                            preSharded: Boolean = false): DataFrame = {
+                            preSharded: Boolean = false,
+                            saltBuckets: Int = 0): DataFrame = {
     var cur = applyExtraColumnsPolicy(prepared, extraColumns)
     val targetIdx = spec.levelIndex(toLevel)
+    val leafIdx = metas.size - 1
     // Multi-level packs group by successively coarser keys. One explicit
     // repartition on the COARSEST stage's keys satisfies every stage's
     // clustering requirement (HashPartitioning on a subset of each finer
@@ -187,40 +190,59 @@ final class Packer(
     // shuffle instead of one per level — the distributed analogue of the
     // reference's root-key bucketing (hierarchical_packer.py:1193),
     // applied by default because it is strictly fewer shuffles.
-    val stages = (metas.size - 1 to targetIdx by -1)
+    val stages = (leafIdx to targetIdx by -1)
       .filter(i => metas(i).ancestorKeys.nonEmpty)
-    // preSharded: the caller (packStreaming) already repartitioned on the
-    // ROOT keys — a subset of every stage's grouping keys — with an
-    // explicit partition count. Re-repartitioning here would collapse
-    // with (and override) that shuffle, silently discarding the caller's
-    // `partitions` contract.
-    if (!preSharded && stages.size >= 2) {
+    // Skipped when
+    //  - preSharded: the caller (packStreaming) already repartitioned on
+    //    the ROOT keys — a subset of every stage's grouping keys — with an
+    //    explicit partition count. Re-repartitioning here would collapse
+    //    with (and override) that shuffle, silently discarding the
+    //    caller's `partitions` contract.
+    //  - salted: the salted leaf's phase 1 must shuffle by (keys, salt)
+    //    for the skew spreading to happen; a coarsest-key repartition
+    //    would put a hot parent's whole subtree back in one task.
+    if (!preSharded && saltBuckets <= 0 && stages.size >= 2) {
       val coarsest = metas(stages.last).ancestorKeys.filter(hasCol(cur, _))
       if (coarsest.nonEmpty) cur = cur.repartition(coarsest.map(topCol): _*)
     }
     val audit = new AuditCtx
-    (metas.size - 1 to targetIdx by -1).foreach { i =>
-      cur = packSingleLevel(cur, i, validate = validateOnPack, auditCtx = audit)
+    (leafIdx to targetIdx by -1).foreach { i =>
+      cur = packSingleLevel(cur, i, validate = validateOnPack, auditCtx = audit,
+        saltBuckets = if (i == leafIdx) saltBuckets else 0)
     }
     dropInternal(dropIfPresent(cur, added))
   }
 
   /** P2: pack exactly one level (reference: _pack_single_level,
-    * hierarchical_packer.py:2614-2698). */
+    * hierarchical_packer.py:2614-2698): fold the level's flat columns into
+    * one struct, then group by the ancestor keys into a child list, with
+    * `first(ignoreNulls)` for parent attributes, `min` for the row id and
+    * the optional min/max audit in the same aggregation.
+    *
+    * `saltBuckets > 0` makes this the SALTED fold ([[packSalted]]): the
+    * same aggregates run twice. Phase 1 groups by (ancestorKeys, salt),
+    * where salt = hash(level ids) % saltBuckets, so a hot parent's
+    * children spread across tasks as unsorted partial lists. Phase 2
+    * groups by the ancestor keys and re-applies each aggregate to its own
+    * phase-1 output by name (first of firsts, min of mins, max of maxes),
+    * then flattens and sorts the partial lists. Contents are identical to
+    * the plain fold: first-non-null, min and max compose over partial
+    * groups, and the child list is sorted only after the merge.
+    *
+    * Expects a frame from `prepareFrame`: the row id, when the pack
+    * preserves child order, is already there. */
   private[graft] def packSingleLevel(df0: DataFrame, levelIdx: Int,
                                      validate: Boolean = false,
-                                     auditCtx: AuditCtx = new AuditCtx): DataFrame = {
+                                     auditCtx: AuditCtx = new AuditCtx,
+                                     saltBuckets: Int = 0): DataFrame = {
     var df = df0
-    if (preserveChildOrder && !hasCol(df, RowIdCol))
-      df = df.select((monotonically_increasing_id().alias(RowIdCol) +:
-        df.schema.fieldNames.toIndexedSeq.map(topCol)): _*)
-
     val meta = metas(levelIdx)
-    val names = df.schema.fieldNames.toIndexedSeq
-    val levelCols = names.filter(c => meta.prefix.nonEmpty && c.startsWith(meta.prefix))
+    val levelCols = df.schema.fieldNames.toIndexedSeq
+      .filter(c => meta.prefix.nonEmpty && c.startsWith(meta.prefix))
     if (levelCols.isEmpty) return df
 
     val groupKeys = meta.ancestorKeys
+    val salted = saltBuckets > 0 && groupKeys.nonEmpty
 
     // order_by expressions reference this level's flat columns, which are
     // about to be folded into the struct — materialize them first
@@ -233,6 +255,16 @@ final class Packer(
       df = orderExprs.zip(orderTempCols).foldLeft(df) {
         case (d, (e, a)) => d.withColumn(a, e)
       }
+    if (salted) {
+      // deterministic salt from this level's own ids: the same child
+      // always lands in the same bucket. With no id columns present, hash
+      // ALL level columns — an argless xxhash64 would be a constant and
+      // silently disable the skew spreading.
+      val ids = meta.idColumns.filter(hasCol(df, _))
+      val saltSource = if (ids.nonEmpty) ids else levelCols
+      df = df.withColumn(SaltCol,
+        pmod(xxhash64(saltSource.map(topCol): _*), lit(saltBuckets.toLong)))
+    }
 
     val structExpr = struct(levelCols.map(c =>
       topCol(c).alias(c.substring(meta.prefix.length))): _*).alias(meta.path)
@@ -242,24 +274,22 @@ final class Packer(
     if (groupKeys.isEmpty) return df
 
     val hasRowId = hasCol(df, RowIdCol)
-    val excluded = groupKeys.toSet ++ orderTempCols + meta.path ++
-      (if (hasRowId) Set(RowIdCol) else Set.empty[String])
+    val excluded = groupKeys.toSet ++ orderTempCols + meta.path + RowIdCol + SaltCol
     val remaining = df.schema.fieldNames.toIndexedSeq.filterNot(excluded.contains)
 
     val firstAggs = remaining.map(c => first(topCol(c), ignoreNulls = true).alias(c))
 
     val sortByCols = orderTempCols ++ (if (preserveChildOrder && hasRowId) Seq(RowIdCol) else Nil)
-    val childList: Column =
-      if (sortByCols.isEmpty) collect_list(topCol(meta.path)).alias(meta.path)
-      else {
-        // collect (sortKeys..., payload), sort by struct order (sort keys
-        // lead; rowId is unique so payload never decides), strip to payload
-        val keyed = struct((sortByCols.zipWithIndex.map { case (c, i) =>
-          topCol(c).alias(s"__k$i") } :+ topCol(meta.path).alias("__payload")): _*)
-        val sorted = sortKeyed(df.schema(meta.path).dataType, collect_list(keyed),
-          sortByCols.size)
-        transform(sorted, x => x.getField("__payload")).alias(meta.path)
-      }
+    // collect (sortKeys..., payload), sort by struct order (sort keys
+    // lead; rowId is unique so payload never decides), strip to payload
+    val keyed =
+      if (sortByCols.isEmpty) topCol(meta.path)
+      else struct((sortByCols.zipWithIndex.map { case (c, i) =>
+        topCol(c).alias(s"__k$i") } :+ topCol(meta.path).alias("__payload")): _*)
+    def childList(collected: Column): Column =
+      (if (sortByCols.isEmpty) collected
+       else transform(sortKeyed(df.schema(meta.path).dataType, collected, sortByCols.size),
+         x => x.getField("__payload"))).alias(meta.path)
 
     val rowIdAgg =
       if (preserveChildOrder && hasRowId) Seq(min(topCol(RowIdCol)).alias(RowIdCol))
@@ -269,16 +299,29 @@ final class Packer(
     // ⟺ min(c) <=> max(c) (nulls ignored by both, like the reference's
     // drop_nulls + n_unique). min/max are partial-aggregatable and add no
     // Expand step, unlike a countDistinct alongside collect_list.
-    val auditAggs =
-      if (validate && remaining.nonEmpty)
-        remaining.zipWithIndex.flatMap { case (c, i) => Seq(
-          min(topCol(c)).alias(s"${AuditPrefix}min_$i"),
-          max(topCol(c)).alias(s"${AuditPrefix}max_$i")) }
+    val doAudit = validate && remaining.nonEmpty
+    val auditMin = remaining.indices.map(i => s"${AuditPrefix}min_$i")
+    val auditMax = remaining.indices.map(i => s"${AuditPrefix}max_$i")
+    def auditAggs(minOf: Seq[String], maxOf: Seq[String]): Seq[Column] =
+      if (doAudit) remaining.indices.flatMap { i => Seq(
+        min(topCol(minOf(i))).alias(auditMin(i)),
+        max(topCol(maxOf(i))).alias(auditMax(i))) }
       else Nil
 
-    val aggs = firstAggs ++ Seq(childList) ++ rowIdAgg ++ auditAggs
-    val packed = df.groupBy(groupKeys.map(topCol): _*).agg(aggs.head, aggs.tail: _*)
-    if (auditAggs.isEmpty) packed
+    val packed =
+      if (!salted) {
+        val aggs = firstAggs ++ Seq(childList(collect_list(keyed))) ++ rowIdAgg ++
+          auditAggs(remaining, remaining)
+        df.groupBy(groupKeys.map(topCol): _*).agg(aggs.head, aggs.tail: _*)
+      } else {
+        val phase1 = firstAggs ++ Seq(collect_list(keyed).alias(meta.path)) ++ rowIdAgg ++
+          auditAggs(remaining, remaining)
+        val phase2 = firstAggs ++ Seq(childList(flatten(collect_list(topCol(meta.path))))) ++
+          rowIdAgg ++ auditAggs(auditMin, auditMax)
+        df.groupBy((groupKeys :+ SaltCol).map(topCol): _*).agg(phase1.head, phase1.tail: _*)
+          .groupBy(groupKeys.map(topCol): _*).agg(phase2.head, phase2.tail: _*)
+      }
+    if (!doAudit) packed
     else runUniformityAudit(packed, remaining, meta.name, auditCtx)
   }
 
@@ -587,32 +630,20 @@ final class Packer(
   // ------------------------------------------------------------ skew guard
 
   /** Two-phase ("salted") pack for SKEWED root keys: when one parent owns a
-    * disproportionate share of leaf rows, the single `groupBy` of
-    * [[packSingleLevel]] builds that parent's entire child list in one task.
-    * Here the leaf level aggregates in two phases: (1) group by
-    * (ancestorKeys, salt) where salt = hash(leaf ids) % buckets — children
-    * of a hot parent spread across `saltBuckets` tasks building partial
-    * chunks; (2) group by ancestorKeys, flatten + `array_sort` the chunks
-    * and strip sort keys. Contents are identical to [[pack]] (equivalence
-    * spec-tested); the final row still holds the whole list — inherent to
-    * the data model — but sort/serialize work parallelizes.
-    *
-    * Deliberately does NOT pre-repartition on the coarsest keys (the
-    * [[pack]] single-shuffle trick) — phase 1 must shuffle by (keys, salt)
-    * for the skew spreading to happen. */
+    * disproportionate share of leaf rows, the plain fold builds that
+    * parent's entire child list in one task. Here the leaf level runs the
+    * salted form of [[packSingleLevel]]: (1) group by (ancestorKeys, salt)
+    * where salt = hash(leaf ids) % buckets — children of a hot parent
+    * spread across `saltBuckets` tasks building partial chunks; (2) group
+    * by ancestorKeys, flatten + sort the chunks and strip sort keys. The
+    * coarser levels run the plain fold. Contents are identical to [[pack]]
+    * (equivalence spec-tested); the final row still holds the whole list —
+    * inherent to the data model — but sort/serialize work parallelizes. */
   def packSalted(df: DataFrame, toLevel: String, saltBuckets: Int = 32,
                  extraColumns: ExtraColumns = ExtraColumns.Preserve): DataFrame = {
     require(saltBuckets > 1, s"saltBuckets must be > 1, got $saltBuckets")
     val (prepared, added) = prepareFrame(df)
-    var cur = applyExtraColumnsPolicy(prepared, extraColumns)
-    val targetIdx = spec.levelIndex(toLevel)
-    val leafIdx = metas.size - 1
-    val audit = new AuditCtx
-    cur = packSingleLevelSalted(cur, leafIdx, saltBuckets, audit)
-    ((leafIdx - 1) to targetIdx by -1).foreach { i =>
-      cur = packSingleLevel(cur, i, validate = validateOnPack, auditCtx = audit)
-    }
-    dropInternal(dropIfPresent(cur, added))
+    packAggregate(prepared, toLevel, extraColumns, added, saltBuckets = saltBuckets)
   }
 
   /** Leaf-level grouping-key skew probe: max/MEDIAN children-per-parent on
@@ -813,93 +844,6 @@ final class Packer(
         pack(df, toLevel, extraColumns, ParentStrategy.SplitJoin)
       case PackStrategy.Plain => pack(df, toLevel, extraColumns)
     }
-
-  private def packSingleLevelSalted(df0: DataFrame, levelIdx: Int,
-                                    saltBuckets: Int,
-                                    auditCtx: AuditCtx = new AuditCtx): DataFrame = {
-    var df = df0
-    if (preserveChildOrder && !hasCol(df, RowIdCol))
-      df = df.select((monotonically_increasing_id().alias(RowIdCol) +:
-        df.schema.fieldNames.toIndexedSeq.map(topCol)): _*)
-
-    val meta = metas(levelIdx)
-    val levelCols = df.schema.fieldNames.toIndexedSeq
-      .filter(c => meta.prefix.nonEmpty && c.startsWith(meta.prefix))
-    if (levelCols.isEmpty) return df
-    val groupKeys = meta.ancestorKeys
-    if (groupKeys.isEmpty) return packSingleLevel(df, levelIdx)
-
-    val orderExprs = meta.spec.orderBy
-    val orderTempCols: Seq[String] = orderExprs.indices.map(i => s"$OrderTempPrefix$i")
-    df = orderExprs.zip(orderTempCols).foldLeft(df) {
-      case (d, (e, a)) => d.withColumn(a, e)
-    }
-    // deterministic salt from this level's own ids: a hot parent's children
-    // spread across buckets; the same child always lands in the same bucket.
-    // With no id columns present, fall back to hashing ALL level columns —
-    // an argless xxhash64 would be a constant and silently disable the
-    // skew spreading this method exists for.
-    val saltSource = {
-      val ids = meta.idColumns.filter(hasCol(df, _))
-      if (ids.nonEmpty) ids else levelCols
-    }
-    df = df.withColumn(SaltCol,
-      pmod(xxhash64(saltSource.map(topCol): _*), lit(saltBuckets.toLong)))
-
-    val structExpr = struct(levelCols.map(c =>
-      topCol(c).alias(c.substring(meta.prefix.length))): _*).alias(meta.path)
-    val others = df.schema.fieldNames.toIndexedSeq.filterNot(levelCols.contains)
-    df = df.select((others.map(topCol) :+ structExpr): _*)
-
-    val hasRowId = hasCol(df, RowIdCol)
-    val excluded = groupKeys.toSet ++ orderTempCols + meta.path + SaltCol ++
-      (if (hasRowId) Set(RowIdCol) else Set.empty[String])
-    val remaining = df.schema.fieldNames.toIndexedSeq.filterNot(excluded.contains)
-    val sortByCols = orderTempCols ++ (if (preserveChildOrder && hasRowId) Seq(RowIdCol) else Nil)
-
-    def firstAggs = remaining.map(c => first(topCol(c), ignoreNulls = true).alias(c))
-    def rowIdAgg = if (preserveChildOrder && hasRowId)
-      Seq(min(topCol(RowIdCol)).alias(RowIdCol)) else Nil
-
-    // M10 audit rides both phases: per-(keys,salt) min/max in phase 1,
-    // min-of-mins / max-of-maxes per keys in phase 2 — composes exactly
-    // because min/max are associative (see packSingleLevel's audit note).
-    val doAudit = validateOnPack && remaining.nonEmpty
-    val auditP1 =
-      if (doAudit) remaining.zipWithIndex.flatMap { case (c, i) => Seq(
-        min(topCol(c)).alias(s"${AuditPrefix}min_$i"),
-        max(topCol(c)).alias(s"${AuditPrefix}max_$i")) }
-      else Nil
-    val auditP2 =
-      if (doAudit) remaining.indices.flatMap { i => Seq(
-        min(col(s"${AuditPrefix}min_$i")).alias(s"${AuditPrefix}min_$i"),
-        max(col(s"${AuditPrefix}max_$i")).alias(s"${AuditPrefix}max_$i")) }
-      else Nil
-
-    // phase 1: partial chunks per (keys, salt) — keyed structs, unsorted
-    val keyed =
-      if (sortByCols.isEmpty) topCol(meta.path)
-      else struct((sortByCols.zipWithIndex.map { case (c, i) =>
-        topCol(c).alias(s"__k$i") } :+ topCol(meta.path).alias("__payload")): _*)
-    val phase1Aggs = firstAggs ++ Seq(collect_list(keyed).alias(meta.path)) ++ rowIdAgg ++ auditP1
-    val partial = df.groupBy((groupKeys :+ SaltCol).map(topCol): _*)
-      .agg(phase1Aggs.head, phase1Aggs.tail: _*)
-
-    // phase 2: merge chunks per keys — flatten, sort once, strip sort keys
-    val merged: Column = {
-      if (sortByCols.isEmpty) flatten(collect_list(topCol(meta.path))).alias(meta.path)
-      else {
-        val sorted = sortKeyed(df.schema(meta.path).dataType,
-          flatten(collect_list(topCol(meta.path))), sortByCols.size)
-        transform(sorted, x => x.getField("__payload")).alias(meta.path)
-      }
-    }
-    val phase2Aggs = firstAggs ++ Seq(merged) ++ rowIdAgg ++ auditP2
-    val packed = partial.groupBy(groupKeys.map(topCol): _*)
-      .agg(phase2Aggs.head, phase2Aggs.tail: _*)
-    if (!doAudit) packed
-    else runUniformityAudit(packed, remaining, meta.name, auditCtx)
-  }
 
   // ------------------------------------------------------- streaming parity
 

@@ -290,14 +290,17 @@ object Dedup {
         transform(slice(signature, b * rowsPerBand + 1, lit(rowsPerBand)),
           x => x.cast("string")))))
 
-  /** Tokenize+shingle ONCE into a materialization fence. The repartition
-    * is a deliberate barrier, not for distribution: the id-hash exchange
-    * is reused (ReuseExchange) by every consumer — the signature
-    * derivation AND both sides of the verify join — so the regex
-    * tokenize/shingle pipeline runs exactly once over the corpus instead
-    * of once per consumer. Its output partitioning (hash on id) also
-    * satisfies the verify join's distribution, so the join adds no
-    * exchange on the shingle side. */
+  /** Tokenize+shingle into a materialization fence. The repartition is a
+    * deliberate barrier, not for distribution: when every consumer — the
+    * signature derivation AND both sides of the verify join — plans the
+    * same subtree under it, ReuseExchange shares one id-hash exchange and
+    * the regex tokenize/shingle pipeline runs once over the corpus
+    * instead of once per consumer. That holds over an uncached input
+    * (measured on an RDD-backed frame); over a `.cache()`d input the AQE
+    * final plan of [[minhashNearDuplicates]] reuses nothing and holds four
+    * `REPARTITION_BY_COL` exchanges, each tokenizing again. Its output
+    * partitioning (hash on id) also satisfies the verify join's
+    * distribution, so the join adds no exchange on the shingle side. */
   private[ext] def shingleFrame(df: DataFrame, textCol: String, idCol: String,
                                 shingleN: Int): DataFrame =
     df.select(col(idCol), wordShingles(col(textCol), shingleN).alias("__sh"))
@@ -374,17 +377,9 @@ object Dedup {
         "collapse to the hash of an empty slice, all docs would share one " +
         "bucket, and the maxBucketSize prune would then emit NO candidates)")
     val rowsPerBand = numHashes / bands
-    // Second small fence on (id, signature): without it the optimizer
-    // collapses the signature projection into the band lambda,
-    // re-evaluating the k-seed minhash once PER BAND, and the LSH
-    // self-join then recomputes that doubled pipeline on each side.
-    // With the fence the signature computes once per row pre-shuffle and
-    // ReuseExchange shares the exchange between both join sides (measured
-    // 25x on 100 docs). Payload is only (id, k x 8B signature).
     val sig = sh.select(col(idCol),
       graft.functions.MinHashSignature.signature(col("__sh"), numHashes)
         .alias("__sig"))
-      .repartition(col(idCol))
     val banded = sig.select(col(idCol),
         posexplode(bandKeys(col("__sig"), bands, rowsPerBand)).as(Seq("__band", "__bucket")))
     val pruned = dropHotBuckets(banded, Seq("__band", "__bucket"), maxBucketSize)
@@ -789,7 +784,6 @@ object Dedup {
       val sig = sh.select(col(idCol),
         graft.functions.MinHashSignature.signature(col("__sh"), numHashes)
           .alias("__sig"))
-        .repartition(col(idCol))
       (sh, sig.select(col(idCol), posexplode(
         bandKeys(col("__sig"), bands, rowsPerBand))
         .as(Seq("__band", "__bucket"))))

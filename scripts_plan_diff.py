@@ -7,7 +7,10 @@ Each directory holds `<name>_<tag>.txt` files; files pair up by query name
 (the part before the last `_`), so the two dumps may use different tags.
 Per-run noise is normalized away before comparing: expression ids (`#12`,
 `#12L`), exchange `plan_id`s, lambda identity hashes, per-process temp-dir
-suffixes (`_p<pid>`) and RDD ids. Prints each name whose plans differ or
+suffixes (`_p<pid>`), RDD ids and RDD call-site line numbers
+(`createDataFrame at Multimodal.scala:155` → `Multimodal.scala:N`), since a
+refactor that moves the line of a `createDataFrame` or `.rdd` call changes
+that text without changing the plan. Prints each name whose plans differ or
 that only one side has; exits 1 if there is any, else 0."""
 import os, re, sys
 
@@ -17,6 +20,7 @@ NORMALIZE = [
     (re.compile(r"\$\$Lambda(\$[0-9]+)?/0x[0-9a-f]+@[0-9a-f]+"), "LAMBDA"),
     (re.compile(r"_p[0-9]+"), "_pN"),
     (re.compile(r"RDD\[[0-9]+\]"), "RDD[N]"),
+    (re.compile(r"\.scala:[0-9]+"), ".scala:N"),
 ]
 
 

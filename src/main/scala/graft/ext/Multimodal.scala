@@ -1,6 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import java.awt.image.BufferedImage
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,9 +22,12 @@ import org.apache.spark.sql.types._
  *
  *  - assets are `(asset_id, payload: binary, meta: struct)` rows;
  *  - decode stages are per-row Column expressions where possible
- *    (codegen'd, no serialization), and a `mapPartitions` batch path
- *    ([[decodeBatches]]) mirrors how a real codec (JNI/FFI) would be
- *    driven: one decoder instance per partition, rows streamed through;
+ *    (codegen'd, no serialization). Every byte-level stage — the JDK
+ *    codecs cannot be Catalyst expressions — runs through ONE
+ *    per-partition path (`perAsset`, behind [[decodeBatches]] and the
+ *    decode / resize / transcode / QA stages below), the way a real codec
+ *    (JNI/FFI) is driven: one decoder instance per partition, rows
+ *    streamed through, asset_id passed along;
  *  - 100 TB: payloads dominate size, so stages select-project only the
  *    columns they need (column pruning keeps payload bytes out of
  *    shuffles), and [[repartitionBySize]] balances skewed payload sizes
@@ -121,34 +127,52 @@ object Multimodal {
     }
   }
 
+  /** The one per-partition path of every byte-level stage. `in` holds
+    * asset_id first; `open` runs once per partition — where a stage opens
+    * its decoder handles or writers — and returns the per-row function
+    * whose fields follow the passed-through asset_id (a null id stays
+    * null) in the `out` schema. Only `open` crosses the wire, so codec
+    * state never needs to be serializable. */
+  private def perAsset(in: DataFrame, out: StructType)(
+      open: () => Row => Row): DataFrame = {
+    val rows = in.rdd.mapPartitions { it =>
+      val f = open()
+      it.map { r =>
+        val id = if (r.isNullAt(0)) null else r.getLong(0)
+        Row.fromSeq(id +: f(r).toSeq)
+      }
+    }
+    in.sparkSession.createDataFrame(rows, out)
+  }
+
+  private def idAndPayload(assets: DataFrame): DataFrame =
+    assets.select(col("asset_id"), col("payload"))
+
+  /** A stage's output schema: a nullable asset_id, then `fields`. */
+  private def idSchema(fields: (String, DataType)*): StructType =
+    StructType(StructField("asset_id", LongType) +:
+      fields.map { case (n, t) => StructField(n, t) })
+
   /**
-   * Batch decode via mapPartitions — the pattern for codecs that need
-   * per-executor state (decoder handles, GPU contexts). The decoder is
-   * the deterministic fake; a real implementation swaps the factory only.
+   * Batch decode for codecs that need per-executor state (decoder
+   * handles, GPU contexts), on the same per-partition path every
+   * byte-level stage here runs through. The decoder is the deterministic
+   * fake; a real implementation swaps the factory only.
    */
   def decodeBatches(assets: DataFrame, dim: Int = 16): DataFrame =
     decodeBatches(assets, dim, () => fakeCodec(dim))
 
   /** [[decodeBatches]] with an explicit codec factory. The factory runs
     * exactly once per partition (property-tested), each row streams
-    * through that one instance — never an init per row. */
+    * through that one instance — never an init per row. Null payloads
+    * give null features. */
   def decodeBatches(assets: DataFrame, dim: Int,
-                    codecFactory: () => AssetCodec): DataFrame = {
-    val spark = assets.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("features", ArrayType(DoubleType))))
-    val rows = assets.select(col("asset_id"), col("payload")).rdd.mapPartitions { it =>
+                    codecFactory: () => AssetCodec): DataFrame =
+    perAsset(idAndPayload(assets),
+        idSchema("features" -> ArrayType(DoubleType))) { () =>
       val codec = codecFactory() // init-once per partition
-      // null ids/payloads pass through as nulls (schema declares nullable)
-      it.map { r =>
-        val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-        val payload = if (r.isNullAt(1)) null else codec.decode(r.getAs[Array[Byte]](1))
-        Row(id, payload)
-      }
+      r => Row(if (r.isNullAt(1)) null else codec.decode(r.getAs[Array[Byte]](1)))
     }
-    spark.createDataFrame(rows, outSchema)
-  }
 
   /** Spread assets uniformly across tasks before an expensive decode so no
     * task inherits a clump of heavy payloads. Hash-spread gives equal
@@ -187,78 +211,86 @@ object Multimodal {
     (r << 16) | (g << 8) | b
   }
 
-  /** Deterministic planted image encoded as REAL PNG bytes. */
-  private[ext] def plantedPng(id: Long): Array[Byte] = {
-    val (w, h) = plantedDims(id)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { img.setRGB(x, y, plantedRgb(id, x, y)); x += 1 }
-      y += 1
-    }
+  /** r + g + b of one packed RGB pixel. */
+  private def channelSum(rgb: Int): Int =
+    ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+
+  private def pngBytes(img: BufferedImage): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     bos.toByteArray
   }
 
-  private[ext] def readImage(bytes: Array[Byte]): java.awt.image.BufferedImage = {
+  /** A w×h RGB image whose pixel (x,y) is `rgb(x, y)`, as PNG bytes. */
+  private def pngOf(w: Int, h: Int)(rgb: (Int, Int) => Int): Array[Byte] = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { img.setRGB(x, y, rgb(x, y)); x += 1 }
+      y += 1
+    }
+    pngBytes(img)
+  }
+
+  /** Deterministic planted image encoded as REAL PNG bytes. */
+  private[ext] def plantedPng(id: Long): Array[Byte] = {
+    val (w, h) = plantedDims(id)
+    pngOf(w, h)(plantedRgb(id, _, _))
+  }
+
+  private[ext] def readImage(bytes: Array[Byte]): BufferedImage = {
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
     if (img == null) throw new IllegalArgumentException(
       "payload is not a decodable image (no ImageIO reader matched)")
     img
   }
 
-  /** Planted-PNG asset table, generated ON THE EXECUTORS (one encoder
-    * loop per partition, payload bytes never touch the driver). Same
-    * schema as [[assetsFromText]]. */
-  def plantedImages(spark: org.apache.spark.sql.SparkSession, n: Int,
-                    partitions: Int = 8): DataFrame = {
-    val rows = spark.range(0, n, 1, partitions).rdd.map { id =>
-      val (w, h) = plantedDims(id)
-      val png = plantedPng(id)
-      Row(id, png, Row("image/png", png.length.toLong, w, h))
+  /** An [[assetSchema]] table generated ON THE EXECUTORS (one encoder
+    * loop per partition, payload bytes never touch the driver): row
+    * i in [0, n) becomes `gen(i)` = (asset_id, payload, width, height),
+    * with n_bytes the payload length and null dims for non-raster media. */
+  private def plantedAssets(spark: SparkSession, n: Long, partitions: Int,
+                            mime: String)(
+      gen: Long => (Long, Array[Byte], Integer, Integer)): DataFrame = {
+    val rows = spark.range(0, n, 1, partitions).rdd.map { i =>
+      val (id, bytes, w, h) = gen(i)
+      Row(id, bytes, Row(mime, bytes.length.toLong, w, h))
     }
     spark.createDataFrame(rows, assetSchema)
   }
 
+  /** Planted-PNG asset table, generated on the executors. Same schema as
+    * [[assetsFromText]]. */
+  def plantedImages(spark: SparkSession, n: Int,
+                    partitions: Int = 8): DataFrame =
+    plantedAssets(spark, n, partitions, "image/png") { id =>
+      val (w, h) = plantedDims(id)
+      (id, plantedPng(id), w, h)
+    }
+
   /** REAL decode → per-image dimensions + exact pixel-channel sum
-    * (Σ r+g+b over all pixels, a long). mapPartitions, not a UDF-per-row:
+    * (Σ r+g+b over all pixels, a long). Per partition, not a UDF-per-row:
     * one reusable decode path per partition, payload column pruned away
     * after this stage. At 100 TB this is the narrow "open every blob
     * once" pass; everything downstream is small typed rows. */
-  def decodeImageMeta(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("pixel_sum", LongType)))
-    val rows = assets.select(col("asset_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-        if (r.isNullAt(1)) Row(id, null, null, null)
-        else {
-          val img = readImage(r.getAs[Array[Byte]](1))
-          val (w, h) = (img.getWidth, img.getHeight)
-          var sum = 0L
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-              x += 1
-            }
-            y += 1
-          }
-          Row(id, w, h, sum)
+  def decodeImageMeta(assets: DataFrame): DataFrame =
+    perAsset(idAndPayload(assets), idSchema("width" -> IntegerType,
+        "height" -> IntegerType, "pixel_sum" -> LongType)) { () => r =>
+      if (r.isNullAt(1)) Row(null, null, null)
+      else {
+        val img = readImage(r.getAs[Array[Byte]](1))
+        val (w, h) = (img.getWidth, img.getHeight)
+        var sum = 0L
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) { sum += channelSum(img.getRGB(x, y)); x += 1 }
+          y += 1
         }
+        Row(w, h, sum)
       }
     }
-    spark.createDataFrame(rows, outSchema)
-  }
 
   /** REAL codec through the [[AssetCodec]] seam: decode the image, split
     * it into `dim` vertical strips, mean luminance (r+g+b)/3/255 per
@@ -275,8 +307,7 @@ object Multimodal {
         var x = 0
         while (x < w) {
           val strip = math.min(dim - 1, x * dim / w)
-          val rgb = img.getRGB(x, y)
-          sums(strip) += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+          sums(strip) += channelSum(img.getRGB(x, y))
           counts(strip) += 1
           x += 1
         }
@@ -307,17 +338,7 @@ object Multimodal {
 
   private[ext] def perturbedPng(baseId: Long): Array[Byte] = {
     val (w, h) = plantedDims(baseId)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) { img.setRGB(x, y, perturbedRgb(baseId, x, y)); x += 1 }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngOf(w, h)(perturbedRgb(baseId, _, _))
   }
 
   /** Planted originals 0..n-1 plus perturbed near-duplicate clones of the
@@ -325,20 +346,18 @@ object Multimodal {
     * on the executors like [[plantedImages]]. The corpus every image
     * near-dup gate runs on: clone↔original pairs are TRUE near-dups by
     * construction, distinct planted images are far apart. */
-  def plantedImagesWithClones(spark: org.apache.spark.sql.SparkSession,
+  def plantedImagesWithClones(spark: SparkSession,
                               n: Int, nClones: Int,
                               cloneOffset: Long = 100000L,
                               partitions: Int = 8): DataFrame = {
     require(nClones <= n, s"nClones $nClones > n $n")
     require(cloneOffset >= n, "cloneOffset must clear the original id range")
-    val rows = spark.range(0, n + nClones, 1, partitions).rdd.map { i =>
-      val (id, png) =
-        if (i < n) (i, plantedPng(i))
-        else (cloneOffset + (i - n), perturbedPng(i - n))
-      val (w, h) = plantedDims(if (i < n) i else i - n)
-      Row(id, png, Row("image/png", png.length.toLong, w, h))
+    plantedAssets(spark, n + nClones, partitions, "image/png") { i =>
+      val base = if (i < n) i else i - n
+      val (w, h) = plantedDims(base)
+      if (i < n) (i, plantedPng(i), w, h)
+      else (cloneOffset + base, perturbedPng(base), w, h)
     }
-    spark.createDataFrame(rows, assetSchema)
   }
 
   /** 64-bit difference hash (dHash) of a decoded image: 9×8 area-binned
@@ -350,7 +369,7 @@ object Multimodal {
     * (DuckDB) derives bit-identical hashes to one that decodes real PNG
     * bytes (PNG is lossless). Products stay far below 2^63 (box sum ≤
     * 765·boxPixels, boxPixels ≤ a few hundred at sane sizes). */
-  private[ext] def dhashFromImage(img: java.awt.image.BufferedImage): Long = {
+  private[ext] def dhashFromImage(img: BufferedImage): Long = {
     val (w, h) = (img.getWidth, img.getHeight)
     require(w >= 9 && h >= 8,
       s"dhash needs at least 9x8 pixels, got ${w}x$h (resize first)")
@@ -362,8 +381,7 @@ object Multimodal {
       var x = 0
       while (x < w) {
         val bx = x * 9 / w
-        val rgb = img.getRGB(x, y)
-        sums(bx)(by) += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+        sums(bx)(by) += channelSum(img.getRGB(x, y))
         cnts(bx)(by) += 1L
         x += 1
       }
@@ -384,23 +402,14 @@ object Multimodal {
   }
 
   /** Per-asset perceptual hash: decode → [[dhashFromImage]]. Same
-    * mapPartitions shape as [[decodeImageMeta]] — one decode pass, the
+    * per-partition path as [[decodeImageMeta]] — one decode pass, the
     * payload column dies here, downstream moves (asset_id, dhash) longs
     * only. Null payloads yield null hashes. */
-  def imageDHash(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("dhash", LongType)))
-    val rows = assets.select(col("asset_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-        if (r.isNullAt(1)) Row(id, null)
-        else Row(id, dhashFromImage(readImage(r.getAs[Array[Byte]](1))))
-      }
+  def imageDHash(assets: DataFrame): DataFrame =
+    perAsset(idAndPayload(assets), idSchema("dhash" -> LongType)) { () => r =>
+      Row(if (r.isNullAt(1)) null
+          else dhashFromImage(readImage(r.getAs[Array[Byte]](1))))
     }
-    spark.createDataFrame(rows, outSchema)
-  }
 
   /** Image near-duplicate pairs: dHash + the pigeonhole Hamming blocking
     * shared with SimHash ([[graft.ext.Dedup.hammingPairs]] — provably
@@ -472,72 +481,49 @@ object Multimodal {
 
   /** Planted-WAV asset table, encoded ON the executors ([[assetSchema]];
     * image dims are null for audio). */
-  def plantedAudio(spark: org.apache.spark.sql.SparkSession, n: Int,
-                   partitions: Int = 8): DataFrame = {
-    val rows = spark.range(0, n, 1, partitions).rdd.map { id =>
-      val wav = plantedWav(id)
-      Row(id, wav, Row("audio/wav", wav.length.toLong, null, null))
-    }
-    spark.createDataFrame(rows, assetSchema)
-  }
+  def plantedAudio(spark: SparkSession, n: Int,
+                   partitions: Int = 8): DataFrame =
+    plantedAssets(spark, n, partitions, "audio/wav")(id =>
+      (id, plantedWav(id), null, null))
 
   /** REAL audio decode → per-clip sample count, exact sample sum, and
     * exact energy (Σ v², a long) — the audio analogue of
     * [[decodeImageMeta]]: one "open every blob" pass, narrow rows out. */
-  def decodeAudioMeta(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("n_samples", IntegerType),
-      StructField("sample_sum", LongType),
-      StructField("energy", LongType)))
-    val rows = assets.select(col("asset_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-        if (r.isNullAt(1)) Row(id, null, null, null)
-        else {
-          val s = readWavSamples(r.getAs[Array[Byte]](1))
-          var sum = 0L
-          var energy = 0L
-          var i = 0
-          while (i < s.length) { sum += s(i); energy += s(i).toLong * s(i); i += 1 }
-          Row(id, s.length, sum, energy)
-        }
+  def decodeAudioMeta(assets: DataFrame): DataFrame =
+    perAsset(idAndPayload(assets), idSchema("n_samples" -> IntegerType,
+        "sample_sum" -> LongType, "energy" -> LongType)) { () => r =>
+      if (r.isNullAt(1)) Row(null, null, null)
+      else {
+        val s = readWavSamples(r.getAs[Array[Byte]](1))
+        var sum = 0L
+        var energy = 0L
+        var i = 0
+        while (i < s.length) { sum += s(i); energy += s(i).toLong * s(i); i += 1 }
+        Row(s.length, sum, energy)
       }
     }
-    spark.createDataFrame(rows, outSchema)
-  }
 
   /** REAL resize: decode → Graphics2D bilinear scale → PNG re-encode,
     * meta dims updated. Same plumbing shape as [[fakeResize]], actual
-    * pixels. */
-  def resizeImages(assets: DataFrame, w: Int, h: Int): DataFrame = {
-    val spark = assets.sparkSession
-    val rows = assets.select(col("asset_id"), col("payload"), col("meta.mime"))
-      .rdd.mapPartitions { it =>
-        it.map { r =>
-          val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-          if (r.isNullAt(1)) Row(id, null, Row(r.getString(2), null, null, null))
-          else {
-            val src = readImage(r.getAs[Array[Byte]](1))
-            val dst = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g = dst.createGraphics()
-            try {
-              g.setRenderingHint(
-                java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(src, 0, 0, w, h, null); ()
-            } finally g.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(dst, "png", bos)
-            val png = bos.toByteArray
-            Row(id, png, Row("image/png", png.length.toLong, w, h))
-          }
-        }
+    * pixels. A null payload keeps its input mime. */
+  def resizeImages(assets: DataFrame, w: Int, h: Int): DataFrame =
+    perAsset(assets.select(col("asset_id"), col("payload"), col("meta.mime")),
+        assetSchema) { () => r =>
+      if (r.isNullAt(1)) Row(null, Row(r.getString(2), null, null, null))
+      else {
+        val src = readImage(r.getAs[Array[Byte]](1))
+        val dst = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+        val g = dst.createGraphics()
+        try {
+          g.setRenderingHint(
+            java.awt.RenderingHints.KEY_INTERPOLATION,
+            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+          g.drawImage(src, 0, 0, w, h, null); ()
+        } finally g.dispose()
+        val png = pngBytes(dst)
+        Row(png, Row("image/png", png.length.toLong, w, h))
       }
-    spark.createDataFrame(rows, assetSchema)
-  }
+    }
 
   // ---- REAL document codec (PDF subset — pure JVM, round 14) -----------
   // Real training pipelines carry PDFs alongside images/audio. The JDK has
@@ -658,14 +644,10 @@ object Multimodal {
   /** Planted-PDF asset table, generated ON THE EXECUTORS like
     * [[plantedImages]] (payload bytes never touch the driver); width /
     * height are null — paged documents have no raster dims. */
-  def plantedPdfs(spark: org.apache.spark.sql.SparkSession, n: Int,
-                  partitions: Int = 8): DataFrame = {
-    val rows = spark.range(0, n, 1, partitions).rdd.map { id =>
-      val pdf = plantedPdf(id)
-      Row(id, pdf, Row("application/pdf", pdf.length.toLong, null, null))
-    }
-    spark.createDataFrame(rows, assetSchema)
-  }
+  def plantedPdfs(spark: SparkSession, n: Int,
+                  partitions: Int = 8): DataFrame =
+    plantedAssets(spark, n, partitions, "application/pdf")(id =>
+      (id, plantedPdf(id), null, null))
 
   /** Literal strings inside BT..ET blocks of one decoded content stream,
     * PDF escapes resolved (\\( \\) \\\\ \\n \\r \\t \\b \\f and octal
@@ -795,109 +777,82 @@ object Multimodal {
 
   /** Paged-document metadata + text extraction over a PDF asset corpus:
     * (asset_id, n_pages, pdf_magic_ok, text). The 100 TB triage pass —
-    * one cheap narrow open per blob, mapPartitions for the same reason as
+    * one cheap narrow open per blob, on the per-partition path of
     * [[decodeImageMeta]] (byte-level codecs can't be Catalyst
     * expressions); everything downstream is small typed rows. Null
     * payloads degrade to null fields. */
-  def pdfTextMeta(assets: DataFrame): DataFrame = {
-    val spark = assets.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("n_pages", IntegerType),
-      StructField("pdf_magic_ok", BooleanType),
-      StructField("text", StringType)))
-    val rows = assets.select(col("asset_id"), col("payload")).rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-        if (r.isNullAt(1)) Row(id, null, null, null)
-        else try {
-          val (np, magic, text) = parsePdf(r.getAs[Array[Byte]](1))
-          Row(id, np, magic, text)
-        } catch {
-          // a triage pass over untrusted blobs must degrade per row, not
-          // fail the sweep: any malformed byte sequence the parser chokes
-          // on reports pdf_magic_ok=false with null pages/text
-          case scala.util.control.NonFatal(_) => Row(id, null, false, null)
-        }
+  def pdfTextMeta(assets: DataFrame): DataFrame =
+    perAsset(idAndPayload(assets), idSchema("n_pages" -> IntegerType,
+        "pdf_magic_ok" -> BooleanType, "text" -> StringType)) { () => r =>
+      if (r.isNullAt(1)) Row(null, null, null)
+      else try {
+        val (np, magic, text) = parsePdf(r.getAs[Array[Byte]](1))
+        Row(np, magic, text)
+      } catch {
+        // a triage pass over untrusted blobs must degrade per row, not
+        // fail the sweep: any malformed byte sequence the parser chokes
+        // on reports pdf_magic_ok=false with null pages/text
+        case scala.util.control.NonFatal(_) => Row(null, false, null)
       }
     }
-    spark.createDataFrame(rows, outSchema)
-  }
 
   /** REAL transcode: decode any ImageIO-readable payload and re-encode it
     * as `format` ("jpg"/"png"/...) at an explicit compression quality —
     * the storage-compaction pass a 100 TB image corpus runs before
     * training (lossless crawl dumps → quality-bounded JPEG cuts payload
-    * bytes ~5-10×). One decode+encode per blob inside mapPartitions (JDK
-    * codecs can't be Catalyst expressions — same justification as
-    * [[decodeImageMeta]]); the writer instance is reused across a
-    * partition's rows. Meta is recomputed (mime, n_bytes; dims are
-    * preserved by the transcode and re-read from the decoded image). */
+    * bytes ~5-10×). One decode+encode per blob on the per-partition
+    * path (JDK codecs can't be Catalyst expressions — same justification
+    * as [[decodeImageMeta]]); the writer and its parameters are set up
+    * once per partition and the writer is disposed when the task ends.
+    * Meta is recomputed (mime, n_bytes; dims are preserved by the
+    * transcode and re-read from the decoded image); a null payload keeps
+    * its null bytes and reports the target mime. */
   def transcodeImages(assets: DataFrame, format: String,
                       quality: Float = 0.9f): DataFrame = {
     require(quality > 0f && quality <= 1f, s"quality in (0,1], got $quality")
-    val spark = assets.sparkSession
     val mime = format.toLowerCase match {
       case "jpg" | "jpeg" => "image/jpeg"
       case "png" => "image/png"
       case other => s"image/$other"
     }
-    val fmt = format
-    val q = quality
-    val rows = assets.select(col("asset_id"), col("payload"))
-      .rdd.mapPartitions { it =>
-        // one writer per partition, disposed when the iterator drains
-        val writer = javax.imageio.ImageIO
-          .getImageWritersByFormatName(fmt).next()
-        val out = it.map { r =>
-          val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-          if (r.isNullAt(1)) Row(id, null, Row(mime, null, null, null))
-          else {
-            val src = readImage(r.getAs[Array[Byte]](1))
-            // JPEG writers reject alpha / non-RGB rasters — normalize
-            val rgb =
-              if (src.getType == java.awt.image.BufferedImage.TYPE_INT_RGB) src
-              else {
-                val c = new java.awt.image.BufferedImage(src.getWidth,
-                  src.getHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
-                val g = c.createGraphics()
-                try g.drawImage(src, 0, 0, null) finally g.dispose()
-                c
-              }
-            val params = writer.getDefaultWriteParam
-            if (params.canWriteCompressed) {
-              params.setCompressionMode(
-                javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-              // PNG's "quality" knob is a compression-effort hint; JPEG's
-              // is the actual lossy quality — both accept [0,1]
-              if (params.getCompressionType == null &&
-                  params.getCompressionTypes != null &&
-                  params.getCompressionTypes.nonEmpty)
-                params.setCompressionType(params.getCompressionTypes()(0))
-              params.setCompressionQuality(q)
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-            try {
-              writer.setOutput(ios)
-              writer.write(null, new javax.imageio.IIOImage(rgb, null, null),
-                params)
-            } finally ios.close()
-            val bytes = bos.toByteArray
-            Row(id, bytes,
-              Row(mime, bytes.length.toLong, rgb.getWidth, rgb.getHeight))
-          }
-        }
-        new Iterator[Row] {
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h) writer.dispose()
-            h
-          }
-          def next(): Row = out.next()
-        }
+    perAsset(idAndPayload(assets), assetSchema) { () =>
+      val writer = javax.imageio.ImageIO.getImageWritersByFormatName(format).next()
+      TaskContext.get().addTaskCompletionListener[Unit](_ => writer.dispose())
+      val params = writer.getDefaultWriteParam
+      if (params.canWriteCompressed) {
+        params.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+        // PNG's "quality" knob is a compression-effort hint; JPEG's
+        // is the actual lossy quality — both accept [0,1]
+        if (params.getCompressionType == null &&
+            params.getCompressionTypes != null &&
+            params.getCompressionTypes.nonEmpty)
+          params.setCompressionType(params.getCompressionTypes()(0))
+        params.setCompressionQuality(quality)
       }
-    spark.createDataFrame(rows, assetSchema)
+      r =>
+        if (r.isNullAt(1)) Row(null, Row(mime, null, null, null))
+        else {
+          val src = readImage(r.getAs[Array[Byte]](1))
+          // JPEG writers reject alpha / non-RGB rasters — normalize
+          val rgb =
+            if (src.getType == BufferedImage.TYPE_INT_RGB) src
+            else {
+              val c = new BufferedImage(src.getWidth, src.getHeight,
+                BufferedImage.TYPE_INT_RGB)
+              val g = c.createGraphics()
+              try g.drawImage(src, 0, 0, null) finally g.dispose()
+              c
+            }
+          val bos = new java.io.ByteArrayOutputStream()
+          val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+          try {
+            writer.setOutput(ios)
+            writer.write(null, new javax.imageio.IIOImage(rgb, null, null), params)
+          } finally ios.close()
+          val bytes = bos.toByteArray
+          Row(bytes, Row(mime, bytes.length.toLong, rgb.getWidth, rgb.getHeight))
+        }
+    }
   }
 
   /** Pixel-level QA between two asset corpora sharing ids (original vs
@@ -912,48 +867,38 @@ object Multimodal {
     * so a corpus [[transcodeImages]] passed through (which propagates
     * null inputs as null outputs) QAs without executor NPEs. */
   def imagePairError(a: DataFrame, b: DataFrame): DataFrame = {
-    val spark = a.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("asset_id", LongType),
-      StructField("width_a", IntegerType),
-      StructField("height_a", IntegerType),
-      StructField("width_b", IntegerType),
-      StructField("height_b", IntegerType),
-      StructField("mean_abs_err", DoubleType)))
     val paired = a.select(col("asset_id"), col("payload").alias("__pa"))
       .join(b.select(col("asset_id"), col("payload").alias("__pb")),
         Seq("asset_id"))
-    val rows = paired.rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-        val ia = if (r.isNullAt(1)) null else readImage(r.getAs[Array[Byte]](1))
-        val ib = if (r.isNullAt(2)) null else readImage(r.getAs[Array[Byte]](2))
-        def dim(i: java.awt.image.BufferedImage, f: java.awt.image.BufferedImage => Int)
-          : Integer = if (i == null) null else Integer.valueOf(f(i))
-        val (wa, ha) = (dim(ia, _.getWidth), dim(ia, _.getHeight))
-        val (wb, hb) = (dim(ib, _.getWidth), dim(ib, _.getHeight))
-        val err: java.lang.Double =
-          if (ia == null || ib == null || wa != wb || ha != hb) null
-          else {
-            var sum = 0L
-            var y = 0
-            while (y < ha) {
-              var x = 0
-              while (x < wa) {
-                val pa = ia.getRGB(x, y)
-                val pb = ib.getRGB(x, y)
-                sum += math.abs(((pa >> 16) & 0xff) - ((pb >> 16) & 0xff)) +
-                  math.abs(((pa >> 8) & 0xff) - ((pb >> 8) & 0xff)) +
-                  math.abs((pa & 0xff) - (pb & 0xff))
-                x += 1
-              }
-              y += 1
+    perAsset(paired, idSchema("width_a" -> IntegerType, "height_a" -> IntegerType,
+        "width_b" -> IntegerType, "height_b" -> IntegerType,
+        "mean_abs_err" -> DoubleType)) { () => r =>
+      val ia = if (r.isNullAt(1)) null else readImage(r.getAs[Array[Byte]](1))
+      val ib = if (r.isNullAt(2)) null else readImage(r.getAs[Array[Byte]](2))
+      def dim(i: BufferedImage, f: BufferedImage => Int): Integer =
+        if (i == null) null else Integer.valueOf(f(i))
+      val (wa, ha) = (dim(ia, _.getWidth), dim(ia, _.getHeight))
+      val (wb, hb) = (dim(ib, _.getWidth), dim(ib, _.getHeight))
+      val err: java.lang.Double =
+        if (ia == null || ib == null || wa != wb || ha != hb) null
+        else {
+          var sum = 0L
+          var y = 0
+          while (y < ha) {
+            var x = 0
+            while (x < wa) {
+              val pa = ia.getRGB(x, y)
+              val pb = ib.getRGB(x, y)
+              sum += math.abs(((pa >> 16) & 0xff) - ((pb >> 16) & 0xff)) +
+                math.abs(((pa >> 8) & 0xff) - ((pb >> 8) & 0xff)) +
+                math.abs((pa & 0xff) - (pb & 0xff))
+              x += 1
             }
-            java.lang.Double.valueOf(sum.toDouble / (3.0 * wa * ha))
+            y += 1
           }
-        Row(id, wa, ha, wb, hb, err)
-      }
+          java.lang.Double.valueOf(sum.toDouble / (3.0 * wa * ha))
+        }
+      Row(wa, ha, wb, hb, err)
     }
-    spark.createDataFrame(rows, outSchema)
   }
 }

@@ -133,6 +133,15 @@ class CurationSpec extends SparkSpec {
     // small stratum: returns all rows when fewer than k
     val tiny = Curation.quotaSample(df.filter(col("id") < 4), "s", "id", k = 7)
     assert(tiny.count() == 4)
+    // a stratum named like a ranking column (id / score / rank) still works,
+    // for integral and string ids
+    val named = df.select(col("id").alias("doc"), col("s").alias("score"))
+    for (d <- Seq(named, named.withColumn("doc", col("doc").cast("string")))) {
+      val got = Curation.quotaSample(d, "score", "doc", k = 7)
+      assert(got.columns.toSeq == Seq("score", "rank", "doc"))
+      assert(got.collect().map(x => (x.getString(0), x.getLong(1), x.get(2).toString))
+        .toSet == out.map(x => (x.getString(0), x.getLong(1), x.getLong(2).toString)).toSet)
+    }
   }
 
   test("repeatedSpans flags shared exact spans and only them") {

@@ -30,11 +30,17 @@ class MixtureSampleSpec extends SparkSpec {
 
   test("bucketed selection ≡ the per-domain window definition") {
     val budgets = Map("d0" -> 800L, "d1" -> 1L, "d2" -> 100000L)
+    // every 9th row has a null domain: the window partitions it as one
+    // more domain on the default budget, so some of its rows are kept
+    val df = corpus.withColumn("domain",
+      when(col("id") % 9 === 0, lit(null).cast("string")).otherwise(col("domain")))
+    val expected = windowed(df, budgets, 300L)
+    assert(expected.exists(_ % 9 == 0), "no null-domain row kept by the window")
     for (buckets <- Seq(1, 7, 64, 4096)) {
-      val got = Curation.mixtureSample(corpus, "domain", "id", "chars",
+      val got = Curation.mixtureSample(df, "domain", "id", "chars",
         budgets, defaultBudget = 300L, buckets = buckets)
         .collect().map(_.getLong(0)).toSet
-      assert(got == windowed(corpus, budgets, 300L), s"buckets=$buckets")
+      assert(got == expected, s"buckets=$buckets")
     }
   }
 

@@ -26,6 +26,12 @@ class WeightedSampleSpec extends SparkSpec {
       .select(col("stratum"), col("rank").cast("long"), col("id"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == expected)
+    // a stratum named like a ranking column selects the same rows
+    val renamed = Curation.weightedSample(corpus.withColumnRenamed("stratum", "score"),
+      "score", "id", "w", k = 10)
+    assert(renamed.columns.toSeq == Seq("score", "rank", "id"))
+    assert(renamed.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSet == expected)
   }
 
   test("k >= stratum size keeps every positive-weight row exactly once") {

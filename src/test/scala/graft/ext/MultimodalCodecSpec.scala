@@ -161,6 +161,54 @@ class MultimodalCodecSpec extends AnyFunSuite with SparkSpec {
     assert(r.isNullAt(3) && r.isNullAt(4))
   }
 
+  test("a null payload passes every byte-level stage: id kept, null " +
+    "decode fields, output schemas pinned") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val nul = Seq((7L, null.asInstanceOf[Array[Byte]], "image/bmp"))
+      .toDF("asset_id", "payload", "mime")
+      .select(col("asset_id"), col("payload"),
+        struct(col("mime").alias("mime")).alias("meta"))
+    def schemaOf(fields: (String, DataType)*): StructType =
+      StructType(StructField("asset_id", LongType) +:
+        fields.map { case (n, t) => StructField(n, t) })
+    val decoded = Seq(
+      "decodeBatches" -> (Multimodal.decodeBatches(nul, 4),
+        schemaOf("features" -> ArrayType(DoubleType))),
+      "decodeImageMeta" -> (Multimodal.decodeImageMeta(nul),
+        schemaOf("width" -> IntegerType, "height" -> IntegerType,
+          "pixel_sum" -> LongType)),
+      "imageDHash" -> (Multimodal.imageDHash(nul), schemaOf("dhash" -> LongType)),
+      "decodeAudioMeta" -> (Multimodal.decodeAudioMeta(nul),
+        schemaOf("n_samples" -> IntegerType, "sample_sum" -> LongType,
+          "energy" -> LongType)),
+      "pdfTextMeta" -> (Multimodal.pdfTextMeta(nul),
+        schemaOf("n_pages" -> IntegerType, "pdf_magic_ok" -> BooleanType,
+          "text" -> StringType)),
+      "imagePairError" -> (Multimodal.imagePairError(nul, nul),
+        schemaOf("width_a" -> IntegerType, "height_a" -> IntegerType,
+          "width_b" -> IntegerType, "height_b" -> IntegerType,
+          "mean_abs_err" -> DoubleType)))
+    for ((stage, (df, schema)) <- decoded) {
+      assert(df.schema == schema, stage)
+      val rows = df.collect()
+      assert(rows.length == 1 && rows.head.getLong(0) == 7L, stage)
+      assert((1 until schema.length).forall(rows.head.isNullAt), stage)
+    }
+    // stages returning assets keep assetSchema (non-nullable asset_id)
+    // and a null payload; resize keeps the input mime, transcode reports
+    // its target mime
+    for ((stage, df, mime) <- Seq(
+        ("resizeImages", Multimodal.resizeImages(nul, 16, 16), "image/bmp"),
+        ("transcodeImages", Multimodal.transcodeImages(nul, "jpg"), "image/jpeg"))) {
+      assert(df.schema == Multimodal.assetSchema, stage)
+      assert(!df.schema("asset_id").nullable, stage)
+      assert(df.collect().toSeq == Seq(Row(7L, null, Row(mime, null, null, null))),
+        stage)
+    }
+  }
+
   // ---- PDF subset codec (round 14) --------------------------------------
 
   test("planted PDF parses back: page count, magic, text exactly per the " +

@@ -10,7 +10,11 @@ Per-run noise is normalized away before comparing: expression ids (`#12`,
 suffixes (`_p<pid>`), RDD ids and RDD call-site line numbers
 (`createDataFrame at Multimodal.scala:155` → `Multimodal.scala:N`), since a
 refactor that moves the line of a `createDataFrame` or `.rdd` call changes
-that text without changing the plan. Prints each name whose plans differ or
+that text without changing the plan. Numbered lambda variables
+(`lambda x_212`), which Spark names from a JVM-wide counter, are renumbered
+per file in order of first appearance (`x_212`, `y_213`, `x_9` → `x_1`,
+`y_2`, `x_3`), so a dump's name order does not matter while distinct
+variables stay distinct. Prints each name whose plans differ or
 that only one side has; exits 1 if there is any, else 0."""
 import os, re, sys
 
@@ -24,12 +28,24 @@ NORMALIZE = [
 ]
 
 
+LAMBDA_VAR = re.compile(r"\blambda ([A-Za-z]+)_([0-9]+)\b")
+
+
+def renumber_lambdas(text):
+    seen = {}
+
+    def repl(m):
+        k = seen.setdefault((m.group(1), m.group(2)), len(seen) + 1)
+        return f"lambda {m.group(1)}_{k}"
+    return LAMBDA_VAR.sub(repl, text)
+
+
 def normalized(path):
     with open(path, encoding="utf-8") as f:
         text = f.read()
     for pattern, repl in NORMALIZE:
         text = pattern.sub(repl, text)
-    return text
+    return renumber_lambdas(text)
 
 
 def plans(d):

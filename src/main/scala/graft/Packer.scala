@@ -71,9 +71,10 @@ object ParentStrategy {
  *        CACHE LIFETIME: each validating pack leaves its final level's
  *        MEMORY_AND_DISK cache alive so the returned frame serves from it;
  *        on long-lived sessions running many packs, call
- *        [[Packer.releaseAuditCaches]] once the results are consumed —
- *        otherwise the caches persist until ContextCleaner reclaims the
- *        garbage-collected frames.
+ *        [[Packer.releaseAuditCaches]] once the results are consumed.
+ *        Only that call or `unpersist` frees them: the session's
+ *        CacheManager holds every persisted plan, so the ContextCleaner
+ *        never reclaims them, even after the frames are collected.
  */
 final class Packer(
     val spec: HierarchySpec,
@@ -1052,8 +1053,9 @@ final class Packer(
     * within a call each level's cache supersedes (unpersists) the
     * previous level's, and the final cache stays hot to serve the
     * returned frame. Interleaved or concurrent packs on one Packer never
-    * evict each other's results; ContextCleaner reclaims the survivors
-    * once unreferenced. */
+    * evict each other's results. The surviving caches stay registered
+    * with the session's CacheManager until [[Packer.releaseAuditCaches]]
+    * or `unpersist` frees them; the ContextCleaner never does. */
   private def runUniformityAudit(packedWithAudit: DataFrame, valueCols: Seq[String],
                                  levelName: String, ctx: AuditCtx): DataFrame = {
     val persisted = packedWithAudit.persist(StorageLevel.MEMORY_AND_DISK)

@@ -368,21 +368,28 @@ object Curation {
    *
    *  1. bucket each row by `floor(u * buckets)` (a pure projection) and
    *     aggregate per-(domain, bucket) measure sums — domains × buckets
-   *     rows, tiny; a prefix-sum window over THIS table costs nothing and
-   *     classifies each bucket as fully-kept (prefix through it < budget),
-   *     fully-dropped (prefix before it >= budget), or boundary;
-   *  2. rows in fully-kept buckets pass with no further work (a broadcast
-   *     join against the tiny classification table); only rows in each
-   *     domain's boundary bucket — an expected 1/buckets fraction — pay an
-   *     exact per-bucket prefix-sum window, seeded with the bucket's
-   *     prefix offset. Bucket order extends (u, id) order because the
-   *     bucket id is a monotone function of u, so fully-kept + boundary
-   *     winners reproduce the global window's row set exactly.
+   *     rows, tiny — which are COLLECTED to the driver (one small job at
+   *     call time). Per domain the driver walks its buckets in order with
+   *     the same double additions as a prefix-sum window: the first bucket
+   *     whose prefix THROUGH it is not below budget is the boundary bucket
+   *     F, every bucket before it is fully kept, every bucket after it
+   *     fully dropped, and C is the prefix before F;
+   *  2. rows in buckets before F pass with no further work (a literal
+   *     per-domain lookup of F, null-safe on the domain); only rows in
+   *     each domain's boundary bucket — an expected 1/buckets fraction —
+   *     pay an exact per-bucket prefix-sum window, seeded with C. Bucket
+   *     order extends (u, id) order because the bucket id is a monotone
+   *     function of u, so fully-kept + boundary winners reproduce the
+   *     global window's row set exactly.
+   *
+   * The returned plan reads the input once per branch (kept, boundary)
+   * and carries the classification as literals, not as a subtree that
+   * each branch would re-plan under its own pushed-down filter.
    *
    * Rows whose domain has no budget entry get `defaultBudget` (0 = drop
-   * unknown domains). Null/negative measures are rejected up front: a
-   * negative measure would make the prefix sum non-monotone and the
-   * bucket classification unsound.
+   * unknown domains). Null/negative measures raise at the call, from the
+   * phase-1 job: a negative measure would make the prefix sum
+   * non-monotone and the bucket classification unsound.
    *
    * Replay stability requires an INTEGRAL measure column (tokens, chars,
    * bytes — the normal units). With fractional double measures the
@@ -405,38 +412,47 @@ object Curation {
     val u = hashUnit(col(idCol))
     // least(): u is in [0,1) but guard the ==1.0 edge anyway
     val bucket = least(floor(u * buckets), lit(buckets - 1)).cast("int")
-    val rows = df.withColumn("__u", u).withColumn("__b", bucket)
-      .withColumn("__m", checkedM).withColumn("__budget", budget)
+    val rows = df.select(col("*"), u.alias("__u"), bucket.alias("__b"),
+        checkedM.alias("__m"), budget.alias("__budget"))
       .filter(col("__budget") > 0)
-    // phase 1: per-(domain, bucket) sums; the window below runs over
-    // domains x buckets rows only (never over corpus rows)
-    val perBucket = rows.groupBy(col(domainCol), col("__b"))
+    // phase 1 on the driver: per-(domain, bucket) sums, domains x buckets
+    // rows. Buckets in order, cum + w in the order a prefix-sum window
+    // adds them: F is the first bucket not fully kept (buckets when every
+    // bucket is), C the measure before it
+    val cuts = rows.groupBy(col(domainCol), col("__b"))
       .agg(sum(col("__m")).alias("__w"), first(col("__budget")).alias("__budget"))
-    val bw = Window.partitionBy(col(domainCol)).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val classified = perBucket
-      .withColumn("__cum_before", coalesce(sum(col("__w")).over(bw), lit(0.0)))
-      .select(col(domainCol).alias("__dj"), col("__b").alias("__bj"),
-        col("__cum_before"),
-        // fully kept: even the bucket's LAST row starts below budget for
-        // every non-negative measure split; boundary when the budget lands
-        // inside (or exactly on the end of) the bucket
-        (col("__cum_before") + col("__w") < col("__budget")).alias("__full"),
-        (col("__cum_before") >= col("__budget")).alias("__drop"))
-      .filter(!col("__drop"))
-    // null-safe on the domain: a null domain is one more domain (the
-    // window's PARTITION BY keeps its rows), never a non-match
-    val tagged = rows.join(broadcast(classified),
-      col(domainCol) <=> col("__dj") && col("__b") === col("__bj"))
-    val kept = tagged.filter(col("__full"))
+      .collect().groupBy(_.get(0)).map { case (domain, bs) =>
+        val sorted = bs.sortBy(_.getInt(1))
+        var (i, cum) = (0, 0.0)
+        while (i < sorted.length && cum + sorted(i).getDouble(2) < sorted(i).getDouble(3)) {
+          cum += sorted(i).getDouble(2)
+          i += 1
+        }
+        domain -> (if (i < sorted.length) sorted(i).getInt(1) else buckets, cum)
+      }
+    // one flat CASE over literals, null-safe on the domain: a null domain
+    // is one more domain (the window's PARTITION BY keeps its rows), never
+    // a non-match; a domain phase 1 did not see keeps nothing
+    val branches = cuts.toSeq.map { case (d, cut) =>
+      (if (d == null) col(domainCol).isNull else col(domainCol) === lit(d)) -> cut
+    }
+    def perDomain(v: ((Int, Double)) => Any, unseen: Any): Column = branches match {
+      case Seq() => lit(unseen)
+      case (c0, cut0) +: rest =>
+        rest.foldLeft(when(c0, lit(v(cut0)))) { case (acc, (c, cut)) =>
+          acc.when(c, lit(v(cut)))
+        }.otherwise(lit(unseen))
+    }
+    val boundaryBucket = perDomain(_._1, -1)
+    val kept = rows.filter(col("__b") < boundaryBucket)
     // phase 2: the exact prefix sum, restricted to boundary buckets — the
     // partition key includes the bucket, so a task sorts ~1/buckets of a
     // domain, not the domain
     val inBw = Window.partitionBy(col(domainCol), col("__b"))
       .orderBy(col("__u"), col(idCol)).rowsBetween(Window.unboundedPreceding, -1)
-    val boundary = tagged.filter(!col("__full"))
+    val boundary = rows.filter(col("__b") === boundaryBucket)
       .withColumn("__row_before",
-        col("__cum_before") + coalesce(sum(col("__m")).over(inBw), lit(0.0)))
+        perDomain(_._2, 0.0) + coalesce(sum(col("__m")).over(inBw), lit(0.0)))
       .filter(col("__row_before") < col("__budget"))
       .drop("__row_before")
     kept.unionByName(boundary)
@@ -807,16 +823,23 @@ object Curation {
    * "Accept cookies" and "accept cookies" are different lines; callers
    * wanting case-folded identity can pre-map the text).
    *
-   * Scale shape: posexplode → one DISTINCT (line, doc) pass → one
-   * line-frequency groupBy (both map-side combinable; a line in a
-   * billion docs crosses the wire as partial counts, never a row per
-   * occurrence) → anti-join of exploded lines against the over-cap line
-   * set (corpus-sized but key-bounded; AQE broadcast-converts when the
-   * boilerplate set is small) → per-doc regroup. The regroup's
-   * collect_list buffers one DOCUMENT's lines, not a corpus partition —
-   * bounded by the largest single document, same guarantee as pack.
-   * Documents whose every line was boilerplate survive with empty text
-   * (left join back to the id spine), so the operator never loses rows.
+   * Scale shape: `explode(array_distinct(lines))` → one line-frequency
+   * groupBy (map-side combinable; a line in a billion docs crosses the
+   * wire as partial counts, never a row per occurrence; `array_distinct`
+   * drops in-document repeats within the row, so no (line, doc) distinct
+   * pass) → left join of the `posexplode_outer`ed lines against the
+   * over-cap line set (corpus-sized but key-bounded; AQE
+   * broadcast-converts when the boilerplate set is small) → one per-doc
+   * aggregate that carries the line count and collects the kept lines.
+   * That collect_list buffers one DOCUMENT's lines, not a corpus
+   * partition — bounded by the largest single document, same guarantee
+   * as pack. The input is read twice (count, rebuild), not three times.
+   * Documents whose every line was boilerplate, and empty or null texts,
+   * keep their row with empty text (posexplode_outer gives them a line
+   * row the collect skips), so the operator never loses rows.
+   *
+   * `idCol` is the document key: rows sharing an id are rebuilt as one
+   * document.
    *
    * Output: (idCol, text_clean, n_kept, n_dropped).
    */
@@ -825,29 +848,28 @@ object Curation {
     require(maxDocFreq >= 1, s"dropBoilerplateLines: maxDocFreq >= 1, got $maxDocFreq")
     require(sep.nonEmpty, "dropBoilerplateLines: separator must be non-empty")
     val id = graft.ColName.topCol(idCol)
-    val lines = df.select(id,
-        posexplode(split(graft.ColName.topCol(textCol),
-          java.util.regex.Pattern.quote(sep), -1)).as(Seq("__pos", "__line")))
-    // doc frequency per line: dedupe (line, doc) first so an in-document
-    // repeat counts once, then a plain map-combinable count
-    val overCap = lines.select(col("__line"), id).distinct()
+    val parts = split(graft.ColName.topCol(textCol), java.util.regex.Pattern.quote(sep), -1)
+    // doc frequency per line: array_distinct counts an in-document repeat
+    // once, then a plain map-combinable count
+    val overCap = df.select(explode(array_distinct(parts)).alias("__line"))
       .groupBy(col("__line")).agg(count(lit(1)).alias("__df"))
       .filter(col("__df") > maxDocFreq)
-      .select(col("__line"))
-    val kept = lines.join(overCap, Seq("__line"), "left_anti")
-    val rebuilt = kept.groupBy(id)
-      .agg(collect_list(struct(col("__pos"), col("__line"))).alias("__ls"))
+      .select(col("__line"), lit(true).alias("__over"))
+    // the split is staged below the generator, so the line count reads
+    // it instead of re-splitting once per exploded line
+    val lines = df.select(id, parts.alias("__parts"))
+      .select(id, size(col("__parts")).cast("long").alias("__n"),
+        posexplode_outer(col("__parts")).as(Seq("__pos", "__line")))
+    lines.join(overCap, Seq("__line"), "left")
+      .groupBy(id)
+      .agg(max(col("__n")).alias("__n"),
+        collect_list(when(col("__over").isNull && col("__pos").isNotNull,
+          struct(col("__pos"), col("__line")))).alias("__ls"))
       .select(id,
         array_join(transform(array_sort(col("__ls")),
           s => s.getField("__line")), sep).alias("text_clean"),
-        size(col("__ls")).cast("long").alias("n_kept"))
-    df.select(id,
-        size(split(graft.ColName.topCol(textCol),
-          java.util.regex.Pattern.quote(sep), -1)).cast("long").alias("__n"))
-      .join(rebuilt, Seq(idCol), "left")
-      .select(id, coalesce(col("text_clean"), lit("")).alias("text_clean"),
-        coalesce(col("n_kept"), lit(0L)).alias("n_kept"),
-        (col("__n") - coalesce(col("n_kept"), lit(0L))).alias("n_dropped"))
+        size(col("__ls")).cast("long").alias("n_kept"),
+        (col("__n") - size(col("__ls"))).alias("n_dropped"))
   }
 
   /** k-anonymity suppression: keep only rows whose quasi-identifier

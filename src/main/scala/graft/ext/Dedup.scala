@@ -390,9 +390,13 @@ object Dedup {
   }
 
   /** MinHash near-duplicates: LSH candidates verified with exact Jaccard.
-    * The verify join re-attaches shingles only for candidate ids, reading
-    * them from the SAME shingle exchange the signatures were built from
-    * ([[shingleFrame]]) — one tokenize/shingle pass total. */
+    * The verify join re-attaches shingles only for candidate ids. Over an
+    * uncached input not already partitioned on the id, it reads them from
+    * the SAME shingle exchange the signatures were built from
+    * ([[shingleFrame]]), so tokenize/shingle runs once. Over a cached
+    * input, or one already hash-partitioned on the id (the output of a
+    * join on it), the planner shares nothing and the plan tokenizes four
+    * times (ROADMAP item 12). */
   def minhashNearDuplicates(df: DataFrame, textCol: String, idCol: String,
                             threshold: Double, shingleN: Int = 3,
                             numHashes: Int = 32, bands: Int = 8,
@@ -463,24 +467,19 @@ object Dedup {
       f(aCol).dataType == org.apache.spark.sql.types.LongType &&
         f(bCol).dataType == org.apache.spark.sql.types.LongType
     }
-    val probedEdges: Option[DataFrame] =
-      if (smallGraphEdges > 0 && isLongIds) {
-        val edgesDf = pairs.select(col(aCol).alias("src"), col(bCol).alias("dst"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val probe = edgesDf.limit(smallGraphEdges + 1).collect()
-        if (probe.length <= smallGraphEdges) {
-          edgesDf.unpersist(false)
-          return driverComponents(pairs.sparkSession,
-            probe.map(r => (r.getLong(0), r.getLong(1))))
-        }
-        Some(edgesDf) // big graph: the loop's sym build reuses the cache
-      } else None
-    val edgeSrc = probedEdges.getOrElse(
-      pairs.select(col(aCol).alias("src"), col(bCol).alias("dst")))
+    val edgeSrc = pairs.select(col(aCol).alias("src"), col(bCol).alias("dst"))
+    if (smallGraphEdges <= 0 || !isLongIds)
+      return distributedComponents(edgeSrc, None, maxIter)._1
+    val edgesDf = edgeSrc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the loop drops the probe cache once its seeds are pinned; this
-    // covers a failure before that point
-    try distributedComponents(edgeSrc, probedEdges, maxIter)._1
-    finally probedEdges.foreach(_.unpersist(false))
+    // covers every other path, a failing probe included
+    try {
+      val probe = edgesDf.limit(smallGraphEdges + 1).collect()
+      if (probe.length <= smallGraphEdges)
+        driverComponents(pairs.sparkSession, probe.map(r => (r.getLong(0), r.getLong(1))))
+      else // big graph: the loop's sym build reuses the cache
+        distributedComponents(edgesDf, Some(edgesDf), maxIter)._1
+    } finally edgesDf.unpersist(false)
   }
 
   /** The distributed contraction loop behind [[connectedComponents]],

@@ -44,6 +44,33 @@ class MixtureSampleSpec extends SparkSpec {
     }
   }
 
+  test("200 domains and a null domain: the per-domain literal lookup stays exact") {
+    val sp = spark; import sp.implicits._
+    // an RDD source, so the lookup runs in generated code rather than
+    // being folded into a local relation
+    val rows = (1L to 3000L).map(i =>
+      (i, if (i % 97 == 0) null else s"d${i % 200}", (i % 23) + 1L))
+    val df = spark.sparkContext.parallelize(rows, 4).toDF("id", "domain", "chars")
+    // even domains budgets 50..1436 (some cut, some whole), odd domains
+    // and the null domain the default
+    val budgets = (0 until 200 by 2).map(d => s"d$d" -> (50L + 7L * d)).toMap
+    val expected = windowed(df, budgets, 40L)
+    assert(expected.exists(_ % 97 == 0), "no null-domain row kept by the window")
+    val perDomain = df.filter(col("id").isin(expected.toSeq: _*)).groupBy("domain").count()
+      .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    val sizes = df.groupBy("domain").count().collect()
+      .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(perDomain.size == 201, "a domain kept nothing")
+    assert(perDomain.exists { case (d, n) => n < sizes(d) } &&
+      perDomain.exists { case (d, n) => n == sizes(d) }, "want both cut and whole domains")
+    for (buckets <- Seq(1, 16, 1024)) {
+      val got = Curation.mixtureSample(df, "domain", "id", "chars",
+        budgets, defaultBudget = 40L, buckets = buckets)
+        .collect().map(_.getLong(0)).toSet
+      assert(got == expected, s"buckets=$buckets")
+    }
+  }
+
   test("zero/absent budget drops the domain; huge budget keeps it whole") {
     val got = Curation.mixtureSample(corpus, "domain", "id", "chars",
       Map("d1" -> 1000000L), defaultBudget = 0L)

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.SparkSpec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CacheEntries
 
 /** A test UDF that throws on its Nth call: the injected mid-operator
   * failure. Executors are threads of the test JVM, so one counter sees
@@ -74,6 +75,18 @@ class CheckpointLifetimeSpec extends SparkSpec {
     assert(pinsLeftAfterFailure("did not converge")(
       Dedup.connectedComponents(edges, "a", "b", maxIter = 1,
         smallGraphEdges = 0)) == 0)
+  }
+
+  test("a failing small-graph probe leaves no cache behind") {
+    // the probe persists the edge frame, then collects it: the UDF throws
+    // inside that collect
+    val cachedBefore = CacheEntries.count(spark)
+    FailOnNthCall.arm(10)
+    try assert(pinsLeftAfterFailure("injected failure")(Dedup.connectedComponents(
+      chain(20, FailOnNthCall.udfLong(col("id"))), "a", "b")) == 0)
+    finally FailOnNthCall.disarm()
+    assert(FailOnNthCall.calls.get >= 10, "the injected failure never fired")
+    assert(CacheEntries.count(spark) == cachedBefore, "the probe's cache is still registered")
   }
 
   test("hopDistances keeps only the final distance table") {

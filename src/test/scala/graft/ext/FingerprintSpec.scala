@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -165,6 +166,52 @@ class FingerprintSpec extends AnyFunSuite with SparkSpec {
     assert(got.map(_.getLong(5)).toSeq == Seq(10L, 10L, 5L))
     assert(got.map(_.getLong(3)).toSeq == Seq(0L, 10L, 20L), "doc offsets advance")
     assert(got.forall(_.getLong(4) == 0L), "single doc starts every seq at 0")
+  }
+
+  /** The spine-join form `dropBoilerplateLines` replaced: a (line, doc)
+    * distinct count, an anti-join of the exploded lines, a per-doc
+    * regroup, and a left join back to every input id. */
+  private def boilerplateBySpine(df: DataFrame, maxDocFreq: Int, sep: String): DataFrame = {
+    val parts = split(col("text"), java.util.regex.Pattern.quote(sep), -1)
+    val lines = df.select(col("id"), posexplode(parts).as(Seq("__pos", "__line")))
+    val overCap = lines.select(col("__line"), col("id")).distinct()
+      .groupBy(col("__line")).agg(count(lit(1)).alias("__df"))
+      .filter(col("__df") > maxDocFreq).select(col("__line"))
+    val rebuilt = lines.join(overCap, Seq("__line"), "left_anti").groupBy(col("id"))
+      .agg(collect_list(struct(col("__pos"), col("__line"))).alias("__ls"))
+      .select(col("id"),
+        array_join(transform(array_sort(col("__ls")), s => s.getField("__line")), sep)
+          .alias("text_clean"),
+        size(col("__ls")).cast("long").alias("n_kept"))
+    df.select(col("id"), size(parts).cast("long").alias("__n"))
+      .join(rebuilt, Seq("id"), "left")
+      .select(col("id"), coalesce(col("text_clean"), lit("")).alias("text_clean"),
+        coalesce(col("n_kept"), lit(0L)).alias("n_kept"),
+        (col("__n") - coalesce(col("n_kept"), lit(0L))).alias("n_dropped"))
+  }
+
+  test("dropBoilerplateLines ≡ the spine-join form on random docs") {
+    val rnd = new scala.util.Random(16)
+    val boiler = Seq("HOME | ABOUT", "footer", "", "(c) 2024")
+    for (sep <- Seq("\n", "||")) {
+      val docs = (0 until 120).map { i =>
+        val text = i % 17 match {
+          case 0 => null
+          case 1 => ""
+          case 2 => Seq.fill(1 + rnd.nextInt(4))(boiler(rnd.nextInt(boiler.size))).mkString(sep)
+          case _ => Seq.fill(rnd.nextInt(7))(
+            if (rnd.nextInt(3) == 0) boiler(rnd.nextInt(boiler.size))
+            else s"body ${rnd.nextInt(40)}").mkString(sep)
+        }
+        (i.toLong, text)
+      }
+      val df = spark.sparkContext.parallelize(docs, 4).toDF("id", "text")
+      for (cap <- Seq(1, 3, 20)) {
+        val got = Curation.dropBoilerplateLines(df, "id", "text", cap, sep)
+        assert(got.count() == 120, s"sep=$sep cap=$cap: row loss")
+        assertSameRows(got, boilerplateBySpine(df, cap, sep))
+      }
+    }
   }
 
   test("dropBoilerplateLines: in-document repeats count once toward doc frequency") {

@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+
+import graft.functions.PackFold
 
 /** Extra-column policy for pack (reference: ExtraColumnsMode). */
 sealed trait ExtraColumns
@@ -17,6 +21,8 @@ object ExtraColumns {
 sealed trait PackStrategy
 object PackStrategy {
   case object Plain extends PackStrategy
+  /** The leaf's parent keys are skewed. [[Packer.packSalted]] runs the same
+    * one-aggregate fold as `Plain`; the pick reports the skew. */
   case object Salted extends PackStrategy
   case object SplitJoin extends PackStrategy
 }
@@ -46,29 +52,32 @@ object ParentStrategy {
  * hierarchies (reference: nexpresso/hierarchical_packer.py, HierarchicalPacker).
  *
  * Spark-first design notes (vs. the reference's single-node Polars engine):
- *  - Packing one level = one `groupBy(ancestorKeys)` — a hash shuffle keyed
- *    on that level's ancestors; K levels packed = K successively coarser
- *    shuffles. Executor memory is bounded by the shuffle, so the reference's
+ *  - A pack is ONE `groupBy(target level's ancestor keys)`: a hash shuffle
+ *    keyed on the coarsest packed level's parent, whose
+ *    [[graft.functions.PackFold]] aggregate builds the child lists of every
+ *    level below it from the group's rows — however many levels the pack
+ *    folds, it plans one exchange and one partial/final aggregate pair.
+ *    Executor memory is bounded by the shuffle, so the reference's
  *    `pack_streaming` disk-bucketing machinery is unnecessary (see
  *    [[Packer.packStreaming]]).
- *  - `collect_list` order is nondeterministic after a shuffle, so child-list
- *    order is enforced EXPLICITLY: children are collected as
- *    struct(sortKeys..., rowId, payload), `sort_array`-ed, then `transform`-ed
- *    back to the payload. Mirrors the reference's sort-inside-agg
+ *  - Arrival order is nondeterministic after a shuffle, so child-list order
+ *    is enforced EXPLICITLY: the fold sorts each list by (level `orderBy`…,
+ *    min row id), ascending with nulls first, comparing only those keys.
+ *    Mirrors the reference's sort-inside-agg
  *    (hierarchical_packer.py:2684-2688) without a global sort.
  *  - Row order: Polars has a contiguous engine row index; Spark does not.
  *    We use `monotonically_increasing_id()` (monotone within a partition,
  *    stable for ordered sources). Top-level row order after pack is
  *    unguaranteed — same caveat as the reference (README.md:251-254).
- *  - Parent-attribute dedup = `first(col, ignoreNulls = true)` — exactly the
- *    reference's `drop_nulls().first()` (hierarchical_packer.py:2678).
+ *  - Parent-attribute dedup = first non-null value — the reference's
+ *    `drop_nulls().first()` (hierarchical_packer.py:2678).
  *
  * @param validateOnPack run the per-level aggregation-uniformity check
  *        (reference's eager validation gate, hierarchical_packer.py:1000-1001).
- *        The audit evidence (min/max per group) rides the pack's own
- *        aggregation — no second scan; cost is one narrow check job over
- *        the persisted packed output, which then serves downstream levels.
- *        CACHE LIFETIME: each validating pack leaves its final level's
+ *        The audit evidence rides the pack's own aggregate — no second
+ *        scan; cost is one check over the persisted packed output, however
+ *        many levels the pack folds.
+ *        CACHE LIFETIME: each validating pack leaves that
  *        MEMORY_AND_DISK cache alive so the returned frame serves from it;
  *        on long-lived sessions running many packs, call
  *        [[Packer.releaseAuditCaches]] once the results are consumed.
@@ -175,177 +184,143 @@ final class Packer(
 
   /** Aggregate-strategy pack over an ALREADY-PREPARED frame — shared by
     * [[pack]], [[packSalted]], [[packSplitJoin]] and [[packStreaming]], so
-    * each runs frame prep and extra-column classification exactly once.
-    * `saltBuckets > 0` salts the leaf fold only (see [[packSingleLevel]]). */
+    * each runs frame prep and extra-column classification exactly once. */
   private def packAggregate(prepared: DataFrame, toLevel: String,
-                            extraColumns: ExtraColumns, added: Seq[String],
-                            preSharded: Boolean = false,
-                            saltBuckets: Int = 0): DataFrame = {
-    var cur = applyExtraColumnsPolicy(prepared, extraColumns)
-    val targetIdx = spec.levelIndex(toLevel)
-    val leafIdx = metas.size - 1
-    // Multi-level packs group by successively coarser keys. One explicit
-    // repartition on the COARSEST stage's keys satisfies every stage's
-    // clustering requirement (HashPartitioning on a subset of each finer
-    // stage's grouping keys), so the whole pack runs with a SINGLE
-    // shuffle instead of one per level — the distributed analogue of the
-    // reference's root-key bucketing (hierarchical_packer.py:1193),
-    // applied by default because it is strictly fewer shuffles.
-    val stages = (leafIdx to targetIdx by -1)
-      .filter(i => metas(i).ancestorKeys.nonEmpty)
-    // Skipped when
-    //  - preSharded: the caller (packStreaming) already repartitioned on
-    //    the ROOT keys — a subset of every stage's grouping keys — with an
-    //    explicit partition count. Re-repartitioning here would collapse
-    //    with (and override) that shuffle, silently discarding the
-    //    caller's `partitions` contract.
-    //  - salted: the salted leaf's phase 1 must shuffle by (keys, salt)
-    //    for the skew spreading to happen; a coarsest-key repartition
-    //    would put a hot parent's whole subtree back in one task.
-    if (!preSharded && saltBuckets <= 0 && stages.size >= 2) {
-      val coarsest = metas(stages.last).ancestorKeys.filter(hasCol(cur, _))
-      if (coarsest.nonEmpty) cur = cur.repartition(coarsest.map(topCol): _*)
-    }
-    val audit = new AuditCtx
-    (leafIdx to targetIdx by -1).foreach { i =>
-      cur = packSingleLevel(cur, i, validate = validateOnPack, auditCtx = audit,
-        saltBuckets = if (i == leafIdx) saltBuckets else 0)
-    }
-    dropInternal(dropIfPresent(cur, added))
+                            extraColumns: ExtraColumns, added: Seq[String]): DataFrame = {
+    val df = applyExtraColumnsPolicy(prepared, extraColumns)
+    dropInternal(dropIfPresent(
+      fold(df, metas.size - 1, spec.levelIndex(toLevel), validateOnPack), added))
   }
 
-  /** P2: pack exactly one level (reference: _pack_single_level,
-    * hierarchical_packer.py:2614-2698): fold the level's flat columns into
-    * one struct, then group by the ancestor keys into a child list, with
-    * `first(ignoreNulls)` for parent attributes, `min` for the row id and
-    * the optional min/max audit in the same aggregation.
+  /** P2: fold levels `bottom` up to `top` (reference: pack and
+    * _pack_single_level, hierarchical_packer.py:941-1011, 2614-2698). Each
+    * level's columns become one struct per row of that level; below the
+    * root, the structs are grouped by the level's ancestor keys into its
+    * parent's child list, with `first(ignoreNulls)` for the columns the
+    * level carries and `min` for the row id. Every such level runs inside
+    * ONE `groupBy(coarsest level's ancestor keys)`, whose [[PackFold]]
+    * builds the lists of all finer levels from the group's rows; the root
+    * then folds into a plain struct.
     *
-    * `saltBuckets > 0` makes this the SALTED fold ([[packSalted]]): the
-    * same aggregates run twice. Phase 1 groups by (ancestorKeys, salt),
-    * where salt = hash(level ids) % saltBuckets, so a hot parent's
-    * children spread across tasks as unsorted partial lists. Phase 2
-    * groups by the ancestor keys and re-applies each aggregate to its own
-    * phase-1 output by name (first of firsts, min of mins, max of maxes),
-    * then flattens and sorts the partial lists. Contents are identical to
-    * the plain fold: first-non-null, min and max compose over partial
-    * groups, and the child list is sorted only after the merge.
-    *
-    * Expects a frame from `prepareFrame`: the row id, when the pack
-    * preserves child order, is already there. */
-  private[graft] def packSingleLevel(df0: DataFrame, levelIdx: Int,
-                                     validate: Boolean = false,
-                                     auditCtx: AuditCtx = new AuditCtx,
-                                     saltBuckets: Int = 0): DataFrame = {
-    var df = df0
-    val meta = metas(levelIdx)
-    val levelCols = df.schema.fieldNames.toIndexedSeq
-      .filter(c => meta.prefix.nonEmpty && c.startsWith(meta.prefix))
-    if (levelCols.isEmpty) return df
-
-    val groupKeys = meta.ancestorKeys
-    val salted = saltBuckets > 0 && groupKeys.nonEmpty
-
-    // order_by expressions reference this level's flat columns, which are
-    // about to be folded into the struct — materialize them first
-    // (reference: hierarchical_packer.py:2651-2656).
-    val orderExprs = meta.spec.orderBy
-    val orderTempCols: Seq[String] =
-      if (orderExprs.nonEmpty && groupKeys.nonEmpty) orderExprs.indices.map(i => s"$OrderTempPrefix$i")
-      else Nil
-    if (orderTempCols.nonEmpty)
-      df = orderExprs.zip(orderTempCols).foldLeft(df) {
-        case (d, (e, a)) => d.withColumn(a, e)
+    * The output is the frame a level-by-level fold would produce: the same
+    * columns in the same order, the same nullability, and child lists
+    * ordered by (level `orderBy`…, min row id). A coarser level's
+    * `orderBy` sees that level's folded row. Expects a frame from
+    * `prepareFrame`: the row id, when the pack preserves child order, is
+    * already there. */
+  private def fold(df: DataFrame, bottom: Int, top: Int,
+                          validate: Boolean): DataFrame = {
+    val withRowId = preserveChildOrder && hasCol(df, RowIdCol)
+    // replay the level-by-level fold on the schema alone: each step keeps
+    // the frame it folds from, with every value named by its source
+    var cur: Seq[(StructField, PackFold.Source)] =
+      df.schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) => f -> PackFold.FirstOf(i) }
+    val steps = Seq.newBuilder[FoldStep]
+    (bottom to math.max(top, 1) by -1).foreach { i =>
+      val meta = metas(i)
+      val (level, others) = cur.partition(_._1.name.startsWith(meta.prefix))
+      if (level.nonEmpty) {
+        val keys = meta.ancestorKeys.map(k => cur.find(_._1.name == k).getOrElse(
+          throw new HierarchyError(
+            s"cannot pack level '${meta.name}': ancestor key column '$k' is missing")))
+        val excluded = meta.ancestorKeys.toSet + meta.path + RowIdCol
+        val carried = others.filterNot(c => excluded(c._1.name))
+        val struct = StructType(level.map { case (f, _) =>
+          f.copy(name = f.name.substring(meta.prefix.length)) })
+        steps += FoldStep(meta, cur, level, struct, carried)
+        cur = keys ++
+          carried.map { case (f, s) => f.copy(nullable = true, metadata = Metadata.empty) -> s } ++
+          Seq(StructField(meta.path, ArrayType(struct, containsNull = false),
+            nullable = false) -> PackFold.Children) ++
+          (if (withRowId) Seq(StructField(RowIdCol, LongType) -> PackFold.MinRowId) else Nil)
       }
-    if (salted) {
-      // deterministic salt from this level's own ids: the same child
-      // always lands in the same bucket. With no id columns present, hash
-      // ALL level columns — an argless xxhash64 would be a constant and
-      // silently disable the skew spreading.
-      val ids = meta.idColumns.filter(hasCol(df, _))
-      val saltSource = if (ids.nonEmpty) ids else levelCols
-      df = df.withColumn(SaltCol,
-        pmod(xxhash64(saltSource.map(topCol): _*), lit(saltBuckets.toLong)))
     }
-
-    val structExpr = struct(levelCols.map(c =>
-      topCol(c).alias(c.substring(meta.prefix.length))): _*).alias(meta.path)
-    val others = df.schema.fieldNames.toIndexedSeq.filterNot(levelCols.contains)
-    df = df.select((others.map(topCol) :+ structExpr): _*)
-
-    if (groupKeys.isEmpty) return df
-
-    val hasRowId = hasCol(df, RowIdCol)
-    val excluded = groupKeys.toSet ++ orderTempCols + meta.path + RowIdCol + SaltCol
-    val remaining = df.schema.fieldNames.toIndexedSeq.filterNot(excluded.contains)
-
-    val firstAggs = remaining.map(c => first(topCol(c), ignoreNulls = true).alias(c))
-
-    val sortByCols = orderTempCols ++ (if (preserveChildOrder && hasRowId) Seq(RowIdCol) else Nil)
-    // collect (sortKeys..., payload), sort by struct order (sort keys
-    // lead; rowId is unique so payload never decides), strip to payload
-    val keyed =
-      if (sortByCols.isEmpty) topCol(meta.path)
-      else struct((sortByCols.zipWithIndex.map { case (c, i) =>
-        topCol(c).alias(s"__k$i") } :+ topCol(meta.path).alias("__payload")): _*)
-    def childList(collected: Column): Column =
-      (if (sortByCols.isEmpty) collected
-       else transform(sortKeyed(df.schema(meta.path).dataType, collected, sortByCols.size),
-         x => x.getField("__payload"))).alias(meta.path)
-
-    val rowIdAgg =
-      if (preserveChildOrder && hasRowId) Seq(min(topCol(RowIdCol)).alias(RowIdCol))
-      else Nil
-
-    // M10 audit folded into the SAME aggregation: uniform within a group
-    // ⟺ min(c) <=> max(c) (nulls ignored by both, like the reference's
-    // drop_nulls + n_unique). min/max are partial-aggregatable and add no
-    // Expand step, unlike a countDistinct alongside collect_list.
-    val doAudit = validate && remaining.nonEmpty
-    val auditMin = remaining.indices.map(i => s"${AuditPrefix}min_$i")
-    val auditMax = remaining.indices.map(i => s"${AuditPrefix}max_$i")
-    def auditAggs(minOf: Seq[String], maxOf: Seq[String]): Seq[Column] =
-      if (doAudit) remaining.indices.flatMap { i => Seq(
-        min(topCol(minOf(i))).alias(auditMin(i)),
-        max(topCol(maxOf(i))).alias(auditMax(i))) }
-      else Nil
-
-    val packed =
-      if (!salted) {
-        val aggs = firstAggs ++ Seq(childList(collect_list(keyed))) ++ rowIdAgg ++
-          auditAggs(remaining, remaining)
-        df.groupBy(groupKeys.map(topCol): _*).agg(aggs.head, aggs.tail: _*)
-      } else {
-        val phase1 = firstAggs ++ Seq(collect_list(keyed).alias(meta.path)) ++ rowIdAgg ++
-          auditAggs(remaining, remaining)
-        val phase2 = firstAggs ++ Seq(childList(flatten(collect_list(topCol(meta.path))))) ++
-          rowIdAgg ++ auditAggs(auditMin, auditMax)
-        df.groupBy((groupKeys :+ SaltCol).map(topCol): _*).agg(phase1.head, phase1.tail: _*)
-          .groupBy(groupKeys.map(topCol): _*).agg(phase2.head, phase2.tail: _*)
-      }
-    if (!doAudit) packed
-    else runUniformityAudit(packed, remaining, meta.name, auditCtx)
+    val folds = steps.result()
+    val packed = if (folds.isEmpty) df else foldAggregate(df, folds, withRowId, validate)
+    if (top == 0) rootStruct(packed) else packed
   }
 
-  /** Sort an array of (__k0.., __payload) structs. Natural struct
-    * ordering (`sort_array`) when the payload type is orderable; a
-    * comparator over ONLY the sort-key fields otherwise (a map-typed
-    * attribute would fail sort_array's orderability check even though
-    * the payload never participates in the comparison — rowId in the
-    * keys is unique). The comparator emulates struct ordering's
-    * nulls-first ascending per key. */
-  private def sortKeyed(payloadType: DataType, collected: Column,
-                        nKeys: Int): Column = {
-    val payloadOrderable =
-      org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(payloadType)
-    if (payloadOrderable) sort_array(collected)
-    else array_sort(collected, (l, r) =>
-      (0 until nKeys).foldRight(lit(0): Column) { (i, acc) =>
-        val lf = l.getField(s"__k$i"); val rf = r.getField(s"__k$i")
-        when(lf.isNull && rf.isNull, acc)
-          .when(lf.isNull, -1).when(rf.isNull, 1)
-          .when(lf < rf, -1).when(lf > rf, 1)
-          .otherwise(acc)
-      })
+  /** The one aggregate of [[fold]]: `folds` finest first. */
+  private def foldAggregate(df: DataFrame, folds: Seq[FoldStep], withRowId: Boolean,
+                            validate: Boolean): DataFrame = {
+    import PackFold.{FirstOf, Level, Source}
+    val coarsest = folds.last
+    val levels = folds.reverse
+    def ordinal(s: Source): Int = s match {
+      case FirstOf(i) => i
+      case other => throw new IllegalStateException(s"not an input column: $other")
+    }
+    def source(step: FoldStep, name: String): Int = ordinal(step.frame.find(_._1.name == name).get._2)
+    // the uniformity audit's (level, column) pairs, leaf to root: the order
+    // in which level-by-level checks would have raised them
+    val audits = if (validate) folds else Nil
+    val pairs = audits.flatMap(s => s.carried.map(c => (s.meta.name, c._1.name)))
+    val auditBase = audits.zip(audits.scanLeft(0)(_ + _.carried.size)).map {
+      case (s, b) => s.meta.index -> b }.toMap
+    // the rows keep what the lists hold, or every column when the audit or
+    // a coarser level's order needs the levels' folded rows
+    val innerOrder = levels.init.exists(_.meta.spec.orderBy.nonEmpty)
+    val buffered: Seq[Int] =
+      if (validate || innerOrder) df.schema.indices
+      else (levels.flatMap(_.struct.map(_._2)).collect { case FirstOf(i) => i } ++
+        (if (withRowId) Seq(df.schema.fieldIndex(RowIdCol)) else Nil)).distinct.sorted
+    val pos = buffered.zipWithIndex.toMap
+    def re(s: Source): Source = s match {
+      case FirstOf(i) => FirstOf(pos(i))
+      case other => other
+    }
+    val layoutLevels = levels.zipWithIndex.map { case (s, p) =>
+      val finest = p == levels.size - 1
+      val order = s.meta.spec.orderBy
+      val finer = levels.lift(p + 1).filter(_ => validate)
+      Level(
+        fields = s.struct.map(c => re(c._2)),
+        structType = s.structType,
+        keys = if (finest) Nil else s.meta.idColumns.map(k => pos(source(s, k))),
+        orderOrdinals = if (finest) order.indices.map(buffered.size + _) else Nil,
+        orderBy = if (finest || order.isEmpty) Nil
+                  else bindOrder(df, StructType(s.frame.map(_._1)), order),
+        frame = if (finest || order.isEmpty) Nil else s.frame.map(c => re(c._2)),
+        audit = finer.map(_.carried.map(c => pos(ordinal(c._2)))).getOrElse(Nil),
+        auditBase = finer.map(f => auditBase(f.meta.index)).getOrElse(0))
+    }
+    val layout = PackFold.Layout(layoutLevels,
+      rowId = if (withRowId) pos(df.schema.fieldIndex(RowIdCol)) else -1,
+      normalize = folds.head.meta.ancestorKeys.map(df.schema.fieldIndex).flatMap(pos.get).toSet,
+      topAudit = if (validate) coarsest.carried.map(c => pos(ordinal(c._2))) else Nil,
+      topAuditBase = auditBase.getOrElse(coarsest.meta.index, 0))
+    val packFold = PackFold.fold(
+      buffered.map(i => topCol(df.schema(i).name)) ++ folds.head.meta.spec.orderBy, layout)
+    val aggs = coarsest.carried.map { case (f, _) =>
+        first(topCol(f.name), ignoreNulls = true).alias(f.name) } ++
+      Seq(packFold.getField("list").alias(coarsest.meta.path)) ++
+      (if (withRowId) Seq(min(topCol(RowIdCol)).alias(RowIdCol)) else Nil) ++
+      (if (pairs.nonEmpty) Seq(packFold.getField("audit").alias(AuditCol)) else Nil)
+    val out = df.groupBy(coarsest.meta.ancestorKeys.map(topCol): _*).agg(aggs.head, aggs.tail: _*)
+    if (pairs.isEmpty) out else runUniformityAudit(out, pairs)
+  }
+
+  /** `exprs` resolved against `frame` and bound to its ordinals. */
+  private def bindOrder(df: DataFrame, frame: StructType, exprs: Seq[Column]): Seq[Expression] =
+    df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), frame)
+      .select(exprs: _*).queryExecution.analyzed match {
+        case Project(list, child) => list.map { e =>
+          BindReferences.bindReference(e match {
+            case a: Alias => a.child
+            case other => other
+          }, child.output)
+        }
+        case other => throw new IllegalStateException(s"unexpected order plan: $other")
+      }
+
+  /** The root level holds no list: its columns fold into one struct. */
+  private def rootStruct(df: DataFrame): DataFrame = {
+    val root = metas.head
+    val levelCols = df.schema.fieldNames.toIndexedSeq.filter(_.startsWith(root.prefix))
+    if (levelCols.isEmpty) df
+    else df.select((df.schema.fieldNames.toIndexedSeq.filterNot(levelCols.contains).map(topCol) :+
+      struct(levelCols.map(c => topCol(c).alias(c.substring(root.prefix.length))): _*)
+        .alias(root.path)): _*)
   }
 
   /** Root attribute columns: under the root prefix but not a root id, not
@@ -542,7 +517,7 @@ final class Packer(
         case Some(childDf) =>
           val parentDf = prepared.getOrElse(parentName,
             throw new HierarchyValidationError(s"Missing table for parent level '$parentName'."))
-          var childPacked = packSingleLevel(childDf, levelIdx)
+          var childPacked = fold(childDf, levelIdx, levelIdx, validate = false)
           val joinKeys = level.ancestorKeys
           var childStructFrame = childPacked.select((joinKeys.map(topCol) :+ topCol(level.path)): _*)
           val childAdded = aliasAdded.getOrElse(level.name, Nil)
@@ -630,21 +605,18 @@ final class Packer(
 
   // ------------------------------------------------------------ skew guard
 
-  /** Two-phase ("salted") pack for SKEWED root keys: when one parent owns a
-    * disproportionate share of leaf rows, the plain fold builds that
-    * parent's entire child list in one task. Here the leaf level runs the
-    * salted form of [[packSingleLevel]]: (1) group by (ancestorKeys, salt)
-    * where salt = hash(leaf ids) % buckets — children of a hot parent
-    * spread across `saltBuckets` tasks building partial chunks; (2) group
-    * by ancestorKeys, flatten + sort the chunks and strip sort keys. The
-    * coarser levels run the plain fold. Contents are identical to [[pack]]
-    * (equivalence spec-tested); the final row still holds the whole list —
-    * inherent to the data model — but sort/serialize work parallelizes. */
+  /** Pack for SKEWED parent keys; contents identical to [[pack]]
+    * (equivalence spec-tested). It runs the same single aggregate as
+    * [[pack]]: the fold's map-side partial aggregation already buffers a
+    * hot parent's children in every input task before the exchange, which
+    * is the spreading a salt key used to buy, so `saltBuckets` no longer
+    * changes the plan (it is still validated, > 1). The final row still
+    * holds the whole list — inherent to the data model. */
   def packSalted(df: DataFrame, toLevel: String, saltBuckets: Int = 32,
                  extraColumns: ExtraColumns = ExtraColumns.Preserve): DataFrame = {
     require(saltBuckets > 1, s"saltBuckets must be > 1, got $saltBuckets")
     val (prepared, added) = prepareFrame(df)
-    packAggregate(prepared, toLevel, extraColumns, added, saltBuckets = saltBuckets)
+    packAggregate(prepared, toLevel, extraColumns, added)
   }
 
   /** Leaf-level grouping-key skew probe: max/MEDIAN children-per-parent on
@@ -677,7 +649,9 @@ final class Packer(
     * analogue of AQE's statistics-driven re-planning (which cannot help
     * here: AQE re-plans joins, not hash aggregations):
     *  1. [[leafSkewFactor]] ≥ `skewFactor` → [[PackStrategy.Salted]]
-    *     (spread the hot parent's children across a two-phase agg);
+    *     (a skew report: [[packSalted]] plans the same aggregate as
+    *     [[pack]], whose partial aggregation already spreads a hot
+    *     parent's children over the input tasks);
     *  2. else, root-attribute payload ≥ `splitJoinWidthFactor`× the rest
     *     of the row AND ≥ `minChildrenPerRoot` children per root →
     *     [[PackStrategy.SplitJoin]] (don't drag the duplicated root
@@ -776,15 +750,14 @@ final class Packer(
     * [[graft.ext.Tuning.partitionsForBytes]] at the ~128 MB per-reducer
     * target, floored at the session's parallelism. This closes the sf10
     * lesson ("partition sizing follows the operator's shuffle payload")
-    * as library advice: a pack's groupBy drags the whole payload through
-    * one exchange, so a session width tuned for one scale factor goes
-    * super-linear at the next (q_pack_split_join, 16.2× → 5.4× at 10×
+    * as library advice: a pack's one groupBy drags the whole payload
+    * through one exchange, so a session width tuned for one scale factor
+    * goes super-linear at the next (q_pack_split_join, 16.2× → 5.4× at 10×
     * data once sized). RECOMMEND-ONLY — apply via
     * `spark.conf.set("spark.sql.shuffle.partitions", plan
     * .recommendedPartitions)` around the pack (the auto_pack_sized bench
-    * arm), or ignore it: salted packs at coarse widths measurably PREFER
-    * the session default (BASELINE.md sf10 notes), which is exactly why
-    * this never self-applies.
+    * arm), or ignore it; it never self-applies, because the session's
+    * width is the pipeline author's to set.
     *
     * EAGER like the strategy probe, plus one keys-free `count` and one
     * sampled width pass. */
@@ -893,10 +866,9 @@ final class Packer(
       if (rootKeys.isEmpty) prepared.repartition(partitions)
       else prepared.repartition(partitions, rootKeys.map(topCol): _*)
     // go straight to the aggregate path over the already-prepared shards:
-    // preSharded stops packAggregate's own coarsest-key repartition from
-    // collapsing with (and overriding) the explicit `partitions` shuffle
-    val out = dropIfPresent(
-      packAggregate(sharded, toLevel, extraColumns, Nil, preSharded = true), added)
+    // its groupBy keys include the root keys, so the shards already satisfy
+    // its distribution and the explicit `partitions` shuffle is the only one
+    val out = dropIfPresent(packAggregate(sharded, toLevel, extraColumns, Nil), added)
     sinkPath match {
       // reference `defer=False`: sink eagerly, hand back the re-scan
       case Some(p) => out.write.mode("overwrite").parquet(p); out.sparkSession.read.parquet(p)
@@ -1008,21 +980,7 @@ final class Packer(
 
   // -------------------------------------------------------------- validation
 
-  /** Per-pack-invocation chain of M10 audit caches: each new cache
-    * supersedes (unpersists) the previous one from the SAME invocation;
-    * the final one is left alive to serve the returned frame, and is
-    * registered in [[liveAuditCaches]] so [[releaseAuditCaches]] can
-    * reclaim it once the caller has consumed the result. */
-  private[graft] final class AuditCtx {
-    private var prev: DataFrame = _
-    def supersede(next: DataFrame): Unit = synchronized {
-      if (prev != null) { prev.unpersist(false); liveAuditCaches.remove(prev) }
-      prev = next
-      liveAuditCaches.add(next)
-    }
-  }
-
-  /** Final audit caches still alive from completed validating packs. */
+  /** Audit caches still alive from completed validating packs. */
   private val liveAuditCaches =
     java.util.Collections.synchronizedSet(
       java.util.Collections.newSetFromMap(
@@ -1032,7 +990,7 @@ final class Packer(
     * packs on THIS Packer. Call after the packed results have been
     * consumed (written/collected): frames returned earlier stay correct —
     * they just recompute on next use. Safe to call repeatedly; packs in
-    * flight on other threads re-register their caches as they finish. */
+    * flight on other threads register their caches as they finish. */
   def releaseAuditCaches(): Unit = {
     val snapshot = liveAuditCaches.toArray(Array.empty[AnyRef])
     snapshot.foreach { df =>
@@ -1044,40 +1002,31 @@ final class Packer(
 
   /** M10: grouped values must be identical within each group before the
     * first-non-null dedup (reference: _validate_aggregation_uniformity,
-    * hierarchical_packer.py:2700-2740). The per-group evidence
-    * (`min`/`max` audit columns) rides the pack's OWN groupBy — no second
-    * scan of the raw frame. The packed output is persisted
-    * (MEMORY_AND_DISK) so the eager check and the caller's downstream
-    * action share one shuffle; the check job materializes the cache.
-    * Cache lifetime is scoped to ONE pack invocation via [[AuditCtx]]:
-    * within a call each level's cache supersedes (unpersists) the
-    * previous level's, and the final cache stays hot to serve the
-    * returned frame. Interleaved or concurrent packs on one Packer never
-    * evict each other's results. The surviving caches stay registered
-    * with the session's CacheManager until [[Packer.releaseAuditCaches]]
-    * or `unpersist` frees them; the ContextCleaner never does. */
-  private def runUniformityAudit(packedWithAudit: DataFrame, valueCols: Seq[String],
-                                 levelName: String, ctx: AuditCtx): DataFrame = {
+    * hierarchical_packer.py:2700-2740). The per-group evidence rides the
+    * pack's OWN aggregate: [[PackFold]] reports the first violating
+    * (level, column) of `pairs`, leaf to root, as column [[AuditCol]] — no
+    * second scan of the raw frame. The packed output is persisted
+    * (MEMORY_AND_DISK) so the ONE eager check and the caller's downstream
+    * action share one shuffle; the check job materializes the cache, which
+    * stays hot to serve the returned frame. It stays registered with the
+    * session's CacheManager until [[Packer.releaseAuditCaches]] or
+    * `unpersist` frees it; the ContextCleaner never does. */
+  private def runUniformityAudit(packedWithAudit: DataFrame,
+                                 pairs: Seq[(String, String)]): DataFrame = {
     val persisted = packedWithAudit.persist(StorageLevel.MEMORY_AND_DISK)
-    val checks = valueCols.indices.map(i =>
-      max(when(!(col(s"${AuditPrefix}min_$i") <=> col(s"${AuditPrefix}max_$i")), 1L)
-        .otherwise(0L)))
-    // this collect scans every partition → fully populates the cache
-    val row = persisted.agg(checks.head, checks.tail: _*).collect()(0)
-    ctx.supersede(persisted)
-    valueCols.zipWithIndex.foreach { case (c, i) =>
-      // agg over zero rows yields null — an empty frame has no violations
-      if (!row.isNullAt(i) && row.getLong(i) > 0) {
-        persisted.unpersist(false)
-        throw new HierarchyValidationError(
-          s"Column '$c' has non-uniform values within groups at level '$levelName'. " +
-            "Values at coarser granularity should be identical within each group.",
-          level = Some(levelName), details = Map("column" -> c))
-      }
+    // this collect scans every partition → fully populates the cache;
+    // min over zero groups is null — an empty frame has no violations
+    val row = persisted.agg(min(col(AuditCol))).collect()(0)
+    if (!row.isNullAt(0)) {
+      persisted.unpersist(false)
+      val (levelName, c) = pairs(row.getInt(0))
+      throw new HierarchyValidationError(
+        s"Column '$c' has non-uniform values within groups at level '$levelName'. " +
+          "Values at coarser granularity should be identical within each group.",
+        level = Some(levelName), details = Map("column" -> c))
     }
-    val auditCols = valueCols.indices.flatMap(i =>
-      Seq(s"${AuditPrefix}min_$i", s"${AuditPrefix}max_$i"))
-    persisted.drop(auditCols: _*)
+    liveAuditCaches.add(persisted)
+    persisted.drop(AuditCol)
   }
 
   /** M8: data validation — null counts in key columns, batched into ONE
@@ -1151,17 +1100,26 @@ final class Packer(
         col("__r.violating_groups").alias("violating_groups"))
   }
 
-  private def dropInternal(df: DataFrame): DataFrame =
-    dropIfPresent(df, Seq(RowIdCol, SaltCol) ++
-      df.schema.fieldNames.filter(_.startsWith(OrderTempPrefix)))
+  private def dropInternal(df: DataFrame): DataFrame = dropIfPresent(df, Seq(RowIdCol))
 }
 
 object Packer {
   /** Internal columns (reference: hierarchical_packer.py:37-38). */
   val RowIdCol = "__hier_row_id"
-  val OrderTempPrefix = "__hier_order_"
-  val SaltCol = "__hier_salt"
   val AuditPrefix = "__hier_audit_"
+  /** The fold's uniformity evidence while a validating pack checks it. */
+  val AuditCol: String = AuditPrefix + "violation"
+
+  /** One level's fold as a level-by-level pack would run it: `frame` is
+    * the frame it folds from, `struct` the columns its struct takes, and
+    * `carried` the columns it carries up as first-non-null values. Every
+    * value is named by its [[PackFold.Source]] over the input columns. */
+  private final case class FoldStep(
+      meta: LevelMetadata,
+      frame: Seq[(StructField, PackFold.Source)],
+      struct: Seq[(StructField, PackFold.Source)],
+      structType: StructType,
+      carried: Seq[(StructField, PackFold.Source)])
   /** Row cap for the choosePackStrategy width probe. */
   val WidthProbeRows = 1000
   /** [[Packer.packStreaming]]'s fallback shard count when the width probe

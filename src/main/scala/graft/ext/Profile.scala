@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
  *
  * Scale shapes: histogram = one partial-aggregatable groupBy over a
  * codegen'd bucket expression (shuffle carries ≤ `buckets` partial
- * rows per partition); columnProfile = ONE aggregation producing a
- * single row, unpivoted map-side; sketchAccuracy = the approx and exact
+ * rows per partition); columnProfile = ONE aggregation chain producing
+ * a single row, unpivoted map-side; sketchAccuracy = the approx and exact
  * aggregates side by side in one pass each.
  */
 object Profile {
@@ -49,9 +49,16 @@ object Profile {
    * Long-format summary profile of `cols`: one row per column with
    * (column, n_rows, n_null, n_distinct, min_val, max_val) — min/max
    * cast to string so heterogeneous column types share one schema.
-   * ONE aggregation computes every metric (Spark plans the multi-column
-   * distinct counts via a single Expand); the row→long unpivot is
+   * ONE aggregation chain computes every metric; the row→long unpivot is
    * map-side over the single result row.
+   *
+   * The distinct counts are rewritten by hand the way Spark rewrites
+   * several `count(DISTINCT …)`s, so the plan does not depend on
+   * expression ids (Spark's own rewrite orders its Expand projections by
+   * them): each row is emitted once for the plain metrics (gid 0) and once
+   * per column (gid i + 1, the column's value in slot i). Grouping by
+   * (gid, slots) collapses each column's distinct values to one row each,
+   * and one global aggregate reads every metric off those groups.
    */
   def columnProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "columnProfile needs at least one column")
@@ -70,14 +77,30 @@ object Profile {
     val dtypes = cols.map(c => c -> df.schema.fields
       .find(_.name == c).map(_.dataType)
       .getOrElse(org.apache.spark.sql.types.StringType)).toMap
-    val aggs = cols.flatMap { c =>
-      Seq(count(lit(1)).alias(s"__n_$c"),
-        sum(when(q(c).isNull, 1L).otherwise(0L)).alias(s"__nul_$c"),
-        count_distinct(q(c)).alias(s"__nd_$c"),
-        asStr(dtypes(c), min(q(c))).alias(s"__mn_$c"),
-        asStr(dtypes(c), max(q(c))).alias(s"__mx_$c"))
+    val idx = cols.indices
+    def slot(i: Int) = s"__d_$i"
+    def value(i: Int) = s"__r_$i"
+    val copies = (0 to cols.size).map { g =>
+      struct((lit(g).alias("gid") +: idx.flatMap { i =>
+        val v = q(cols(i)); val none = lit(null).cast(dtypes(cols(i)))
+        Seq((if (g == i + 1) v else none).alias(slot(i)), (if (g == 0) v else none).alias(value(i)))
+      }): _*)
     }
-    val row = df.agg(aggs.head, aggs.tail: _*)
+    val perValue = df.select(explode(array(copies: _*)).alias("e")).select("e.*")
+      .groupBy((col("gid") +: idx.map(i => col(slot(i)))): _*)
+      .agg(count(lit(1)).alias("__n"), idx.flatMap(i => Seq(
+        sum(when(col(value(i)).isNull, 1L).otherwise(0L)).alias(s"__nul_$i"),
+        min(col(value(i))).alias(s"__mn_$i"), max(col(value(i))).alias(s"__mx_$i"))): _*)
+    def plain(c: String): Column = max(when(col("gid") === 0, col(c)))
+    val aggs = idx.flatMap { i =>
+      val c = cols(i)
+      Seq(coalesce(plain("__n"), lit(0L)).alias(s"__n_$c"),
+        plain(s"__nul_$i").alias(s"__nul_$c"),
+        count(when(col("gid") === i + 1, col(slot(i)))).alias(s"__nd_$c"),
+        asStr(dtypes(c), plain(s"__mn_$i")).alias(s"__mn_$c"),
+        asStr(dtypes(c), plain(s"__mx_$i")).alias(s"__mx_$c"))
+    }
+    val row = perValue.agg(aggs.head, aggs.tail: _*)
     val stacked = cols.map(c =>
       struct(lit(c).alias("column"), col(s"`__n_$c`").alias("n_rows"),
         col(s"`__nul_$c`").alias("n_null"), col(s"`__nd_$c`").alias("n_distinct"),

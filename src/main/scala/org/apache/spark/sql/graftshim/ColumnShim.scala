@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /**
@@ -26,4 +27,8 @@ object ColumnShim {
 
   /** The (possibly unresolved) expression behind `c`. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A resolved key expression with its floats normalized (−0.0 → 0.0,
+    * one NaN) the way `groupBy` normalizes its grouping keys. */
+  def normalizedKey(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 }

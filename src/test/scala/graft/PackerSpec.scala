@@ -342,6 +342,71 @@ class PackerSpec extends SparkSpec {
     }
   }
 
+  test("a failing validating pack names the leaf-most violating level and its " +
+    "first violating column") {
+    val strict = new Packer(apartmentSpec, validateOnPack = true)
+    def error(df: DataFrame): HierarchyValidationError =
+      intercept[HierarchyValidationError](strict.pack(df, "street"))
+    // differs within building 100: the apartment fold is the first to see it
+    val inBuilding = error(apartmentDf(spark).withColumn("country.city.population",
+      when(ColName.topCol("country.city.street.building.apartment.id") === "apt-1", 1L)
+        .otherwise(2L)))
+    assert(inBuilding.level.contains("apartment"))
+    assert(inBuilding.details == Map("column" -> "country.city.population"))
+    assert(inBuilding.getMessage == "Column 'country.city.population' has non-uniform values " +
+      "within groups at level 'apartment'. Values at coarser granularity should be identical " +
+      "within each group. [Level: apartment]")
+    // uniform within each building, two values across NYC's buildings: the
+    // building fold sees both columns, and the first one is named
+    val byBuilding = when(ColName.topCol("country.city.street.building.number") === 100L, 1L)
+      .otherwise(2L)
+    val acrossBuildings = error(apartmentDf(spark)
+      .withColumn("country.city.a1", byBuilding).withColumn("country.city.a2", byBuilding))
+    assert(acrossBuildings.level.contains("building"))
+    assert(acrossBuildings.details == Map("column" -> "country.city.a1"))
+  }
+
+  test("a passing validating pack runs one audit check, however many levels it folds") {
+    val df = apartmentDf(spark)
+      .withColumn("country.city.population",
+        when(ColName.topCol("country.city.id") === "NYC", 8L).otherwise(3L))
+    val strict = new Packer(apartmentSpec, validateOnPack = true)
+    val jobs = withJobCount { jobsSoFar =>
+      jobsSoFar()
+      Seq("apartment", "building", "street").map { target =>
+        strict.pack(df, target)
+        jobsSoFar()
+      }
+    }
+    strict.releaseAuditCaches()
+    // one check of 4 jobs under AQE; the level-by-level audit ran one
+    // check per folded level, 4, 7 and 10 jobs here
+    assert(jobs == Seq(4, 4, 4), s"check jobs for 1, 2 and 3 folded levels: $jobs")
+  }
+
+  test("a 3-level pack plans one shuffle and one partial/final aggregate pair, " +
+    "with no collect_list or sort_array") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    object Walk extends AdaptiveSparkPlanHelper
+    val spec = streamingSpec.copy(levels = streamingSpec.levels.init :+
+      streamingSpec.levels.last.copy(orderBy = Seq(ColName.topCol("country.city.street.id"))))
+    val flat = streamingDf(spark)
+    val rdd = spark.createDataFrame(flat.rdd, flat.schema)
+    val packed = new Packer(spec).pack(rdd, "country")
+    packed.collect()
+    val plan = packed.queryExecution.executedPlan
+    assert(Walk.collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan)
+    val modes = Walk.collect(plan) { case a: ObjectHashAggregateExec =>
+      a.aggregateExpressions.map(_.mode).distinct }
+    assert(modes == Seq(Seq(Final), Seq(Partial)), plan)
+    val text = packed.queryExecution.toString
+    assert(text.contains("pack_fold") && !text.contains("collect_list") &&
+      !text.contains("sort_array"), text)
+  }
+
   test("uniformityReport counts violating groups per column, nulls ignored") {
     import spark.implicits._
     val spec = HierarchySpec(Seq(

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, CommonExpressionRef,
+  Expression, Unevaluable, With}
+import org.apache.spark.sql.catalyst.optimizer.{ComputeCurrentTime, ReplaceExpressions}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,9 +23,6 @@ object ExtraColumns {
 sealed trait PackStrategy
 object PackStrategy {
   case object Plain extends PackStrategy
-  /** The leaf's parent keys are skewed. [[Packer.packSalted]] runs the same
-    * one-aggregate fold as `Plain`; the pick reports the skew. */
-  case object Salted extends PackStrategy
   case object SplitJoin extends PackStrategy
 }
 
@@ -257,61 +256,109 @@ final class Packer(
     val pairs = audits.flatMap(s => s.carried.map(c => (s.meta.name, c._1.name)))
     val auditBase = audits.zip(audits.scanLeft(0)(_ + _.carried.size)).map {
       case (s, b) => s.meta.index -> b }.toMap
-    // the rows keep what the lists hold, or every column when the audit or
-    // a coarser level's order needs the levels' folded rows
-    val innerOrder = levels.init.exists(_.meta.spec.orderBy.nonEmpty)
-    val buffered: Seq[Int] =
-      if (validate || innerOrder) df.schema.indices
-      else (levels.flatMap(_.struct.map(_._2)).collect { case FirstOf(i) => i } ++
-        (if (withRowId) Seq(df.schema.fieldIndex(RowIdCol)) else Nil)).distinct.sorted
-    val pos = buffered.zipWithIndex.toMap
-    def re(s: Source): Source = s match {
-      case FirstOf(i) => FirstOf(pos(i))
-      case other => other
+    // a level's carried columns and their pair indices
+    def audited(s: FoldStep): Seq[(Int, Int)] = s.carried.zipWithIndex.map { case (c, k) =>
+      ordinal(c._2) -> (auditBase(s.meta.index) + k) }
+    // the coarsest level's carried columns are audited within the whole
+    // group by min/max, which aggregate map-side; a finer level that
+    // carries them too audits them within its entities only in the exact
+    // pass, run once a check fails, to name the level-by-level error
+    val grouped = if (validate) audited(coarsest) else Nil
+    val groupChecked = grouped.map(_._1).toSet
+    // per level, coarsest first: a coarser level's bound orderBy
+    val innerOrders: Seq[Option[(Seq[Expression], Seq[Int])]] = levels.zipWithIndex.map {
+      case (s, p) =>
+        if (p == levels.size - 1 || s.meta.spec.orderBy.isEmpty) None
+        else Some(bindOrder(df, s.meta.name, StructType(s.frame.map(_._1)), s.meta.spec.orderBy))
     }
-    val layoutLevels = levels.zipWithIndex.map { case (s, p) =>
-      val finest = p == levels.size - 1
-      val order = s.meta.spec.orderBy
-      val finer = levels.lift(p + 1).filter(_ => validate)
-      Level(
-        fields = s.struct.map(c => re(c._2)),
-        structType = s.structType,
-        keys = if (finest) Nil else s.meta.idColumns.map(k => pos(source(s, k))),
-        orderOrdinals = if (finest) order.indices.map(buffered.size + _) else Nil,
-        orderBy = if (finest || order.isEmpty) Nil
-                  else bindOrder(df, StructType(s.frame.map(_._1)), order),
-        frame = if (finest || order.isEmpty) Nil else s.frame.map(c => re(c._2)),
-        audit = finer.map(_.carried.map(c => pos(ordinal(c._2)))).getOrElse(Nil),
-        auditBase = finer.map(f => auditBase(f.meta.index)).getOrElse(0))
+    def build(exact: Boolean): DataFrame = {
+      // per level, coarsest first: the (column, pair) it audits within each
+      // of its entities, the columns its next finer level carries
+      val entityAudits: Seq[Seq[(Int, Int)]] =
+        if (!validate) levels.map(_ => Nil)
+        else levels.tail.map(audited(_).filter(a => exact || !groupChecked(a._1))) :+ Nil
+      // the rows keep what the lists hold, the inner audits check and the
+      // inner orders read, nothing more
+      val buffered: Seq[Int] = (
+        (levels.flatMap(_.struct.map(_._2)) ++ levels.zip(innerOrders).flatMap {
+          case (s, o) => o.toSeq.flatMap(_._2).map(f => s.frame(f)._2) }
+        ).collect { case FirstOf(i) => i } ++
+          entityAudits.flatten.map(_._1) ++
+          (if (withRowId) Seq(df.schema.fieldIndex(RowIdCol)) else Nil)).distinct.sorted
+      val pos = buffered.zipWithIndex.toMap
+      def re(s: Source): Source = s match {
+        case FirstOf(i) => FirstOf(pos(i))
+        case other => other
+      }
+      val layoutLevels = levels.zipWithIndex.map { case (s, p) =>
+        val finest = p == levels.size - 1
+        val order = innerOrders(p)
+        Level(
+          fields = s.struct.map(c => re(c._2)),
+          structType = s.structType,
+          keys = if (finest) Nil else s.meta.idColumns.map(k => pos(source(s, k))),
+          orderOrdinals = if (finest) s.meta.spec.orderBy.indices.map(buffered.size + _) else Nil,
+          orderBy = order.map(_._1).getOrElse(Nil),
+          frame = order.map(_._2.map(f => re(s.frame(f)._2))).getOrElse(Nil),
+          audit = entityAudits(p).map { case (o, pair) => pos(o) -> pair })
+      }
+      val layout = PackFold.Layout(layoutLevels,
+        rowId = if (withRowId) pos(df.schema.fieldIndex(RowIdCol)) else -1,
+        normalize = folds.head.meta.ancestorKeys.map(df.schema.fieldIndex).flatMap(pos.get).toSet)
+      val packFold = PackFold.fold(
+        buffered.map(i => topCol(df.schema(i).name)) ++ folds.head.meta.spec.orderBy, layout)
+      // uniform within the group ⟺ min(c) <=> max(c), nulls ignored by both
+      val groupViolation = grouped.map { case (o, pair) =>
+        val c = topCol(df.schema(o).name)
+        when(!(min(c) <=> max(c)), lit(pair)) }
+      val aggs = coarsest.carried.map { case (f, _) =>
+          first(topCol(f.name), ignoreNulls = true).alias(f.name) } ++
+        Seq(packFold.getField("list").alias(coarsest.meta.path)) ++
+        (if (withRowId) Seq(min(topCol(RowIdCol)).alias(RowIdCol)) else Nil) ++
+        (if (pairs.nonEmpty)
+          Seq(coalesce(packFold.getField("audit") +: groupViolation: _*).alias(AuditCol))
+         else Nil)
+      df.groupBy(coarsest.meta.ancestorKeys.map(topCol): _*).agg(aggs.head, aggs.tail: _*)
     }
-    val layout = PackFold.Layout(layoutLevels,
-      rowId = if (withRowId) pos(df.schema.fieldIndex(RowIdCol)) else -1,
-      normalize = folds.head.meta.ancestorKeys.map(df.schema.fieldIndex).flatMap(pos.get).toSet,
-      topAudit = if (validate) coarsest.carried.map(c => pos(ordinal(c._2))) else Nil,
-      topAuditBase = auditBase.getOrElse(coarsest.meta.index, 0))
-    val packFold = PackFold.fold(
-      buffered.map(i => topCol(df.schema(i).name)) ++ folds.head.meta.spec.orderBy, layout)
-    val aggs = coarsest.carried.map { case (f, _) =>
-        first(topCol(f.name), ignoreNulls = true).alias(f.name) } ++
-      Seq(packFold.getField("list").alias(coarsest.meta.path)) ++
-      (if (withRowId) Seq(min(topCol(RowIdCol)).alias(RowIdCol)) else Nil) ++
-      (if (pairs.nonEmpty) Seq(packFold.getField("audit").alias(AuditCol)) else Nil)
-    val out = df.groupBy(coarsest.meta.ancestorKeys.map(topCol): _*).agg(aggs.head, aggs.tail: _*)
-    if (pairs.isEmpty) out else runUniformityAudit(out, pairs)
+    val out = build(exact = false)
+    if (pairs.isEmpty) out
+    else runUniformityAudit(out, pairs,
+      if (folds.init.exists(f => audited(f).exists(a => groupChecked(a._1))))
+        Some(() => build(exact = true))
+      else None)
   }
 
-  /** `exprs` resolved against `frame` and bound to its ordinals. */
-  private def bindOrder(df: DataFrame, frame: StructType, exprs: Seq[Column]): Seq[Expression] =
-    df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), frame)
-      .select(exprs: _*).queryExecution.analyzed match {
-        case Project(list, child) => list.map { e =>
-          BindReferences.bindReference(e match {
-            case a: Alias => a.child
-            case other => other
-          }, child.output)
+  /** `exprs` resolved against `frame` as the optimizer would run them
+    * (runtime-replaceable functions replaced, common subexpressions
+    * inlined, current time fixed), bound to the fields they read: (bound
+    * expressions, those fields' ordinals in `frame`). They are evaluated
+    * row by row inside the fold, outside any query plan, so a
+    * nondeterministic or otherwise unevaluable expression is rejected. */
+  private def bindOrder(df: DataFrame, level: String, frame: StructType,
+                        exprs: Seq[Column]): (Seq[Expression], Seq[Int]) = {
+    val analyzed = df.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), frame)
+      .select(exprs: _*).queryExecution.analyzed
+    ComputeCurrentTime(ReplaceExpressions(analyzed)) match {
+      case Project(list, child) =>
+        val bodies = list.map {
+          case a: Alias => a.child
+          case other => other
+        }.map(_.transformUp { case With(body, defs) =>
+          val byId = defs.map(d => d.id -> d.child).toMap
+          body.transformUp { case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id) }
+        })
+        val used = child.output.zipWithIndex.filter { case (a, _) =>
+          bodies.exists(_.references.contains(a)) }
+        val bound = bodies.map(BindReferences.bindReference(_, used.map(_._1)))
+        bodies.zip(bound).foreach { case (e, b) =>
+          if (!e.deterministic || b.exists(_.isInstanceOf[Unevaluable]))
+            throw new HierarchyConfigError(s"level '$level': orderBy `${e.sql}` cannot order " +
+              "a list below the finest level: it is nondeterministic or needs a query plan")
         }
-        case other => throw new IllegalStateException(s"unexpected order plan: $other")
-      }
+        (bound, used.map(_._2))
+      case other => throw new IllegalStateException(s"unexpected order plan: $other")
+    }
+  }
 
   /** The root level holds no list: its columns fold into one struct. */
   private def rootStruct(df: DataFrame): DataFrame = {
@@ -605,19 +652,14 @@ final class Packer(
 
   // ------------------------------------------------------------ skew guard
 
-  /** Pack for SKEWED parent keys; contents identical to [[pack]]
-    * (equivalence spec-tested). It runs the same single aggregate as
-    * [[pack]]: the fold's map-side partial aggregation already buffers a
-    * hot parent's children in every input task before the exchange, which
-    * is the spreading a salt key used to buy, so `saltBuckets` no longer
-    * changes the plan (it is still validated, > 1). The final row still
-    * holds the whole list — inherent to the data model. */
+  /** [[pack]] under its former skewed-key name; `saltBuckets` is ignored.
+    * A pack's map-side partial aggregation already buffers a hot parent's
+    * children in every input task before the exchange, which is the
+    * spreading a salt key used to buy. */
+  @deprecated("a pack spreads hot parents by itself; call pack", "0.1.0")
   def packSalted(df: DataFrame, toLevel: String, saltBuckets: Int = 32,
-                 extraColumns: ExtraColumns = ExtraColumns.Preserve): DataFrame = {
-    require(saltBuckets > 1, s"saltBuckets must be > 1, got $saltBuckets")
-    val (prepared, added) = prepareFrame(df)
-    packAggregate(prepared, toLevel, extraColumns, added)
-  }
+                 extraColumns: ExtraColumns = ExtraColumns.Preserve): DataFrame =
+    pack(df, toLevel, extraColumns)
 
   /** Leaf-level grouping-key skew probe: max/MEDIAN children-per-parent on
     * a `sampleFraction` sample. EAGER — runs one small Spark job at call
@@ -648,32 +690,26 @@ final class Packer(
   /** Sampled physical-strategy probe for [[packAuto]] — the pack
     * analogue of AQE's statistics-driven re-planning (which cannot help
     * here: AQE re-plans joins, not hash aggregations):
-    *  1. [[leafSkewFactor]] ≥ `skewFactor` → [[PackStrategy.Salted]]
-    *     (a skew report: [[packSalted]] plans the same aggregate as
-    *     [[pack]], whose partial aggregation already spreads a hot
-    *     parent's children over the input tasks);
-    *  2. else, root-attribute payload ≥ `splitJoinWidthFactor`× the rest
-    *     of the row AND ≥ `minChildrenPerRoot` children per root →
+    *  1. root-attribute payload ≥ `splitJoinWidthFactor`× the rest of the
+    *     row AND ≥ `minChildrenPerRoot` children per root →
     *     [[PackStrategy.SplitJoin]] (don't drag the duplicated root
     *     payload through the shuffle; re-attach it from a dim table);
-    *  3. else [[PackStrategy.Plain]].
-    * Widths are sampled mean `to_json` byte lengths — a serialization
-    * proxy; only the ratio is used. All three strategies produce
-    * identical contents (equality-tested); only the shuffle shape
-    * differs, so a misprediction costs time, never correctness.
+    *  2. else [[PackStrategy.Plain]].
+    * Key skew does not enter the pick: a pack's map-side partial
+    * aggregation already spreads a hot parent's children over the input
+    * tasks. Widths come from
+    * [[Packer.widthOf]], a serialization proxy; only the ratio is used.
+    * Both strategies produce identical contents (equality-tested); only
+    * the shuffle shape differs, so a misprediction costs time, never
+    * correctness.
     *
-    * EAGER: runs the probe's Spark jobs (sampled skew scan, keys-only
-    * count, width sample) at CALL time, not at action time. The three
-    * probes are INDEPENDENT actions, so they run OVERLAPPED from a small
-    * driver-side pool (guide §2.6; round 16): wall ≈ max(probe) instead
-    * of sum(probe). Probe expressions, seeds, thresholds and decision
-    * order are unchanged, so the pick is bit-identical to the sequential
-    * form; when an early check short-circuits (skew → Salted, few
-    * children per root → Plain), the now-moot in-flight probe jobs are
-    * CANCELLED — the sequential form never started them, so the
-    * short-circuit path's wasted work is bounded by the fastest probe's
-    * latency rather than zero, the price of the common path's overlap. */
-  def choosePackStrategy(df: DataFrame, skewFactor: Double = 8.0,
+    * EAGER: runs the probe's Spark jobs (keys-only count, width sample) at
+    * CALL time, not at action time; a frame with no root attributes or no
+    * root keys runs none. The two probes are INDEPENDENT actions, so they
+    * run OVERLAPPED from a small driver-side pool (guide §2.6; round 16):
+    * wall ≈ max(probe) instead of sum(probe). When few children per root
+    * short-circuit to Plain, the in-flight width probe is CANCELLED. */
+  def choosePackStrategy(df: DataFrame,
                          sampleFraction: Double = 0.01,
                          splitJoinWidthFactor: Double = 1.0,
                          minChildrenPerRoot: Double = 4.0): PackStrategy = {
@@ -681,11 +717,8 @@ final class Packer(
     val attrCols = rootAttributeColumns(prepared.schema)
     val rootKeys = metas.head.idColumns.filter(hasCol(prepared, _))
     // schema-side guards are driver-only: with no split-join candidacy
-    // the skew probe is the only Spark job this call runs
-    if (attrCols.isEmpty || rootKeys.isEmpty)
-      return if (leafSkewFactor(df, sampleFraction) >= skewFactor)
-        PackStrategy.Salted
-      else PackStrategy.Plain
+    // this call runs no Spark job
+    if (attrCols.isEmpty || rootKeys.isEmpty) return PackStrategy.Plain
     val probes = new Overlap.ProbeGroup(
       df.sparkSession.sparkContext, "graft pack strategy probe")
     try {
@@ -722,11 +755,6 @@ final class Packer(
           .filterNot(attrCols.contains).filterNot(_ == RowIdCol)
         s.agg(avg(width(attrCols)), avg(width(others))).collect()(0)
       }
-      // the skew probe runs on the CALLER thread — all three in flight
-      if (leafSkewFactor(df, sampleFraction) >= skewFactor) {
-        probes.cancel()
-        return PackStrategy.Salted
-      }
       val keyRow = probes.get(fChildren)
       if (keyRow.isNullAt(0) || keyRow.isNullAt(1) || keyRow.getDouble(1) == 0.0) {
         probes.cancel(); return PackStrategy.Plain
@@ -761,13 +789,13 @@ final class Packer(
     *
     * EAGER like the strategy probe, plus one keys-free `count` and one
     * sampled width pass. */
-  def planPack(df: DataFrame, skewFactor: Double = 8.0,
+  def planPack(df: DataFrame,
                sampleFraction: Double = 0.01,
                splitJoinWidthFactor: Double = 1.0,
                minChildrenPerRoot: Double = 4.0,
                bytesPerPartition: Long = graft.ext.Tuning.DefaultBytesPerPartition,
                maxPartitions: Int = graft.ext.Tuning.DefaultMaxPartitions): PackPlan = {
-    val strategy = choosePackStrategy(df, skewFactor, sampleFraction,
+    val strategy = choosePackStrategy(df, sampleFraction,
       splitJoinWidthFactor, minChildrenPerRoot)
     val (est, rec) = estimatedShuffle(df, sampleFraction, bytesPerPartition,
       maxPartitions)
@@ -807,13 +835,11 @@ final class Packer(
     * [[choosePackStrategy]]); the returned pack itself stays lazy. */
   def packAuto(df: DataFrame, toLevel: String,
                extraColumns: ExtraColumns = ExtraColumns.Preserve,
-               saltBuckets: Int = 32, skewFactor: Double = 8.0,
                sampleFraction: Double = 0.01,
                splitJoinWidthFactor: Double = 1.0,
                minChildrenPerRoot: Double = 4.0): DataFrame =
-    choosePackStrategy(df, skewFactor, sampleFraction,
+    choosePackStrategy(df, sampleFraction,
       splitJoinWidthFactor, minChildrenPerRoot) match {
-      case PackStrategy.Salted => packSalted(df, toLevel, saltBuckets, extraColumns)
       case PackStrategy.SplitJoin =>
         pack(df, toLevel, extraColumns, ParentStrategy.SplitJoin)
       case PackStrategy.Plain => pack(df, toLevel, extraColumns)
@@ -1003,23 +1029,30 @@ final class Packer(
   /** M10: grouped values must be identical within each group before the
     * first-non-null dedup (reference: _validate_aggregation_uniformity,
     * hierarchical_packer.py:2700-2740). The per-group evidence rides the
-    * pack's OWN aggregate: [[PackFold]] reports the first violating
-    * (level, column) of `pairs`, leaf to root, as column [[AuditCol]] — no
-    * second scan of the raw frame. The packed output is persisted
+    * pack's OWN aggregate: [[PackFold]] and the group's min/max report the
+    * first violating (level, column) of `pairs`, leaf to root, as column
+    * [[AuditCol]] — no second scan of the raw frame. When that aggregate
+    * audits a column the coarsest level carries within the whole group
+    * only, a failed check runs the `exact` aggregate, which audits it
+    * within every finer entity too, to name the leaf-most level. The
+    * packed output is persisted
     * (MEMORY_AND_DISK) so the ONE eager check and the caller's downstream
     * action share one shuffle; the check job materializes the cache, which
     * stays hot to serve the returned frame. It stays registered with the
     * session's CacheManager until [[Packer.releaseAuditCaches]] or
     * `unpersist` frees it; the ContextCleaner never does. */
-  private def runUniformityAudit(packedWithAudit: DataFrame,
-                                 pairs: Seq[(String, String)]): DataFrame = {
+  private def runUniformityAudit(packedWithAudit: DataFrame, pairs: Seq[(String, String)],
+                                 exact: Option[() => DataFrame]): DataFrame = {
+    def firstViolation(df: DataFrame): Option[Int] = {
+      // min over zero groups is null — an empty frame has no violations
+      val row = df.agg(min(col(AuditCol))).collect()(0)
+      if (row.isNullAt(0)) None else Some(row.getInt(0))
+    }
     val persisted = packedWithAudit.persist(StorageLevel.MEMORY_AND_DISK)
-    // this collect scans every partition → fully populates the cache;
-    // min over zero groups is null — an empty frame has no violations
-    val row = persisted.agg(min(col(AuditCol))).collect()(0)
-    if (!row.isNullAt(0)) {
+    // this collect scans every partition → fully populates the cache
+    firstViolation(persisted).foreach { found =>
       persisted.unpersist(false)
-      val (levelName, c) = pairs(row.getInt(0))
+      val (levelName, c) = pairs(exact.flatMap(e => firstViolation(e())).getOrElse(found))
       throw new HierarchyValidationError(
         s"Column '$c' has non-uniform values within groups at level '$levelName'. " +
           "Values at coarser granularity should be identical within each group.",

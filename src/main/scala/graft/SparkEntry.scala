@@ -198,13 +198,14 @@ object SparkEntry {
       val packed = p.packStreaming(flatOrderLines(s, dir), "lineitem", partitions = 8)
       stripPrefixes(p.unpack(packed, "lineitem"))
     }),
-    // skew guard: two-phase salted pack must reproduce pack's contents
+    // skew guard: packSalted, the deprecated alias of pack, must reproduce
+    // pack's contents
     "q_pack_salted" -> ((s, dir) => {
       val p = orderPacker
       val packed = p.packSalted(flatOrderLines(s, dir), "lineitem", saltBuckets = 8)
       stripPrefixes(p.unpack(packed, "lineitem"))
     }),
-    // packAuto: sampled skew probe dispatching pack vs packSalted — either
+    // packAuto: sampled probe dispatching pack vs split_join — either
     // branch roundtrips identically, so the plain roundtrip oracle gates it
     "q_pack_auto" -> ((s, dir) => {
       val p = orderPacker

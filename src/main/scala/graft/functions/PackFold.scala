@@ -54,10 +54,11 @@ import org.apache.spark.unsafe.Platform
  * as a per-level pack's `groupBy`s would.
  *
  * With audit columns in the layout the fold also reports, per group, the
- * first column that is not uniform within its parent entity (at most one
- * distinct non-null value): the evidence of a pack's uniformity check. The
- * result is `struct<list, audit>`; `audit` is the index of the smallest
- * violating (level, column) pair, null when there is none.
+ * first column that is not uniform within an entity of the level that
+ * audits it (at most one distinct non-null value): the evidence of a
+ * pack's uniformity check. The result is `struct<list, audit>`; `audit` is
+ * the smallest violating (level, column) pair index, null when there is
+ * none. Uniformity within the whole group is the caller's to check.
  */
 case class PackFold(
     children: Seq[Expression],
@@ -102,10 +103,8 @@ case class PackFold(
       else new Comparator[Entity] {
         override def compare(a: Entity, b: Entity): Int = byKey.compare(a.sortKey, b.sortKey)
       },
-      l.audit.map(o => o -> ordering(Seq(o))).toArray, l.auditBase)
+      l.audit.map { case (o, pair) => (o, pair, ordering(Seq(o))) }.toArray)
   }.toArray
-  @transient private lazy val topAudit: Array[(Int, InterpretedOrdering)] =
-    layout.topAudit.map(o => o -> ordering(Seq(o))).toArray
 
   override def createAggregationBuffer(): ArrayBuffer[UnsafeRow] = new ArrayBuffer[UnsafeRow]()
 
@@ -125,7 +124,6 @@ case class PackFold(
     groupOrdering.foreach(o => java.util.Arrays.sort(rows, o: Comparator[InternalRow]))
     val fold = new Fold(rows)
     val list = fold.list(0, 0, rows.length)
-    fold.audit(topAudit, layout.topAuditBase, 0, rows.length)
     InternalRow(list, if (fold.violation == Int.MaxValue) null else fold.violation)
   }
 
@@ -150,19 +148,20 @@ case class PackFold(
       if (best < 0) null else rows(best).get(ordinal, types(ordinal))
     }
 
-    /** Records the smallest violating pair among `columns` over rows
-      * [from, until): a column with two distinct non-null values. */
-    def audit(columns: Array[(Int, InterpretedOrdering)], base: Int, from: Int, until: Int): Unit = {
+    /** Records the smallest violating pair among `columns` (ascending pair
+      * indices) over rows [from, until): a column with two distinct
+      * non-null values. */
+    def audit(columns: Array[(Int, Int, InterpretedOrdering)], from: Int, until: Int): Unit = {
       var k = 0
-      while (k < columns.length && base + k < violation) {
-        val (o, ord) = columns(k)
+      while (k < columns.length && columns(k)._2 < violation) {
+        val (o, pair, ord) = columns(k)
         var first = -1
         var i = from
         while (i < until) {
           if (!rows(i).isNullAt(o)) {
             if (first < 0) first = i
             else if (ord.compare(rows(first), rows(i)) != 0) {
-              violation = base + k
+              violation = pair
               i = until
             }
           }
@@ -219,7 +218,7 @@ case class PackFold(
           if (withRowId) k(k.length - 1) = rowId
           sortKey = new GenericInternalRow(k)
         }
-        if (!finest) audit(level.audit, level.auditBase, start, end)
+        if (!finest) audit(level.audit, start, end)
         entities += Entity(new GenericInternalRow(values(level.fields)), sortKey)
         start = end
       }
@@ -285,10 +284,10 @@ object PackFold {
     * @param orderOrdinals the finest level's order values, evaluated on
     *                      the input row
     * @param orderBy       a coarser level's order expressions, bound over
-    *                      the row `frame` builds for each entity
-    * @param audit         columns that must be uniform within each entity
-    *                      (the next finer level's carried columns), their
-    *                      pair indices starting at `auditBase`
+    *                      the row `frame` builds for each entity from the
+    *                      values they read
+    * @param audit         (ordinal, pair index) of the columns that must be
+    *                      uniform within each entity, pair indices ascending
     */
   final case class Level(
       fields: Seq[Source],
@@ -297,19 +296,12 @@ object PackFold {
       orderOrdinals: Seq[Int] = Nil,
       orderBy: Seq[Expression] = Nil,
       frame: Seq[Source] = Nil,
-      audit: Seq[Int] = Nil,
-      auditBase: Int = 0)
+      audit: Seq[(Int, Int)] = Nil)
 
   /** Levels coarsest first; the group itself is the coarsest level's
-    * parent. `rowId` is the row-id ordinal (-1 when rows carry none),
-    * `normalize` the ordinals of ancestor keys, and `topAudit` the columns
-    * that must be uniform within the whole group. */
-  final case class Layout(
-      levels: Seq[Level],
-      rowId: Int,
-      normalize: Set[Int],
-      topAudit: Seq[Int] = Nil,
-      topAuditBase: Int = 0)
+    * parent. `rowId` is the row-id ordinal (-1 when rows carry none) and
+    * `normalize` the ordinals of ancestor keys. */
+  final case class Layout(levels: Seq[Level], rowId: Int, normalize: Set[Int])
 
   private final case class Entity(value: InternalRow, sortKey: InternalRow)
 
@@ -322,8 +314,7 @@ object PackFold {
       val frame: Array[Source],
       val sortKeys: Int,
       val entityOrder: Comparator[Entity],
-      val audit: Array[(Int, InterpretedOrdering)],
-      val auditBase: Int)
+      val audit: Array[(Int, Int, InterpretedOrdering)])
 
   /** Aggregate Column: `struct<list, audit>` for the group; `inputs` are
     * the buffered columns in ordinal order. */

@@ -188,6 +188,29 @@ class PackFoldSpec extends SparkSpec {
     }
   }
 
+  /** `spec(levels, leafOrder = true, innerOrder = false)` with `orders`
+    * as the orderBy of the named intermediate levels. */
+  private def innerOrdered(levels: Int, orders: Map[String, Seq[Column]]): HierarchySpec = {
+    val base = spec(levels, leafOrder = true, innerOrder = false)
+    base.copy(levels = base.levels.map(l => orders.get(l.name).fold(l)(o => l.copy(orderBy = o))))
+  }
+
+  test("an intermediate orderBy of runtime-replaceable functions (nvl, nullif, " +
+    "array_size) equals the level-by-level pack") {
+    val sp = innerOrdered(4, Map(
+      "b" -> Seq(nvl(c("a.b.attr"), lit(5))),
+      "c" -> Seq(array_size(c("a.b.c.d")), nullif(c("a.b.c.x"), lit(0.0)))))
+    for (seed <- 11 to 12; target <- Seq("a", "b"))
+      assertFoldEqualsReference(sp, flat(seed, 4, nonUniform = false), target)
+  }
+
+  test("a nondeterministic intermediate orderBy is rejected when the pack is built") {
+    val sp = innerOrdered(3, Map("b" -> Seq(rand(1))))
+    val e = intercept[HierarchyConfigError](
+      new Packer(sp).pack(flat(13, 3, nonUniform = false), "a"))
+    assert(e.getMessage.contains("level 'b'"), e.getMessage)
+  }
+
   test("float keys group as groupBy groups them: -0.0 with 0.0 and NaN with NaN, " +
     "under the normalized key") {
     val sp = spec(4, leafOrder = false, innerOrder = false)

@@ -366,6 +366,31 @@ class PackerSpec extends SparkSpec {
     assert(acrossBuildings.details == Map("column" -> "country.city.a1"))
   }
 
+  test("a validating pack checks the coarsest level's carried columns by min/max, " +
+    "not row by row, and still names the level a violation first shows at") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import graft.functions.PackFold
+    val strict = new Packer(apartmentSpec, validateOnPack = true)
+    val broadway = spark.createDataFrame(Seq(Row("US", "NYC", "New York", "Broadway", 300L,
+      "bldg-300", "apt-5", 40.0)).asJava, apartmentDf(spark).schema)
+    // uniform within each street, two values across NYC's streets
+    val byStreet = when(ColName.topCol("country.city.street.name") === "Main St", 1L)
+      .otherwise(2L)
+    val acrossStreets = intercept[HierarchyValidationError](strict.pack(
+      apartmentDf(spark).union(broadway).withColumn("country.city.population", byStreet),
+      "street"))
+    assert(acrossStreets.level.contains("street"))
+    assert(acrossStreets.details == Map("column" -> "country.city.population"))
+    val packed = strict.pack(
+      apartmentDf(spark).withColumn("country.city.population", lit(8L)), "street")
+    val buffered = packed.queryExecution.analyzed.collect { case a: Aggregate => a }
+      .flatMap(_.aggregateExpressions.flatMap(_.collect { case f: PackFold => f.children }))
+      .flatten.flatMap(_.references.map(_.name))
+    strict.releaseAuditCaches()
+    assert(buffered.contains("country.city.street.building.apartment.id"), buffered)
+    assert(!buffered.contains("country.city.population"), buffered)
+  }
+
   test("a passing validating pack runs one audit check, however many levels it folds") {
     val df = apartmentDf(spark)
       .withColumn("country.city.population",
@@ -519,8 +544,9 @@ class PackerSpec extends SparkSpec {
     val skewed = base.union(spark.createDataFrame(hotRows.asJava, base.schema))
     // hot city owns 501 leaf rows, median city ~2 → factor ~200
     assert(p.leafSkewFactor(skewed, sampleFraction = 1.0) > 8.0)
-    assert(p.choosePackStrategy(skewed, sampleFraction = 1.0) == PackStrategy.Salted)
-    // no root attributes at all → plain
+    // skew alone does not change the pick: the pack's partial aggregation
+    // spreads the hot city's streets; no root attributes at all → plain
+    assert(p.choosePackStrategy(skewed, sampleFraction = 1.0) == PackStrategy.Plain)
     assert(p.choosePackStrategy(base, sampleFraction = 1.0) == PackStrategy.Plain)
     assertSameRows(p.packAuto(skewed, "city", sampleFraction = 1.0), p.pack(skewed, "city"))
     assertSameRows(p.packAuto(base, "city", sampleFraction = 1.0), p.pack(base, "city"))
